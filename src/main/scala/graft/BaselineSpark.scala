@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Same-harness Spark baseline for the BASELINE.md §3 anchors: each anchor
@@ -12,26 +11,16 @@ import org.apache.spark.sql.functions._
 object BaselineSpark {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // events.ts may ship as parquet TIMESTAMP(NANOS); the loader's
-      // Long branch (Tables.events) needs this read flag, set once at
-      // session construction so loaders stay pure (r8 advisory).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    val li = Tables.lineitem(spark, sfDir).cache(); li.count()
-    val ord = Tables.orders(spark, sfDir).cache(); ord.count()
-    val cust = Tables.customer(spark, sfDir).cache(); cust.count()
-    val ev = Tables.events(spark, sfDir).cache(); ev.count()
-    val docs = Tables.documents(spark, sfDir).cache(); docs.count()
-    val emb = Tables.embeddings(spark, sfDir).cache(); emb.count()
+    val spark = Harness.session(Harness.cpus)
+    Harness.cacheFixtures(spark, sfDir)
+    // the same plans as the cached fixtures, so the CacheManager
+    // substitutes the in-memory relations
+    val li = Tables.lineitem(spark, sfDir)
+    val ord = Tables.orders(spark, sfDir)
+    val cust = Tables.customer(spark, sfDir)
+    val ev = Tables.events(spark, sfDir)
+    val docs = Tables.documents(spark, sfDir)
+    val emb = Tables.embeddings(spark, sfDir)
 
     import org.apache.spark.sql.expressions.Window
     // each shape = the corresponding anchor query's semantics (same
@@ -110,11 +99,12 @@ object BaselineSpark {
     def timed(f: () => Long): Double = {
       val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
     }
+    val baseline = shapes.toMap
+    val anchorOf = graftAnchors.toMap
     def pass(): Map[String, (Double, Double)] =
-      shapes.zip(graftAnchors).map { case ((name, base), (_, gq)) =>
-        val tb = timed(base)
-        val tg = timed(() => SparkEntry.queries(gq)(spark, sfDir).count())
-        name -> (tb, tg)
+      Harness.runEach(spark, shapes.map(_._1)) { name =>
+        (timed(baseline(name)),
+          timed(() => SparkEntry.queries(anchorOf(name))(spark, sfDir).count()))
       }.toMap
     pass(); pass() // two untimed warm-up passes
     val warm = pass()
@@ -123,6 +113,6 @@ object BaselineSpark {
       f""""$k":{"baseline":$tb%.3f,"graft":$tg%.3f,"ratio":${tg / tb}%.2f}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"spark_baseline_vs_graft_warm","unit":"sec","queries":$qs,"sf":"$sfDir"}""")
-    spark.stop()
+    Harness.close(spark)
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: wall-clock per SparkEntry query at the given
   * scale factor, one shared session, one JSON line to stdout.
   *
@@ -24,78 +22,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
-    // Iterative queries cut lineage via Scale.cut. Under the bench,
-    // route those cuts to RELIABLE disk checkpoints instead of the
-    // localCheckpoint default: localCheckpoint persists its blocks in
-    // the unified-memory block manager, where they (a) crowd execution
-    // memory INSIDE the owning query's own timed region and (b) emit
-    // "cannot be recomputed after unpersisting" warnings at sweep time
-    // that read like eviction pathology in the driver's bench tail
-    // (r8 verdict: t105 17.97 s warm vs 2.50 s cold with exactly those
-    // warnings in the tail, localCheckpoint debris the prime suspect).
-    // Disk-backed cuts take block-manager occupancy out of the
-    // equation entirely — what remains on an inverted timing is the
-    // machine, and the sentinel fields below make that visible.
-    // tmpfs-preferring dir (see Scale.harnessCheckpointDir): checkpoint
-    // writeback on the fixture disk perturbs queries that never
-    // checkpoint.
-    val ckptDir = graft.operators.Scale.harnessCheckpointDir()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // events.ts may ship as parquet TIMESTAMP(NANOS); the loader's
-      // Long branch (Tables.events) needs this read flag, set once at
-      // session construction so loaders stay pure (r8 advisory).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // recursion row cap sized to the certified workloads: q213's
-      // reach is O(|orderkey domain|) and the sf1 differential corpus
-      // has 1.5M keys — past the 1M default. 32M keeps the
-      // runaway-recursion backstop loud while covering every fixture
-      // this harness certifies (set HERE, not inside the query — a
-      // registered query must not weaken the session's backstop for
-      // everything else; r15 review)
-      .config("spark.sql.cteRecursionRowLimit", "32000000")
-      // storage-partitioned joins (q235 + the clustered-lake surfaces):
-      // the two v2-bucketing confs are GLOBAL session configuration so
-      // every query runs under one planner setup — set once here, never
-      // from inside a registered query (r17 advisory: a q235-local set
-      // leaked and made later queries order-dependent). Only
-      // KeyGroupedPartitioning-reporting scans react to them.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config(graft.operators.Scale.CheckpointDirKey, ckptDir)
-      // reap superseded checkpoint files when their RDDs are GC'd, so
-      // 4 passes × ~6 cutting queries don't accumulate on disk mid-run
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Two benign per-pass warnings would otherwise dominate the bench
-    // tail and bury real ones (r16 verdict, carried nit): the V2
-    // pushdown of a constant-true residual ("Can't translate true to
-    // source filter" — correct behavior: untranslatable residuals are
-    // re-evaluated row-side) and the function registry's note that a
-    // re-registered UDF replaced itself (each pass re-registers the
-    // same definitions). Both logger names to ERROR; everything else
-    // stays at WARN so genuine warnings still surface.
-    Seq("org.apache.spark.sql.execution.datasources.v2.DataSourceV2Strategy",
-      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
-      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistryBase")
-      .foreach(n => org.apache.logging.log4j.core.config.Configurator
-        .setLevel(n, org.apache.logging.log4j.Level.ERROR))
-    // Warm the JVM once (classloading, parquet reader, codegen infra)
-    // so the first measured query isn't charged ~15s of one-time cost.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    try {
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings")
-        .foreach(n => Tables.t(spark, sfDir, n).cache().count())
-      Tables.events(spark, sfDir).cache().count()
-    } catch { case NonFatal(_) => () } // bad sfDir → queries report -1 below
-    // (NonFatal: an OOM during warm-up must surface, not read as "all failed")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
+    val ckptDir = spark.conf.get(graft.operators.Scale.CheckpointDirKey)
+    Harness.cacheFixtures(spark, sfDir) // a bad sfDir → queries report -1 below
 
     // Environment sentinel (r8 directive): every r5–r8 round that ran
     // on a contended box re-litigated "is the inversion the plan or the
@@ -186,62 +116,32 @@ object Bench {
       taskMetrics.shufWriteB.get, taskMetrics.memSpillB.get,
       taskMetrics.diskSpillB.get)
 
-    // Timing isolation: after each query, drop every persistent RDD the
-    // query created, keeping only the pinned fixture caches; each timing
-    // then starts from the same block-manager state. BLOCKING unpersist:
-    // the r7 bench showed warm>cold inversions (q9 1.46→3.06 s with
-    // unchanged plans) because an async unpersist lets block removal
-    // land inside the NEXT query's timed region; the sweep itself is
-    // untimed, so paying the wait here is free and each timing starts
-    // with removal actually finished. (With cuts routed to disk above,
-    // the sweep's job shrinks to any explicit .cache() an operator
-    // takes out — and the block manager holds fixtures + at most one
-    // query's working set at any instant.)
-    val pinned = sc.getPersistentRDDs.keySet
-    def sweep(): Unit = {
-      // Dataset-level first (Scale.pin registry): removes the
-      // CacheManager ENTRY along with the blocks. The RDD-level pass
-      // below alone would leave the entry behind, and the next pass's
-      // identical plan would substitute a stale InMemoryRelation whose
-      // storage level was zeroed — every consumer then recomputes the
-      // lineage AND rebuilds columnar batches with no reuse (the r10
-      // t54 warm>cold inversion).
-      graft.operators.Scale.releasePins()
-      // RDD-level backstop for anything persisted outside the registry.
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pinned.contains(id)) rdd.unpersist(blocking = true)
-      }
-      // Deterministically reap finished checkpoints: the reference-
-      // tracking cleaner deletes rdd-* dirs only when the JVM happens
-      // to GC the RDD reference, so files (on tmpfs: memory) accumulate
-      // until a late-run GC — the pass-4 slowdowns in the CC family
-      // tracked exactly this. Post-sweep nothing can read an old
-      // checkpoint again, so an eager delete is safe.
-      graft.operators.Scale.reapCheckpoints(spark)
-    }
-
     final case class Sample(sec: Double, load: Double, gc: Long,
         bm0: Long, bm1: Long, tm: TaskSnap, peakExec: Long)
-    // Deterministic execution order (sorted by name) for stable runs.
-    def pass(): Seq[(String, Sample)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // Deterministic execution order (sorted by name) for stable runs;
+    // Harness.runEach sweeps after each query, untimed: cleanup is bench
+    // overhead, not query cost. Pass 1 is the cold pass.
+    val queries = SparkEntry.queries
+    def pass(n: Int): Seq[(String, Sample)] =
+      Harness.runEach(spark, queries.keys.toSeq.sorted) { name =>
+        val fn = queries(name)
         flushBus() // drain task-end events from the previous query
         taskMetrics.peakExecB.set(0L)
         val snap0 = taskSnap()
         val (la, g0, b0) = (loadAvg(), gcMs(), bmUsedMb())
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case NonFatal(_) => false }
+        val failure = try { fn(spark, sfDir).count(); None }
+          catch { case NonFatal(e) => Some(e) }
         val sec = (System.nanoTime() - t0) / 1e9
         flushBus() // attribute THIS query's task-end events to it
-        val s = Sample(if (ok) sec else -1.0, la, gcMs() - g0, b0,
+        failure.foreach(e => System.err.println(
+          s"Bench $name pass $n failed: ${e.getClass.getName}: ${e.getMessage}"))
+        Sample(if (failure.isEmpty) sec else -1.0, la, gcMs() - g0, b0,
           bmUsedMb(), taskSnap() - snap0, taskMetrics.peakExecB.get)
-        sweep() // untimed: cleanup is bench overhead, not query cost
-        name -> s
       }
     val loadStart = loadAvg()
-    val cold = pass()
-    val warms = Seq(pass(), pass(), pass())
+    val cold = pass(1)
+    val warms = Seq(pass(2), pass(3), pass(4))
     val loadEnd = loadAvg()
     // a query that failed in any pass is -1 per-query AND excluded from
     // both totals, so "value" always equals the sum of the positive
@@ -311,15 +211,6 @@ object Bench {
       .mkString("{", ",", "}")
     val nFail = merged.count(_._3 < 0)
     println(s"""{"metric":"total","value":${fmt(total(_._3))},"unit":"sec","queries":$qs,"sf":"$sfDir","cold_total":${fmt(total(_._2))},"passes":4,"warm_stat":"median_of_3","n_queries":${merged.size},"n_failed":$nFail,"load_start":${fmt1(loadStart)},"load_end":${fmt1(loadEnd)},"detail":"BENCH_DETAIL.json"}""")
-    spark.stop()
-    // best-effort: the checkpoint temp dir is a few hundred MB of
-    // superseded cut files; remove it so repeated runs don't pile up
-    try {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val root = Paths.get(ckptDir)
-      Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    } catch { case NonFatal(_) => () }
+    Harness.close(spark)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic 10× corpus generator for the sf1 differential (r14
@@ -26,14 +26,7 @@ object GenScale {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 
     // single-file parquet, like the driver fixtures — DuckDB's
@@ -46,9 +39,7 @@ object GenScale {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(out, s"$name.parquet"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator()
-        .asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+      Harness.deleteTree(java.nio.file.Paths.get(tmp))
       println(s"[gen] $name.parquet written (${df.columns.mkString(",")})")
     }
     def h(c: org.apache.spark.sql.Column, salt: Long) =
@@ -172,6 +163,6 @@ object GenScale {
       println(s"[gen] $t.parquet copied from $src")
     }
     println(s"[gen] done: $out at ${factor}x sf0.1")
-    spark.stop()
+    Harness.close(spark)
   }
 }

@@ -3,42 +3,26 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (not part of the driver contract): write
   * `.explain("formatted")` for the named queries to
   * `<outDir>/<name>_<suffix>.txt` — the plan evidence files the
   * optimization rounds commit under plans/rNN/.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <query...>
-  * Session conf mirrors Bench (same SPJ/bucketing confs, shuffle
-  * partitions = SPARK_GRAFT_CPUS) so the dumped plan is the plan the
-  * bench actually runs.
+  * The session is Bench's (Harness.session), so the dumped plan is the
+  * plan the bench actually runs.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, names @ _*) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val ckptDir = graft.operators.Scale.harnessCheckpointDir()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.cteRecursionRowLimit", "32000000")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config(graft.operators.Scale.CheckpointDirKey, ckptDir)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
+    val spark = Harness.session(Harness.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    val todo =
-      if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
-    for (n <- todo; fn = SparkEntry.queries(n)) {
+    val queries = SparkEntry.queries
+    val todo = if (names.nonEmpty) names else queries.keys.toSeq.sorted
+    Harness.runEach(spark, todo) { n =>
+      val fn = queries(n)
       val buf = new ByteArrayOutputStream()
       try {
         val df = fn(spark, sfDir)
@@ -50,15 +34,7 @@ object PlanDump {
           buf.write(s"EXPLAIN FAILED: ${e.getMessage}\n".getBytes("UTF-8"))
       }
       Files.write(Paths.get(outDir, s"${n}_$suffix.txt"), buf.toByteArray)
-      graft.operators.Scale.releasePins()
-      graft.operators.Scale.reapCheckpoints(spark)
     }
-    spark.stop()
-    val root = Paths.get(ckptDir)
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
+    Harness.close(spark)
   }
 }

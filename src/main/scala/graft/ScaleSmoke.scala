@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale-smoke harness: runs the load-bearing operator shapes on
+/** Scale-smoke harness: times graft's load-bearing operator entry
+  * points, lake DML/maintenance and a few registered queries on
   * SYNTHETIC data 1-2 orders of magnitude past the sf0.1 fixtures
   * (default 20M events / 2M docs vs 600k/2k), so the "would the plan
   * hold at scale" question has measured evidence rather than argument.
@@ -15,23 +16,11 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nEvents = sys.env.getOrElse("SPARK_GRAFT_SMOKE_ROWS", "20000000").toLong
     val nDocs = nEvents / 10
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // events.ts may ship as parquet TIMESTAMP(NANOS); the loader's
-      // Long branch (Tables.events) needs this read flag, set once at
-      // session construction so loaders stay pure (r8 advisory).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NOTE: driver heap cannot be set here (JVM already running under
-      // sbt); size it via the sbt/spark-submit JVM options if needed
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the heap cannot be set from here (the JVM is already running);
+    // size it via the sbt/spark-submit JVM options if needed
+    val spark = Harness.session(Harness.cpus)
 
     def time(label: String, rows: Long)(f: => Long): Unit = {
       val t0 = System.nanoTime()
@@ -42,16 +31,6 @@ object ScaleSmoke {
     }
 
     val base = java.nio.file.Files.createTempDirectory("graft_smoke").toString
-
-    // synthetic tables are hundreds of MB per run: deleted at the end so
-    // repeated runs don't build disk pressure (which skews measurements)
-    def rmTree(p: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
 
     // ---- synthetic events: skewed event_type (80% 'click'), 100k users
     spark.range(nEvents).select(
@@ -96,10 +75,6 @@ object ScaleSmoke {
       .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
     spark.read.parquet(s"$base/embeddings.parquet").count()
 
-    time("agg groupBy (q1 shape)", nEvents) {
-      ev.groupBy(col("event_type"))
-        .agg(count(lit(1)), avg(col("value")), max(col("value"))).count()
-    }
     time("salted skew agg (q75 shape)", nEvents) {
       operators.Scale.saltedCountSum(ev, col("event_type"), col("value")).count()
     }
@@ -112,13 +87,6 @@ object ScaleSmoke {
       operators.Aggregates.sortedQuantiles(ev, col("value"), v => floor(v / 10),
         Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75)).count()
     }
-    time("per-user window cumsum (q23)", nEvents) {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      ev.withColumn("cum", sum(col("value")).over(w))
-        .select(max(col("cum"))).count()
-    }
     time("native merge as-of (q95)", nEvents) {
       val purchases = ev.filter(col("event_type") === "t1")
         .select(col("event_id"), col("user_id"), col("ts"))
@@ -126,11 +94,6 @@ object ScaleSmoke {
         .select(col("user_id"), col("ts"))
       plans.AsOf.lastTsAtOrBefore(
         purchases, clicks, "user_id", "ts", "ts", "last_click_ts").count()
-    }
-    time("exact dedup keep-first (t52)", nDocs) {
-      docs.join(
-        docs.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id")).select("doc_id"),
-        Seq("doc_id"), "left_semi").count()
     }
     time("minhash+LSH bands (t58 shape)", nDocs) {
       // signatures + band buckets + colliding-pair count (score step
@@ -199,32 +162,6 @@ object ScaleSmoke {
       SparkEntry.queries("t75_boilerplate_ngrams")(spark, base).count()
     }
     operators.Scale.releasePins() // t75 pins its shingle frame; untimed cleanup
-    time("doc chunking (t76 shape)", nDocs) {
-      val toks = docs.select(col("doc_id"), split(col("text"), " ").as("t"))
-        .withColumn("n", size(col("t")).cast("long"))
-        .withColumn("n_chunks",
-          lit(1L) + ceil(greatest(col("n") - 32, lit(0L)) / lit(24.0)).cast("long"))
-      toks.select(col("doc_id"),
-        explode(sequence(lit(0L), col("n_chunks") - 1)).as("cid")).count()
-    }
-    time("typed ewm fold (q113 shape)", nEvents) {
-      // 20M events / 100k users ≈ 200-row groups: the typed mapGroups
-      // recurrence at two orders past the fixture
-      import org.apache.spark.sql.{Encoder, Encoders}
-      implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-      implicit val enc: Encoder[(Long, Long, Double)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
-      implicit val outEnc: Encoder[(Long, Double)] =
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble)
-      ev.select(col("user_id"), col("event_id"), col("value"))
-        .as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .mapGroups { (uid, it) =>
-          val xs = it.toVector.sortBy(_._2).map(_._3)
-          uid -> xs.reduceLeft((s, x) => 0.8 * s + 0.2 * x)
-        }
-        .toDF("user_id", "ewm").count()
-    }
     val nVec = nDocs / 10
     time("kmeans lloyd (v68 shape)", nVec) {
       // synthetic 16-d embeddings from id arithmetic; 4 centroids, 5
@@ -257,25 +194,6 @@ object ScaleSmoke {
         .groupBy(col("label"), col("a_id")).agg(max(col("sim")).as("mx"))
         .filter(col("mx") >= 0.9).count()
     }
-    time("data mixing cumsum (t79)", nDocs) {
-      // seeded-order token budgets: per-source window cumsum; 1000
-      // synthetic sources keep each window partition ~nDocs/1000 rows
-      import org.apache.spark.sql.expressions.Window
-      val d = docs.select(col("doc_id"),
-          pmod(xxhash64(col("doc_id")), lit(1000L)).as("source"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens"))
-        .withColumn("budget",
-          when(col("source") % 2 === 0, 20000L).otherwise(10000L))
-        .withColumn("h", md5(concat(lit("mix42:"), col("doc_id").cast("string"))))
-      val w = Window.partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      d.withColumn("cum_prev", sum(col("n_tokens")).over(w) - col("n_tokens"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("cum_prev") < col("budget"), col("n_tokens"))
-            .otherwise(0L)).as("tokens_selected"))
-        .count()
-    }
     time("bounded top-k agg (q121)", nEvents) {
       // map-side bounded-heap partial agg: shuffle carries ≤3 rows per
       // (user × task) no matter the group size
@@ -300,18 +218,6 @@ object ScaleSmoke {
       transform(sequence(lit(0), lit(63)), i =>
         (pmod(xxhash64(col("id") * 64 + i), lit(1000L)).cast("double")
           / 500.0 - 1.0).cast("float")).as("embedding"))
-    time("int8 quantization (v74 shape)", nVec64) {
-      val e = transform(col("embedding"), x => x.cast("double"))
-      emb64.select(col("vec_id"), e.as("e"))
-        .withColumn("scale", array_max(transform(col("e"), x => abs(x))) / 127.0)
-        .select(col("vec_id"), aggregate(
-          transform(col("e"), x =>
-            when(col("scale") === 0, lit(0L)).otherwise(
-              greatest(lit(-127L), least(lit(127L),
-                floor(x / col("scale") + 0.5))))),
-          lit(0L), (acc, x) => acc + x).as("qsum"))
-        .count()
-    }
     time("PQ encode+ADC query (v76)", nVec64) {
       // codebook training (2 rounds) + codes-only ADC scan for 10 probes
       operators.Vectors.pqAdcTopK(emb64, nProbes = 10, k = 10, rounds = 2)
@@ -354,25 +260,6 @@ object ScaleSmoke {
       }
       codes.unpersist(); cent.unpersist()
     }
-    time("interval band join (q136)", nEvents) {
-      // |p.ts − c.ts| ≤ 6h pairs between the 5% 't1' slice and the 80%
-      // 'click' slice, same user: floor(epoch/W) bands, 3-band explode
-      // on the small side, (user, band) equi-join — never a per-user
-      // cross product even with 16M clicks
-      val w = 6 * 3600
-      def banded(tpe: String, idOut: String, tsOut: String) =
-        ev.filter(col("event_type") === tpe)
-          .select(col("user_id"), col("event_id").as(idOut), col("ts").as(tsOut),
-            floor(col("ts").cast("double") / w).cast("long").as("b0"))
-      val p = banded("t1", "a_id", "a_ts")
-        .select(col("user_id"), col("a_id"), col("a_ts"),
-          explode(array(col("b0") - 1, col("b0"), col("b0") + 1)).as("band"))
-      val c = banded("click", "b_id", "b_ts").withColumnRenamed("b0", "band")
-      p.join(c, Seq("user_id", "band"))
-        .filter(col("a_ts") <= col("b_ts") + expr("INTERVAL 6 HOURS") &&
-          col("b_ts") <= col("a_ts") + expr("INTERVAL 6 HOURS"))
-        .groupBy(col("user_id")).agg(count(lit(1))).count()
-    }
     time("categorize dictionary (q135)", nDocs) {
       // multi-column dictionary build over the corpus + broadcast-join
       // application to a disjoint slice: the dict is |vocab|-bounded
@@ -383,67 +270,6 @@ object ScaleSmoke {
       operators.Reshape.applyDictionary(
         cats.filter(col("doc_id") % 7 === 0), dict, Seq("src", "lang"))
         .groupBy(col("lang_code")).agg(count(lit(1))).count()
-    }
-    time("BM25 scoring (t84 shape)", nDocs) {
-      // postings for 3 query terms: the term filter lands BEFORE the
-      // groupBy, so the shuffle carries only hits; df/N/avgdl broadcast
-      val toks = docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val stats = dl.agg(avg(col("dl") * lit(1.0)).as("avgdl"), count(lit(1)).as("n"))
-      val tf = toks.filter(col("tok").isin("w0123", "w1123", "w2123"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      val dfq = tf.groupBy(col("tok")).agg(countDistinct(col("doc_id")).as("df"))
-      val idf = log(lit(1) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-      val term = idf * (col("tf") * lit(2.2)) /
-        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-      tf.join(broadcast(dfq), Seq("tok")).join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(stats))
-        .groupBy(col("doc_id")).agg(sum(term).as("score"))
-        .orderBy(desc("score"), col("doc_id")).limit(10).count()
-    }
-    time("bigram LM scoring (t85 shape)", nDocs) {
-      // model = bigram/unigram count TABLES from a 25% train slice,
-      // shuffle-joined onto the full-corpus bigram explode (~11 bigrams
-      // per 12-token doc) — the t68 vocab-broadcast scale fix
-      val d = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
-        .filter(size(col("ts")) >= 2)
-      val bg = d.select(col("doc_id"),
-          explode(transform(sequence(lit(0), size(col("ts")) - 2), i =>
-            struct(element_at(col("ts"), i + 1).as("w1"),
-              element_at(col("ts"), i + 2).as("w2")))).as("b"))
-        .select(col("doc_id"), col("b.w1"), col("b.w2"))
-      val train = bg.filter(col("doc_id") % 4 === 0)
-      val tbg = train.groupBy(col("w1").as("tw1"), col("w2").as("tw2"))
-        .agg(count(lit(1)).as("cb"))
-      val tuni = d.filter(col("doc_id") % 4 === 0)
-        .select(explode(col("ts")).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("cu"))
-      val tot = tuni.agg(sum(col("cu")).as("t"), count(lit(1)).as("v"))
-      val lp = when(col("cb").isNotNull, log((col("cb") * lit(1.0)) / col("cu1")))
-        .otherwise(log((lit(0.4) * (coalesce(col("cu2"), lit(0L)) + lit(1.0)))
-          / (col("t") + col("v"))))
-      bg.join(tbg, col("w1") === col("tw1") && col("w2") === col("tw2"), "left")
-        .join(tuni.select(col("tok").as("tk1"), col("cu").as("cu1")),
-          col("w1") === col("tk1"), "left")
-        .join(tuni.select(col("tok").as("tk2"), col("cu").as("cu2")),
-          col("w2") === col("tk2"), "left")
-        .crossJoin(broadcast(tot))
-        .groupBy(col("doc_id")).agg(avg(lp).as("avg_logprob"))
-        .count()
-    }
-    time("funnel 3-stage (q143 shape)", nEvents) {
-      // t0 → t1 → t2 ordered funnel: three shrinking user-keyed hash
-      // aggregates; each later stage joins only the prior stage's
-      // survivor set (AQE broadcasts it once it collapses)
-      val s1 = ev.filter(col("event_type") === "t0")
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t1"))
-      val s2 = ev.filter(col("event_type") === "t1")
-        .join(s1, "user_id").where(col("ts") > col("t1"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t2"))
-      val s3 = ev.filter(col("event_type") === "t2")
-        .join(s2, "user_id").where(col("ts") > col("t2"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("t3"))
-      s3.count()
     }
     time("rfm quintile grid (q163 shape)", nEvents) {
       // the ROUND-7 production shape: cut base + one multi-metric
@@ -544,143 +370,6 @@ object ScaleSmoke {
         .filter(col("_toff") + col("_cwl") >= col("tot") / 2)
         .groupBy(col("k")).agg(min(col("x"))).count()
     }
-    time("interval coverage (q189)", nEvents) {
-      // gaps-and-islands union of 100k users' overlapping intervals:
-      // two user-keyed windows + two aggregates, O(n log n) sort-bounded
-      import org.apache.spark.sql.expressions.Window
-      val iv = ev.select(col("user_id"), col("ts").cast("long").as("s"),
-        (col("ts").cast("long") + 600L).as("e"))
-      val wPrev = Window.partitionBy(col("user_id")).orderBy(col("s"), col("e"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wRun = Window.partitionBy(col("user_id")).orderBy(col("s"), col("e"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      iv.withColumn("pm", max(col("e")).over(wPrev))
-        .withColumn("isl",
-          sum(when(col("pm").isNull || col("s") > col("pm"), 1L)
-            .otherwise(0L)).over(wRun))
-        .groupBy(col("user_id"), col("isl"))
-        .agg((max(col("e")) - min(col("s"))).as("len"))
-        .groupBy(col("user_id"))
-        .agg(sum(col("len"))).count()
-    }
-    time("skipgram cooccur (t115 shape)", nDocs) {
-      // row-local skip-k pairing off the token array (the r14 re-plan:
-      // pair construction is position arithmetic, not a window) — flat
-      // 2× fan-out over ~24M token positions, no shuffle before the
-      // map-side-combined pair count
-      val toks = docs.select(split(col("text"), " ").as("t"))
-      def skipPairs(k: Int) =
-        toks.select(explode(when(size(col("t")) > k,
-          transform(sequence(lit(0), size(col("t")) - 1 - k),
-            i => struct(
-              least(col("t")(i), col("t")(i + k)).as("wa"),
-              greatest(col("t")(i), col("t")(i + k)).as("wb"))))
-          .otherwise(array().cast("array<struct<wa:string,wb:string>>")))
-          .as("p"))
-          .select(col("p.wa").as("wa"), col("p.wb").as("wb"))
-      skipPairs(1).unionAll(skipPairs(2)).groupBy(col("wa"), col("wb"))
-        .agg(count(lit(1))).count()
-    }
-    time("known-item eval (t117 shape)", nDocs) {
-      // BM25 self-retrieval eval at 2M docs: the corpus-stat passes
-      // (tokenize-explode → doc-length groupBy) dominate; candidates are
-      // postings-bounded to the 20 probe queries' terms, and the known
-      // item's rank is count-of-better via a 20-row broadcast — no
-      // per-query window sort (the t117 discipline)
-      val st = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val toks = docs.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("tok")).persist(st)
-      val dl = toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-      val stats = dl.agg(avg(col("dl") * lit(1.0)).as("avgdl"),
-        count(lit(1)).as("n"))
-      val qt = docs.filter(col("doc_id") < 20)
-        .select(col("doc_id").as("qid"),
-          explode(slice(split(col("text"), " "), 1, 8)).as("tok"))
-        .distinct()
-      val tf = toks.join(broadcast(qt.select(col("tok")).distinct()), Seq("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-      val dfT = tf.groupBy(col("tok")).agg(countDistinct(col("doc_id")).as("df"))
-      val idf = log(lit(1) +
-        (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-      val term = idf * (col("tf") * lit(2.2)) /
-        (col("tf") + lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl")))
-      val scored = tf.join(broadcast(dfT), Seq("tok"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(stats))
-        .join(broadcast(qt), Seq("tok"))
-        .groupBy(col("qid"), col("doc_id"))
-        .agg(round(sum(term), 6).as("score"))
-        .persist(st)
-      val known = scored.filter(col("doc_id") === col("qid"))
-        .select(col("qid"), col("score").as("ks"))
-      val n = scored.join(broadcast(known), Seq("qid"))
-        .groupBy(col("qid"))
-        .agg((lit(1L) + sum(when(col("score") > col("ks") ||
-            (col("score") === col("ks") && col("doc_id") < col("qid")), 1L)
-          .otherwise(0L))).as("rank_known"))
-        .count()
-      scored.unpersist(blocking = true)
-      toks.unpersist(blocking = true)
-      n
-    }
-    time("temporal split (q195 shape)", nEvents) {
-      // chronological 80/20 carve at 20M events: the boundary comes from
-      // approx_percentile (one mergeable-sketch pass — the documented
-      // 100 TB swap for q195's exact percentile), then the split is a
-      // row-local comparison against the broadcast boundary
-      val e = ev.select(unix_micros(col("ts")).as("us"), col("user_id"))
-      val cut = e.agg((floor(expr("approx_percentile(us, 0.8, 10000)") / 1000)
-        .cast("long") * lit(1000L)).as("cut_us"))
-      e.crossJoin(broadcast(cut))
-        .withColumn("split",
-          when(col("us") <= col("cut_us"), "train").otherwise("test"))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          min(col("us")).as("min_us"), max(col("us")).as("max_us"))
-        .count()
-    }
-    time("CDC changelog apply (q202 shape)", nEvents) {
-      // last-change-wins replay over 20M changes / 100k keys: ONE
-      // partial-aggregating max_by — a partition ships one candidate per
-      // key, never a per-key window sort of the changelog
-      val ch = ev.select(col("user_id"), col("ts"), col("event_id"),
-        when(col("event_type") === "t0", "I")
-          .when(col("event_type") === "t3", "D").otherwise("U").as("op"),
-        col("value"))
-      ch.groupBy(col("user_id"))
-        .agg(max_by(struct(col("op"), col("value")),
-          struct(col("ts"), col("event_id"))).as("m"),
-          count(lit(1)).as("n_changes"))
-        .filter(col("m.op") =!= "D").count()
-    }
-    time("PSI drift bins (q200 shape)", nEvents) {
-      // decile edges from the expected half (approx sketch pass), then
-      // two row-local binning scans + 10-group aggregates
-      val ex = ev.filter(col("event_id") % 2 === 0).select(col("value"))
-      val act = ev.filter(col("event_id") % 2 === 1).select(col("value"))
-      val edges = ex.agg(expr(
-        "approx_percentile(value, array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D), 10000)")
-        .as("ed"))
-      def binned(df: org.apache.spark.sql.DataFrame) =
-        df.crossJoin(broadcast(edges))
-          .select((lit(1) + (1 to 9).map(i =>
-            (col("value") > element_at(col("ed"), i)).cast("int"))
-            .reduce(_ + _)).cast("long").as("bin"))
-      binned(ex).groupBy(col("bin")).agg(count(lit(1))).count() +
-        binned(act).groupBy(col("bin")).agg(count(lit(1))).count()
-    }
-    time("rolling distinct actives (q147 shape)", nEvents) {
-      // WAU shape on 10-min buckets (the synthetic span is hours, not
-      // days): each distinct (user, bucket) explodes to the 7 windows it
-      // serves — bounded 7× fan-out + dedup, never a range self-join
-      val ub = ev.select(col("user_id"),
-        floor(col("ts").cast("double") / 600).cast("long").as("b")).distinct()
-      ub.select(col("user_id"),
-          explode(sequence(col("b"), col("b") + 6)).as("b2"))
-        .dropDuplicates("user_id", "b2")
-        .groupBy(col("b2")).agg(count(lit(1)).as("wau")).count()
-    }
     // ---- round-12 serving-lifecycle smokes (VERDICT r11 task 6) ----
     time("RRF hybrid fusion (t118)", nDocs) {
       // the REGISTERED t118 function, unmodified, over this dir's 2M
@@ -735,12 +424,10 @@ object ScaleSmoke {
       spark.read.parquet(s"$base/keys")
         .createOrReplaceTempView("graft_smoke_keys")
       // the reach set is the full 2M-key domain, past the engine's
-      // SECOND loud recursion cap (cteRecursionRowLimit, default 1M
-      // accumulated rows) — raised explicitly for the smoke, restored
-      // after; at production scale this cap is the row-volume twin of
-      // the level limit and wants the same deliberate sizing
-      val prevRowCap = spark.conf.getOption("spark.sql.cteRecursionRowLimit")
-      spark.conf.set("spark.sql.cteRecursionRowLimit", "5000000")
+      // SECOND loud recursion cap's 1M default (cteRecursionRowLimit);
+      // the harness session sizes it for the certified workloads — at
+      // production scale this cap is the row-volume twin of the level
+      // limit and wants the same deliberate sizing
       time("recursive CTE reach (q213 shape, ~21 levels)", 2000000L) {
         spark.sql(
           """WITH RECURSIVE reach(k) AS (
@@ -751,10 +438,6 @@ object ScaleSmoke {
             |    UNION ALL SELECT k * 2 + 1 AS k FROM reach) c
             |  JOIN graft_smoke_keys t ON t.k = c.k)
             |SELECT count(*) AS n FROM reach""".stripMargin).head().getLong(0)
-      }
-      prevRowCap match {
-        case Some(v) => spark.conf.set("spark.sql.cteRecursionRowLimit", v)
-        case None => spark.conf.unset("spark.sql.cteRecursionRowLimit")
       }
       // the loud cap: a 100-level chain against a 40-level limit must
       // THROW before runaway, not grind through 100 sequential jobs
@@ -838,7 +521,7 @@ object ScaleSmoke {
         operators.Vectors.pqIndexCompact(spark, "smoke")
       }
       spark.conf.unset(operators.Vectors.PqIndexDirKey)
-      rmTree(java.nio.file.Paths.get(pqDir))
+      Harness.deleteTree(java.nio.file.Paths.get(pqDir))
     }
     // ---- round-16 lake table smokes ----
     locally {
@@ -993,9 +676,6 @@ object ScaleSmoke {
       spark.sql(s"""CREATE TABLE gsmoke.ns.lake17dim (
         |  id BIGINT, bucket INT, kscore INT, score DOUBLE, doc_id STRING
         |) USING lake LOCATION '$dimDir'""".stripMargin)
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
       time("lake SPJ join 20M⋈2M", nEvents) {
         val j = spark.table("gsmoke.ns.lake17")
           .join(spark.table("gsmoke.ns.lake17dim"), Seq("id"))
@@ -1014,7 +694,7 @@ object ScaleSmoke {
     // ---- round-18 lake smokes: born-clustered ingest, small-file
     // compaction, RESTORE ----
     locally {
-      import graft.sources.{LakeFormat, LakeSource}
+      import graft.sources.LakeFormat
       val factDir = s"$base/lake18_fact"
       val dimDir = s"$base/lake18_dim"
       spark.conf.set("spark.sql.catalog.gsmoke", "graft.sources.GraftCatalog")
@@ -1478,7 +1158,9 @@ object ScaleSmoke {
         "COPY INTO row totals drifted")
       spark.sql("DROP TABLE IF EXISTS gsmoke.ns.lake19wap")
     }
-    spark.stop()
-    rmTree(java.nio.file.Paths.get(base))
+    Harness.close(spark)
+    // synthetic tables are hundreds of MB per run: deleted at the end so
+    // repeated runs don't build disk pressure (which skews measurements)
+    Harness.deleteTree(java.nio.file.Paths.get(base))
   }
 }

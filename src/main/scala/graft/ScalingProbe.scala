@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling probe (r19 verdict item 6): make the parallelism story
   * FALSIFIABLE. The PERF scaling block compares the 8 headline anchors
   * at 32 vs 8 cores on sf0.1, where every anchor is sub-second and
@@ -15,10 +13,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage:
   *   sbt "runMain graft.GenScale /root/testdata/sf0.1 /tmp/graft_sf1 10"
-  *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 sbt "runMain graft.ScalingProbe"
-  * Optional: SPARK_GRAFT_CPUS (hi, default 32), SPARK_GRAFT_CPUS_LO
-  * (default 8). Dev/measurement tool — not part of the driver contract;
-  * Bench.scala is untouched.
+  *   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR=/tmp/graft_sf1 sbt "runMain graft.ScalingProbe"
+  * The hi core count is SPARK_GRAFT_CPUS (Harness.cpus); the lo one is
+  * SPARK_GRAFT_CPUS_LO, default a quarter of hi (8 at 32).
+  * Dev/measurement tool.
   */
 object ScalingProbe {
   private val anchors = Seq("q1_pricing_summary", "q3_join3_revenue_top10",
@@ -27,8 +25,9 @@ object ScalingProbe {
 
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val hi = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").trim.toInt
-    val lo = sys.env.getOrElse("SPARK_GRAFT_CPUS_LO", "8").trim.toInt
+    val hi = Harness.cpus
+    val lo = sys.env.get("SPARK_GRAFT_CPUS_LO").map(_.trim.toInt)
+      .getOrElse(math.max(1, hi / 4))
 
     // GenScale tables are SINGLE parquet files; a single file's scan
     // parallelism is bounded by its row-group count (a 78 MB one-group
@@ -41,48 +40,34 @@ object ScalingProbe {
     val sfDir = srcDir.stripSuffix("/") + "_multifile"
     val marker = java.nio.file.Paths.get(sfDir, "_PROBE_READY")
     if (!java.nio.file.Files.exists(marker)) {
-      val prep = SparkSession.builder()
-        .master(s"local[$hi]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      prep.sparkContext.setLogLevel("WARN")
+      val prep = Harness.session(hi)
       for (t <- Seq("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "documents", "embeddings", "events")) {
         prep.read.parquet(s"$srcDir/$t.parquet").repartition(64)
           .write.mode("overwrite").parquet(s"$sfDir/$t.parquet")
       }
-      prep.stop()
+      Harness.close(prep)
       java.nio.file.Files.createFile(marker)
     }
 
     def run(cpus: Int): Map[String, Double] = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      spark.range(1000).selectExpr("sum(id)").collect()
-      val out = anchors.map { n =>
+      val spark = Harness.session(cpus)
+      val out = Harness.runEach(spark, anchors) { n =>
         val fn = SparkEntry.queries(n)
-        def once(): Double = {
+        def once(pass: Int): Double = {
           val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-            catch { case NonFatal(_) => false }
-          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          catch { case NonFatal(e) =>
+            System.err.println(s"ScalingProbe $n pass $pass failed: " +
+              s"${e.getClass.getName}: ${e.getMessage}")
+            -1.0
+          }
         }
-        once() // cold, discarded
-        val ws = Seq(once(), once(), once())
-        val med = if (ws.exists(_ < 0)) -1.0 else ws.sorted.apply(1)
-        graft.operators.Scale.releasePins()
-        n -> med
+        once(1) // cold, discarded
+        val ws = Seq(once(2), once(3), once(4))
+        if (ws.exists(_ < 0)) -1.0 else ws.sorted.apply(1)
       }.toMap
-      spark.stop()
+      Harness.close(spark)
       out
     }
 

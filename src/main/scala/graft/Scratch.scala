@@ -1,32 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev scratchpad for interactive plan/perf inspection. Not part of the
   * driver contract. */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // events.ts may ship as parquet TIMESTAMP(NANOS); the loader's
-      // Long branch (Tables.events) needs this read flag, set once at
-      // session construction so loaders stay pure (r8 advisory).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    // SPARK_GRAFT_RELIABLE=1 → route Scale.cut to reliable disk
-    // checkpoints (the Bench/Verify mode) for A/B plan-cost isolation
-    val ckptDir = if (sys.env.get("SPARK_GRAFT_RELIABLE").contains("1")) {
-      val dir = graft.operators.Scale.harnessCheckpointDir()
-      spark.conf.set(graft.operators.Scale.CheckpointDirKey, dir)
-      Some(dir)
-    } else None
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[time] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
@@ -36,14 +15,14 @@ object Scratch {
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
       })
-    val names = if (args.isEmpty) SparkEntry.queries.keys.toSeq.sorted else args.toSeq
-    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
+    val queries = SparkEntry.queries
+    val names = if (args.isEmpty) queries.keys.toSeq.sorted else args.toSeq
     // SPARK_GRAFT_PHASES=1 → split cold into plan (analyze+optimize+
     // physical planning) vs execute, to localize one-time per-query cost
     val phases = sys.env.get("SPARK_GRAFT_PHASES").contains("1")
-    for (n <- names; fn = SparkEntry.queries(n)) {
-      if (explain) fn(spark, sfDir).explain("formatted")
-      else if (phases) {
+    Harness.runEach(spark, names) { n =>
+      val fn = queries(n)
+      if (phases) {
         val df = fn(spark, sfDir)
         time(s"$n plan")(df.queryExecution.executedPlan)
         time(s"$n exec")(df.count())
@@ -52,20 +31,7 @@ object Scratch {
         time(s"$n cold")(fn(spark, sfDir).count())
         time(s"$n warm")(fn(spark, sfDir).count())
       }
-      // same hygiene as Bench/Verify: release pinned frames and reap
-      // finished checkpoint payloads (on tmpfs these are memory — a
-      // full sweep would otherwise hold every query's payloads at once)
-      graft.operators.Scale.releasePins()
-      graft.operators.Scale.reapCheckpoints(spark)
     }
-    spark.stop()
-    // the checkpoint dir outlives the JVM (tmpfs = RAM) — remove it
-    ckptDir.foreach { d =>
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    Harness.close(spark)
   }
 }

@@ -49,7 +49,7 @@ object Tables {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
     // The NANOS branch needs spark.sql.legacy.parquet.nanosAsLong=true,
-    // set at session construction (every graft session builder does) —
+    // set at session construction (graft.Harness.session does) —
     // a loader must not mutate session conf per call (r8 advisory).
     val raw = t(s, d, "events")
     raw.schema("ts").dataType match {

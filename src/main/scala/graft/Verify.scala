@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,59 +6,16 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     val only = rest.toSet // optional extra args: run only these queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Route iterative-loop lineage cuts (Scale.cut) to reliable disk
-    // checkpoints, as Bench does: localCheckpoint blocks in the unified
-    // block manager emit "cannot be recomputed after unpersisting"
-    // warnings at sweep/stop time that read like eviction pathology in
-    // the driver's verify tail (r8/r9 verdicts), and disk-backed cuts
-    // keep executor memory for the queries themselves.
-    val ckptDir = graft.operators.Scale.harnessCheckpointDir()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config(graft.operators.Scale.CheckpointDirKey, ckptDir)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // events.ts may ship as parquet TIMESTAMP(NANOS); the loader's
-      // Long branch (Tables.events) needs this read flag, set once at
-      // session construction so loaders stay pure (r8 advisory).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // recursion row cap sized to the certified workloads: q213's
-      // reach is O(|orderkey domain|) and the sf1 differential corpus
-      // has 1.5M keys — past the 1M default. 32M keeps the
-      // runaway-recursion backstop loud while covering every fixture
-      // this harness certifies (set HERE, not inside the query — a
-      // registered query must not weaken the session's backstop for
-      // everything else; r15 review)
-      .config("spark.sql.cteRecursionRowLimit", "32000000")
-      // storage-partitioned joins (q235 + the clustered-lake surfaces):
-      // the two v2-bucketing confs are GLOBAL session configuration so
-      // every query runs under one planner setup — set once here, never
-      // from inside a registered query (r17 advisory: a q235-local set
-      // leaked and made later queries order-dependent). Only
-      // KeyGroupedPartitioning-reporting scans react to them.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    val names = queries.keys.toSeq.filter(n => only.isEmpty || only(n))
+    Harness.runEach(spark, names) { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Release operator-pinned frames between queries so hundreds of
-      // dumps don't accumulate cached blocks + CacheManager entries,
-      // and eagerly reap finished checkpoint payloads (on a tmpfs
-      // checkpoint dir these are memory).
-      graft.operators.Scale.releasePins()
-      graft.operators.Scale.reapCheckpoints(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -76,13 +32,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    // the checkpoint dir outlives the JVM (tmpfs = RAM) — remove it
-    val root = Paths.get(ckptDir)
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
+    Harness.close(spark)
   }
 }

@@ -317,7 +317,6 @@ case class CharNgrams(child: Expression, nExpr: Expression)
 
 object GraftFunctions {
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.classic.ClassicConversions._
     val registry = spark.sessionState.functionRegistry
     val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")
     if (!registry.functionExists(ident)) {

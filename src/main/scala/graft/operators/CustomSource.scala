@@ -117,8 +117,8 @@ object CustomSource {
     * partition key and joined on it. Under
     * `spark.sql.sources.v2.bucketing.enabled` this whole plan runs
     * with ZERO shuffle exchanges — the storage-partitioned join
-    * (SourcesSpec pins the exchange-free plan; the Bench/Verify/test
-    * session builders set the v2-bucketing confs globally since round
+    * (SourcesSpec pins the exchange-free plan; Harness.session and the
+    * test session set the v2-bucketing confs globally since round
     * 18, so the driver gate MEASURES the exchange-free shape — under
     * default conf the same code is merely a correct 16-group join).
     * DuckDB regenerates both sides from `range()`. */

@@ -345,7 +345,6 @@ object Dedup {
     * detects the fixpoint — one distributed action per round, same
     * probe discipline as min-label's label-sum. */
   def connectedComponentsStar(edges: DataFrame, maxIter: Int = 40): DataFrame = {
-    val spark = edges.sparkSession
     import org.apache.spark.sql.DataFrame
     def canon(e: DataFrame): DataFrame =
       e.filter(col("src") =!= col("dst")).distinct()

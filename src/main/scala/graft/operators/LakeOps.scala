@@ -372,7 +372,7 @@ object LakeOps {
     s.sql("OPTIMIZE glake.ns.t235a CLUSTER BY bucket(id, 8)")
     s.sql("OPTIMIZE glake.ns.t235b CLUSTER BY bucket(id, 8)")
     // the two v2-bucketing confs the SPJ plan needs are SESSION-BUILD
-    // configuration (Bench/Verify/TestSession set them once, globally
+    // configuration (Harness.session/TestSession set them once, globally
     // documented) — a registered query must never mutate shared session
     // conf as a side effect, or every later query runs under different
     // planner configuration than it was certified with (r17 advisory;

@@ -16,13 +16,6 @@ object Scale {
 
   val SaltBuckets = 16
 
-  /** Release the cached blocks behind a localCheckpoint'd frame
-    * (Dataset.unpersist only covers CacheManager entries, not
-    * checkpoint RDDs). Caller contract: nothing may read the frame
-    * again — its lineage is truncated, so dropped blocks cannot be
-    * recomputed. The iterative operators (CC, k-means) call this on
-    * each superseded round so a loop pins one round's state, not all
-    * of them. */
   /** Pre-cut DISK_ONLY caches of LAZY reliable cuts, keyed by the cut
     * frame's root RDD id — unpersisted when the loop drops the
     * superseded round ([[dropCheckpoint]]) or at the end-of-query
@@ -30,6 +23,13 @@ object Scale {
   private val lazyCutCaches =
     new java.util.concurrent.ConcurrentHashMap[Int, DataFrame]()
 
+  /** Release the cached blocks behind a localCheckpoint'd frame
+    * (Dataset.unpersist only covers CacheManager entries, not
+    * checkpoint RDDs). Caller contract: nothing may read the frame
+    * again — its lineage is truncated, so dropped blocks cannot be
+    * recomputed. The iterative operators (CC, k-means) call this on
+    * each superseded round so a loop pins one round's state, not all
+    * of them. */
   private[operators] def dropCheckpoint(df: DataFrame): Unit =
     // ROOT match only: a derived (non-checkpointed) frame EMBEDS its
     // parents' LogicalRDD nodes, and a tree-wide drop would unpersist a
@@ -52,7 +52,7 @@ object Scale {
     * [[cut]] (see the install logic there). */
   @volatile private var installedCkptBase: Option[String] = None
 
-  /** Fresh checkpoint directory for the harness (Bench/Verify/Scratch).
+  /** Fresh checkpoint directory for [[graft.Harness.session]].
     * Preference: $SPARK_GRAFT_CKPT_BASE, else /dev/shm (tmpfs) when
     * writable, else java.io.tmpdir. On a real cluster the reliable
     * checkpoint store (HDFS/S3) is a SEPARATE service from the data
@@ -94,7 +94,7 @@ object Scale {
 
   /** Registry of operator-persisted frames that outlive their operator
     * (shared-frame persists: a self-join's both sides, a loop's final
-    * assignment). The harness (Bench/Verify sweeps) releases them at
+    * assignment). The sweep of [[graft.Harness.runEach]] releases them at
     * DATASET level via [[releasePins]] — an RDD-level sweep
     * (`sc.getPersistentRDDs` + `rdd.unpersist`) drops the blocks but
     * leaves the CacheManager ENTRY behind, so the next run of the same
@@ -105,8 +105,9 @@ object Scale {
     * cached data" warnings in the tail are its signature).
     *
     * CONTRACT (r10 advisory): the registry is process-global and
-    * harness-scoped. Outside a sweeping harness (Bench/Verify/test
-    * suites that call [[releasePins]] between queries), pinned frames
+    * harness-scoped. Outside a sweeping harness
+    * ([[graft.Harness.runEach]] or test suites that call
+    * [[releasePins]] between queries), pinned frames
     * accumulate for the session lifetime — a long-lived library caller
     * must either call [[releasePins]] at its own batch boundaries or
     * unpersist the returned frames itself; and because release is

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.{Q, Tables}
 

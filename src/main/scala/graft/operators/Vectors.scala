@@ -383,8 +383,6 @@ object Vectors {
   def kmeansLloyd(emb: DataFrame, seedIds: Seq[Long],
       maxIter: Int = 10,
       centroidScale: Option[Int] = None): (DataFrame, Seq[Double]) = {
-    val sess = emb.sparkSession
-    import sess.implicits._
     // v's lineage is STATIC (scan + project — it never grows with the
     // loop), so a plain persist beats a lineage cut: no checkpoint
     // write, and an evicted or lost block recovers by rescanning the
@@ -976,7 +974,7 @@ object Vectors {
     * (r11 advisory). */
   private def pqIndexCodes(s: SparkSession, dir: String,
       fs: org.apache.hadoop.fs.FileSystem): DataFrame = {
-    val (baseDir, absorbed) = pqIndexCurrent(s, dir, fs)
+    val (baseDir, absorbed) = pqIndexCurrent(dir, fs)
     val base = s.read.parquet(baseDir)
     pqIndexAppendDirs(dir, fs, absorbed)
       .foldLeft(base)((acc, p) => acc.unionByName(s.read.parquet(p.toString)))
@@ -1022,7 +1020,7 @@ object Vectors {
   }
 
   /** Resolve the current base segment + the batch ids it absorbed. */
-  private def pqIndexCurrent(s: SparkSession, dir: String,
+  private def pqIndexCurrent(dir: String,
       fs: org.apache.hadoop.fs.FileSystem): (String, Set[String]) =
     pqParsePtr(dir, pqPtrRaw(fs, dir), fs)
 
@@ -1874,7 +1872,7 @@ object Vectors {
         && col("cand_id") === col("cand_after")), lit(true))
         .as("serving_unchanged"))
     val nSegments =
-      1L + pqIndexAppendDirs(dir, fs, pqIndexCurrent(s, dir, fs)._2).size
+      1L + pqIndexAppendDirs(dir, fs, pqIndexCurrent(dir, fs)._2).size
     val beforeCnt = before.agg(count(lit(1)).as("n_before"))
     val ledger = after.agg(
       count_distinct(col("vec_id")).as("n_indexed"),

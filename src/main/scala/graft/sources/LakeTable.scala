@@ -586,8 +586,6 @@ object LakeFormat {
   private val DaysRe = """days\((.+)\)""".r
   /** Epoch-millis per day — `days(col)` sugar for `trunc(col, this)`. */
   val DayMillis: Long = 86400000L
-  private def encodeCluster(c: Option[(String, Int)]): String =
-    c.map { case (col, n) => s"bucket($col,$n)" }.getOrElse("-")
   private[sources] def decodeCluster(s: String): Option[(String, Int)] = s match {
     case ClusterRe(col, n) => Some((col, n.toInt))
     case _ => None
@@ -1166,9 +1164,8 @@ object LakeFormat {
 
   private def writeRootCAS(f: FileSystem, dir: String, v: Int,
       schema: StructType, cluster: Option[(String, Int)],
-      bodyLines: Seq[String], maintenance: Boolean = false,
-      colmap: Option[ColMap] = None,
-      part: Option[(String, Long)] = None): Boolean = {
+      bodyLines: Seq[String], maintenance: Boolean,
+      colmap: Option[ColMap], part: Option[(String, Long)]): Boolean = {
     val target = new HPath(dir, manifestName(v))
     if (f.exists(target)) return false
     // commit wall-time, clamped monotone non-decreasing against the
@@ -3630,7 +3627,7 @@ private[sources] class LakeScanBuilder(path: String,
 
   override def build(): Scan = {
     if (aggFuncs.nonEmpty)
-      return new LakeAggScan(path, tableSchema, version, entries, aggFuncs)
+      return new LakeAggScan(tableSchema, version, entries, aggFuncs)
     // a pinned name missing from the snapshot is a stale or typo'd pin
     // — fail loudly instead of silently serving fewer rows (r18 review
     // #7); validation pays one O(files) flatten, which a pinned scan
@@ -3693,7 +3690,7 @@ private[sources] class LakeScanBuilder(path: String,
 /** One-row manifest-only scan for completely-pushed aggregates: the
   * answers are computed on the DRIVER from the snapshot's file stats —
   * no data file is opened, no task reads a row. */
-private[sources] class LakeAggScan(path: String, tableSchema: StructType,
+private[sources] class LakeAggScan(tableSchema: StructType,
     version: Int, entries: Seq[LakeFormat.FileEntry],
     funcs: Seq[org.apache.spark.sql.connector.expressions.aggregate.AggregateFunc])
     extends Scan with Batch {

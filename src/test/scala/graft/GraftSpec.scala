@@ -24,7 +24,7 @@ object TestSession {
       // session construction so loaders stay pure (r8 advisory).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // storage-partitioned joins: global v2-bucketing confs, matching
-      // the Bench/Verify builders — one planner setup for every query
+      // graft.Harness.session — one planner setup for every query
       // (r17 advisory: a q235-local set leaked session conf)
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")

@@ -927,6 +927,53 @@ class PinSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
+  test("Harness.runEach sweep keeps entry-time caches, drops pins, stray persists and rdd-* payloads") {
+    import graft.operators.Scale
+    val sc = spark.sparkContext
+    val fixture = spark.range(500).selectExpr("id", "id % 7 AS k").cache()
+    fixture.count()
+    val fixtureRdds = sc.getPersistentRDDs.keySet
+    val dir = Scale.harnessCheckpointDir()
+    // route Scale.cut to the reliable branch (cut installs the dir on sc)
+    spark.conf.set(Scale.CheckpointDirKey, dir)
+    def rddDirs(): Int = {
+      val root = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
+      root.getFileSystem(sc.hadoopConfiguration).listStatus(root)
+        .count(st => st.isDirectory && st.getPath.getName.startsWith("rdd-"))
+    }
+    val pinned = spark.range(1000).selectExpr("id", "id * 3 AS v")
+    val stray = spark.range(1000).selectExpr("id", "id + 1 AS w")
+    var strayRdds = Set.empty[Int]
+    try {
+      Harness.runEach(spark, Seq("step")) { _ =>
+        Scale.pin(pinned).count()
+        val before = sc.getPersistentRDDs.keySet
+        stray.persist().count() // outside the pin registry
+        strayRdds = sc.getPersistentRDDs.keySet.toSet -- before
+        assert(Scale.cut(spark.range(1000).toDF("id"), eager = true)
+          .count() == 1000L)
+        assert(strayRdds.nonEmpty && rddDirs() >= 1) // all three exist
+      }
+      assert(fixture.storageLevel != StorageLevel.NONE)
+      assert(fixtureRdds.subsetOf(sc.getPersistentRDDs.keySet))
+      // Dataset-level release: the pin's CacheManager entry is gone too
+      assert(pinned.storageLevel == StorageLevel.NONE)
+      assert(spark.range(1000).selectExpr("id", "id * 3 AS v")
+        .queryExecution.withCachedData.collectFirst {
+          case i: org.apache.spark.sql.execution.columnar.InMemoryRelation => i
+        }.isEmpty)
+      assert(strayRdds.intersect(sc.getPersistentRDDs.keySet).isEmpty)
+      assert(rddDirs() == 0)
+    } finally {
+      // the session is shared: other suites must keep the
+      // localCheckpoint default and an empty cache
+      spark.conf.unset(Scale.CheckpointDirKey)
+      stray.unpersist(blocking = true)
+      fixture.unpersist(blocking = true)
+      Harness.deleteTree(java.nio.file.Paths.get(dir))
+    }
+  }
+
   test("releasePins is idempotent and tolerates double-unpersist") {
     val df = spark.range(10).toDF("id").transform(graft.operators.Scale.pin(_))
     df.count()

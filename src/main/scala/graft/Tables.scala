@@ -1,13 +1,33 @@
 package graft
 
+import scala.collection.mutable
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftshim.Shim
 
 /** Parquet table loaders for the driver fixture set (TESTDATA.md).
   *
-  * All tables are single parquet files per scale-factor directory. Catalyst
-  * handles column pruning + predicate pushdown on these scans automatically,
-  * so loaders stay bare `spark.read.parquet` — at 100 TB the same call reads
-  * a partitioned directory tree and gets partition pruning for free.
+  * A fixture is a single parquet file, or a directory of part files
+  * (GenScale's multi-file corpus), per table. Catalyst handles column
+  * pruning + predicate pushdown on these scans automatically.
+  *
+  * Resolution cache: `spark.read.parquet` infers the schema with a Spark
+  * job, lists the files and looks the data source up on every call, so
+  * [[t]] does that once per (session, qualified path) and keeps the
+  * resolved `LogicalRelation`. Every read returns a `newInstance()` of it
+  * (fresh exprIds, so self-joins resolve and CacheManager still
+  * substitutes a cached fixture). The entry is checked on every read
+  * against a fingerprint: modification time and length of the path and,
+  * for a directory, of every file below it, plus the session's explicitly
+  * set parquet/file-source confs (they shape schema inference). A changed
+  * fingerprint re-resolves. An entry is served only to the session that
+  * resolved it (the relation carries its session); entries of stopped
+  * sessions are dropped on the next access. A path that cannot be
+  * fingerprinted is read uncached, so a missing path fails exactly as a
+  * bare `spark.read.parquet` does, and failures are never cached.
   *
   * Timestamp-type contract: `events.ts` is an EVENT INSTANT and is
   * normalized to session-TZ TIMESTAMP whatever physical encoding the
@@ -24,7 +44,55 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     functions.GraftFunctions.ensureRegistered(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+  }
+
+  /** What a resolved relation was resolved against: (path, mtime, length)
+    * of the root and every file below it, and the read confs. */
+  private final case class Fingerprint(files: Seq[(String, Long, Long)],
+      confs: Map[String, String])
+
+  private val ReadConfPrefixes = Seq("spark.sql.parquet.",
+    "spark.sql.legacy.parquet.", "spark.sql.files.", "spark.sql.sources.",
+    "spark.sql.caseSensitive")
+
+  private val resolved =
+    mutable.HashMap.empty[(SparkSession, String), (Fingerprint, LogicalRelation)]
+
+  private def fingerprint(spark: SparkSession, fs: FileSystem,
+      path: HPath): Fingerprint = {
+    def leaves(p: HPath): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        if (st.isDirectory) leaves(st.getPath)
+        else Seq((st.getPath.toString, st.getModificationTime, st.getLen))
+      }
+    val root = fs.getFileStatus(path)
+    val files = (path.toString, root.getModificationTime, root.getLen) +:
+      (if (root.isDirectory) leaves(path) else Nil)
+    Fingerprint(files, spark.sessionState.conf.getAllConfs.filter {
+      case (k, _) => ReadConfPrefixes.exists(k.startsWith) })
+  }
+
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
+    val hp = new HPath(path)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = (spark, fs.makeQualified(hp).toString)
+    val fp = Try(fingerprint(spark, fs, hp)).toOption
+    val hit = resolved.synchronized {
+      resolved.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+      resolved.get(key).collect { case (f, rel) if fp.contains(f) => rel }
+    }
+    hit match {
+      case Some(rel) => Shim.ofRows(spark, rel.newInstance())
+      case None =>
+        val df = spark.read.parquet(path)
+        (fp, df.queryExecution.analyzed) match {
+          case (Some(f), rel: LogicalRelation) =>
+            resolved.synchronized { resolved(key) = (f, rel) }
+          case _ => ()
+        }
+        df
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame = t(s, d, "region")

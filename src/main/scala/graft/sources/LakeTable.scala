@@ -4,8 +4,12 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
+import com.esotericsoftware.kryo.io.{Input => KryoInput, Output => KryoOutput}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDeleteV2, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
@@ -388,15 +392,19 @@ object LakeFormat {
   def epochPrefix(queryId: String, epochId: Long): String =
     f"q=$queryId-epoch=$epochId%05d-"
 
-  /** Driver-side Hadoop configuration, serializable for shipping into
-    * reader/writer factories: executors have no active SparkSession, so
+  /** Driver-side Hadoop configuration, serializable as the payload of
+    * the broadcast that reader/writer factories carry (see
+    * [[driverConf]]): executors have no active SparkSession, so
     * re-deriving the conf task-side would lose every `spark.hadoop.*`
     * setting (credentials, fs.defaultFS) and open the WRONG filesystem
     * on any configured deployment (r16 advisory). Hadoop's
     * Configuration is not Serializable; this wrapper round-trips it
-    * through its own writeXml/readFields codec. */
+    * through its own write/readFields codec, under Java serialization
+    * and under Kryo alike: a broadcast is serialized with
+    * `spark.serializer`, and Kryo's field serializer would skip the
+    * transient `value` and hand executors a null conf. */
   final class SerializableHadoopConf(@transient var value: Configuration)
-      extends Serializable {
+      extends Serializable with KryoSerializable {
     private def writeObject(out: java.io.ObjectOutputStream): Unit = {
       out.defaultWriteObject()
       value.write(out)
@@ -406,15 +414,46 @@ object LakeFormat {
       value = new Configuration(false)
       value.readFields(in)
     }
+    override def write(kryo: Kryo, out: KryoOutput): Unit = {
+      val data = new java.io.DataOutputStream(out)
+      value.write(data)
+      data.flush()
+    }
+    override def read(kryo: Kryo, in: KryoInput): Unit = {
+      value = new Configuration(false)
+      value.readFields(new java.io.DataInputStream(in))
+    }
   }
 
+  // the last conf broadcast: its context (held weakly, so a stopped
+  // context is not kept reachable), the entries it was made from, and
+  // the broadcast itself
+  private var lastConf: Option[(java.lang.ref.WeakReference[SparkContext],
+    Map[String, String], Broadcast[SerializableHadoopConf])] = None
+
   /** Capture the driver's Hadoop conf for executor-side use — call ON
-    * THE DRIVER (factory construction time). */
-  def driverConf(): SerializableHadoopConf =
-    new SerializableHadoopConf(
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sessionState.newHadoopConf())
-        .getOrElse(new Configuration()))
+    * THE DRIVER (factory construction time), where a query is running
+    * and so `SparkSession.active` resolves (it throws with neither an
+    * active nor a default session). The conf is about 1,100 entries
+    * (over 100 KB serialized); it is broadcast, as Spark's own file
+    * sources do, so tasks do not each receive and decode it again. One
+    * broadcast is reused for as long as the SparkContext and the
+    * session's Hadoop conf stay the same: Spark asks for a reader
+    * factory on every copy of a scan's exec node, and writing the conf
+    * out costs about 13 ms, against well under 1 ms to compare it. */
+  def driverConf(): Broadcast[SerializableHadoopConf] = synchronized {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val sc = spark.sparkContext
+    val hc = spark.sessionState.newHadoopConf()
+    val entries = hc.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    lastConf match {
+      case Some((ref, seen, b)) if (ref.get eq sc) && seen == entries => b
+      case _ =>
+        val b = sc.broadcast(new SerializableHadoopConf(hc))
+        lastConf = Some((new java.lang.ref.WeakReference(sc), entries, b))
+        b
+    }
+  }
 
   def fs(path: String): FileSystem =
     new HPath(path).getFileSystem(
@@ -429,8 +468,8 @@ object LakeFormat {
   /** Task-side variant: opens the filesystem with the DRIVER's conf,
     * shipped through the factory (r16 advisory — see
     * [[SerializableHadoopConf]]). */
-  def fs(path: String, conf: SerializableHadoopConf): FileSystem =
-    new HPath(path).getFileSystem(conf.value)
+  def fs(path: String, conf: Broadcast[SerializableHadoopConf]): FileSystem =
+    new HPath(path).getFileSystem(conf.value.value)
 
   /** All surviving manifest versions under `dir`, ascending. */
   def versions(f: FileSystem, dir: String): Seq[Int] = {
@@ -4188,7 +4227,7 @@ private[sources] class LakeMicroBatchStream(path: String,
 
 private[sources] class LakeReaderFactory(path: String,
     tableSchema: StructType, required: StructType,
-    conf: LakeFormat.SerializableHadoopConf,
+    conf: Broadcast[LakeFormat.SerializableHadoopConf],
     colmap: Option[LakeFormat.ColMap] = None)
     extends PartitionReaderFactory {
   override def createReader(
@@ -4518,7 +4557,7 @@ private[sources] class LakeDataWriter(path: String,
     tableSchema: StructType, writeSchema: StructType, queryId: String,
     partitionId: Int, taskId: Long, failAfterFirstRow: Boolean,
     filePrefix: String = "", writeUid: String = "w",
-    conf: LakeFormat.SerializableHadoopConf = null,
+    conf: Broadcast[LakeFormat.SerializableHadoopConf] = null,
     clusterSpec: Option[(String, Int)] = None,
     colmap: Option[LakeFormat.ColMap] = None,
     partSpec: Option[(String, Long)] = None,
@@ -5499,7 +5538,7 @@ private[sources] class LakeChangesScan(path: String,
 
 private[sources] class LakeChangesReaderFactory(path: String,
     dataSchema: StructType, required: StructType,
-    conf: LakeFormat.SerializableHadoopConf,
+    conf: Broadcast[LakeFormat.SerializableHadoopConf],
     colmap: Option[LakeFormat.ColMap] = None)
     extends PartitionReaderFactory {
   override def createReader(

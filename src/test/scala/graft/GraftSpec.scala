@@ -457,7 +457,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("t92 compression ratio separates repetitive from high-entropy text, deterministically") {
-    import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
     val rep = "spam ham " * 500                       // highly repetitive
     val rnd = new scala.util.Random(42)

@@ -76,7 +76,7 @@ class LakeLawSpec extends AnyFunSuite {
       var hi = 1000L
       val f = LakeFormat.fs(dir)
       val ops = Seq.newBuilder[String]
-      (0 until 6).foreach { step =>
+      (0 until 6).foreach { _ =>
         rnd.nextInt(9) match {
           case 0 => // scattered delete
             val p = 37 + rnd.nextInt(60)

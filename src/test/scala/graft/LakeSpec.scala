@@ -551,7 +551,7 @@ class LakeSpec extends AnyFunSuite {
 
   test("CHECK constraints: enforced on batch/DML/path writes, NULL passes, violations abort pre-commit, fixed at CREATE, clone carries (r19)") {
     def deepMsg(t: Throwable): String = {
-      var m = new StringBuilder
+      val m = new StringBuilder
       var c: Throwable = t
       while (c != null) { m ++= String.valueOf(c.getMessage); c = c.getCause }
       m.toString
@@ -1027,7 +1027,7 @@ class LakeSpec extends AnyFunSuite {
     assert(qL.awaitTermination(120000))
     // nothing streamed yet (an empty epoch may still commit a manifest)
     assert(LakeFormat.latestVersion(LakeFormat.fs(out2), out2)
-      .forall(v => read(out2).count() == 0L))
+      .forall(_ => read(out2).count() == 0L))
     spark.range(0, 7)
       .select(col("id"), lit(0).cast("int").as("bucket"),
         lit(1).cast("int").as("kscore"), lit(0.5).as("score"),
@@ -1115,6 +1115,63 @@ class LakeSpec extends AnyFunSuite {
     val back = ois.readObject().asInstanceOf[LakeFormat.SerializableHadoopConf]
     assert(back.value.get("graft.test.key") == "v17",
       "spark.hadoop.* settings were lost crossing the driver→task boundary")
+  }
+
+  test("the Hadoop conf broadcast survives Kryo and is reused until the session conf changes") {
+    val key = "graft.test.kryo"
+    try {
+      spark.conf.set(key, "k1")
+      val b = LakeFormat.driverConf()
+      assert(LakeFormat.driverConf() eq b,
+        "an unchanged conf was broadcast again")
+      // a broadcast is serialized with spark.serializer, not Java's
+      val kryo = new org.apache.spark.serializer.KryoSerializer(
+        spark.sparkContext.getConf).newInstance()
+      val back = kryo.deserialize[LakeFormat.SerializableHadoopConf](
+        kryo.serialize(b.value))
+      assert(back.value != null, "Kryo dropped the conf")
+      assert(back.value.get(key) == "k1")
+      assert(back.value.size == b.value.value.size)
+      spark.conf.set(key, "k2")
+      val b2 = LakeFormat.driverConf()
+      assert(!(b2 eq b), "a changed conf reused the old broadcast")
+      assert(b2.value.value.get(key) == "k2")
+    } finally spark.conf.unset(key)
+  }
+
+  test("reader and writer factories carry the Hadoop conf as a broadcast: each serializes under 8 KB") {
+    import org.apache.spark.sql.connector.catalog.SupportsWrite
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import scala.jdk.CollectionConverters._
+    def bytes(o: AnyRef): Int = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val oos = new java.io.ObjectOutputStream(bos)
+      oos.writeObject(o); oos.close()
+      bos.size()
+    }
+    val dir = tmp("lake_factory_size")
+    det(1000, 2).write.format(Lake).option("path", dir).mode("overwrite").save()
+    val reader = read(dir).queryExecution.executedPlan
+      .collectFirst { case b: BatchScanExec => b.readerFactory }.get
+    assert(reader.getClass.getSimpleName == "LakeReaderFactory")
+    val opts = Map("path" -> dir).asJava
+    val table = new LakeSource().getTable(read(dir).schema, Array.empty, opts)
+      .asInstanceOf[SupportsWrite]
+    val info = new LogicalWriteInfo {
+      override def queryId(): String = "factory-size"
+      override def schema() = table.schema()
+      override def options() = new CaseInsensitiveStringMap(opts)
+    }
+    val writer = table.newWriteBuilder(info).build().toBatch
+      .createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      })
+    assert(writer.getClass.getSimpleName == "LakeWriterFactory")
+    for (f <- Seq(reader, writer))
+      assert(bytes(f) < 8 * 1024,
+        s"${f.getClass.getSimpleName} serializes to ${bytes(f)} bytes")
   }
 
   test("lake DDL rejects unsupported column types at CREATE") {
@@ -1750,7 +1807,7 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("merge-on-read MERGE INTO: scattered merge writes vectors + appends, zero rewrites; identical to the COW replay; feed = exactly the matched+inserted rows (r19 — r18 verdict #1)") {
-    def runMerge(t: String, dir: String): Unit = {
+    def runMerge(t: String): Unit = {
       det(20000, 8).createOrReplaceTempView("mormerge_src")
       spark.sql(s"INSERT OVERWRITE $t SELECT * FROM mormerge_src")
       // source: ~20 scattered matches across all 8 files + 100 new ids
@@ -1769,7 +1826,7 @@ class LakeSpec extends AnyFunSuite {
     val t = catalogTable("tmormerge", dir)
     LakeSource.lastReplacedFiles.set(Seq("sentinel"))
     LakeSource.lastDvWrites.set(Nil)
-    runMerge(t, dir)
+    runMerge(t)
     // the MoR pin: ZERO data files rewritten — matched rows are vector
     // growth, replacements + not-matched rows are appended files
     assert(LakeSource.lastReplacedFiles.get().isEmpty,
@@ -1783,7 +1840,7 @@ class LakeSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.lake.merge.cow", "true")
     try {
       LakeSource.lastReplacedFiles.set(Nil)
-      runMerge(tc, cowDir)
+      runMerge(tc)
       assert(LakeSource.lastReplacedFiles.get().nonEmpty,
         "the COW escape hatch did not run the group-based rewrite")
     } finally spark.conf.unset("spark.graft.lake.merge.cow")

@@ -550,7 +550,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("salted as-of join: null semantics match the native exec") {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Row
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}

@@ -576,6 +576,82 @@ class SourcesSpec extends AnyFunSuite {
     assert(tsType(TestSession.sf) == org.apache.spark.sql.types.TimestampType)
   }
 
+  test("Tables.t resolves a fixture once per session: no job on a re-read, self-joins, cache substitution, re-resolve on a file or read-conf change") {
+    import java.nio.file.{Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val dir = tmp("graft_tables")
+    val file = Paths.get(dir, "t.parquet")
+    // one parquet FILE at <dir>/t.parquet: the fixture layout
+    def writeFile(df: DataFrame): Unit = {
+      val stage = Paths.get(tmp("graft_tables_stage"))
+      df.coalesce(1).write.parquet(stage.resolve("out").toString)
+      val part = Files.list(stage.resolve("out")).iterator.asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, file, StandardCopyOption.REPLACE_EXISTING)
+      Harness.deleteTree(stage)
+    }
+    val sc = spark.sparkContext
+    val group = "graft_tables_spec"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(read: => DataFrame): Int = {
+      jobs.set(0)
+      sc.setJobGroup(group, group)
+      try read finally sc.clearJobGroup()
+      // drain the asynchronous listener bus (private[spark], so by reflection)
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
+      jobs.get
+    }
+    writeFile(spark.range(100).toDF("id"))
+    sc.addSparkListener(listener)
+    var cached: DataFrame = null
+    try {
+      assert(jobsOf(Tables.t(spark, dir, "t")) >= 1, "the first read infers the schema")
+      assert(jobsOf(Tables.t(spark, dir, "t")) == 0, "a re-read must reuse the resolved relation")
+      assert(jobsOf(Tables.t(spark.newSession(), dir, "t")) >= 1,
+        "another session must resolve its own relation")
+      val (a, b) = (Tables.t(spark, dir, "t"), Tables.t(spark, dir, "t"))
+      assert(a.join(b, a("id") === b("id") + 1).count() == 99L)
+      cached = Tables.t(spark, dir, "t").cache()
+      cached.count()
+      assert(Tables.t(spark, dir, "t").queryExecution.withCachedData
+        .collectFirst { case r: InMemoryRelation => r }.nonEmpty,
+        "a new read must be substituted by the cached one")
+      cached.unpersist(blocking = true)
+      cached = null
+      writeFile(spark.range(5).selectExpr("id * 10 as k", "'x' as s"))
+      val re = Tables.t(spark, dir, "t")
+      assert(re.schema.fieldNames.toSeq == Seq("k", "s"))
+      assert(re.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 10L, 20L, 30L, 40L))
+      Files.delete(file)
+      intercept[org.apache.spark.sql.AnalysisException](Tables.t(spark, dir, "t"))
+      // a directory fixture (GenScale's layout): a file added below the
+      // root, and a read conf that shapes schema inference, re-resolve
+      def cols(): Seq[String] = Tables.t(spark, dir, "m").schema.fieldNames.toSeq.sorted
+      spark.range(3).toDF("a").write.parquet(s"$dir/m.parquet")
+      spark.range(3).toDF("b").write.mode("append").parquet(s"$dir/m.parquet")
+      assert(cols().size == 1)
+      spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+      try {
+        assert(cols() == Seq("a", "b"))
+        spark.range(3).toDF("c").write.mode("append").parquet(s"$dir/m.parquet")
+        assert(cols() == Seq("a", "b", "c"))
+      } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    } finally {
+      sc.removeSparkListener(listener)
+      if (cached != null) cached.unpersist(blocking = true)
+      Harness.deleteTree(Paths.get(dir))
+    }
+  }
+
   test("bucketed tables join without an exchange (pre-bucketed fact-table layout)") {
     // The 100 TB co-location story the partitioned-layout test doesn't
     // cover: two tables written bucketed (+ sorted) on the join key

@@ -1084,7 +1084,7 @@ object Vectors {
       .mkString("\n")
     val tmp = new org.apache.hadoop.fs.Path(
       s"$dir/_codes_current.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
+    val out = graft.sources.FileIO.create(fs, tmp, true)
     try out.write(ptrTxt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val ptr = new org.apache.hadoop.fs.Path(s"$dir/_codes_current")
@@ -1115,7 +1115,14 @@ object Vectors {
     }
     // atomic overwrite-rename: FileContext (unlike FileSystem.rename)
     // supports Rename.OVERWRITE, so the pointer never transiently
-    // disappears — the crash window a delete-then-rename would open
+    // disappears — the crash window a delete-then-rename would open.
+    // The local FileContext keeps the destination's `.crc` when the
+    // source has none (FileIO writes none), so a pointer an older
+    // writer checksummed drops its sidecar first: a read between the
+    // two steps is then unverified, never verified against stale sums
+    if (graft.sources.FileIO.isLocal(fs))
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/._codes_current.crc"),
+        false)
     org.apache.hadoop.fs.FileContext
       .getFileContext(ptr.toUri, s.sparkContext.hadoopConfiguration)
       .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
@@ -1181,7 +1188,8 @@ object Vectors {
       .map(_.getPath).filter(_.getName != "_SUCCESS")
       .foreach(p => fs.delete(p, true))
     val compactedSentinel = new org.apache.hadoop.fs.Path(s"$dir/_compacted")
-    if (!fs.exists(compactedSentinel)) fs.create(compactedSentinel, true).close()
+    if (!fs.exists(compactedSentinel))
+      graft.sources.FileIO.create(fs, compactedSentinel, true).close()
     n
   }
 
@@ -1280,7 +1288,7 @@ object Vectors {
       assigned.select(col("vec_id"), col("sub"), col("cid"))
         .write.mode("overwrite").parquet(s"$dir/codes_append_$batchId")
       assigned.unpersist(false)
-      val out = fs.create(marker, true)
+      val out = graft.sources.FileIO.create(fs, marker, true)
       try out.write(drift.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       drift

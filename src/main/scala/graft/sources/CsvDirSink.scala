@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -110,20 +111,16 @@ private[graft] case class CsvFileCommit(fileName: String, rows: Long)
 private[graft] class CsvDirBatchWrite(path: String, schema: StructType,
     queryId: String, failPartition: Option[Int], truncate: Boolean)
     extends BatchWrite {
-  private def fs(conf: org.apache.hadoop.conf.Configuration) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(conf)
-
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new CsvDirWriterFactory(path, schema, queryId, failPartition)
+    new CsvDirWriterFactory(path, schema, queryId, failPartition,
+      LakeFormat.driverConf())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val f = fs(conf)
+    val f = LakeFormat.fs(path)
     val dest = new org.apache.hadoop.fs.Path(path)
     val staging = new org.apache.hadoop.fs.Path(path, s"_staging-$queryId")
-    f.mkdirs(dest)
+    FileIO.mkdirs(f, dest)
     // the _SUCCESS marker is deleted FIRST in BOTH modes: a crash (or a
     // failed rename) anywhere between here and the final marker
     // re-create leaves a marker-LESS directory — readers gating on
@@ -161,7 +158,7 @@ private[graft] class CsvDirBatchWrite(path: String, schema: StructType,
     // table. Everything below this line is HOUSEKEEPING on an
     // already-completed publish
     val marker = new org.apache.hadoop.fs.Path(dest, "_SUCCESS")
-    f.create(marker, true).close()
+    FileIO.create(f, marker, true).close()
     f.delete(staging, true)
     // reclaim staging residue from OTHER query ids: an aborted job's
     // zombie task can re-mkdir its staging dir after the driver-side
@@ -206,8 +203,7 @@ private[graft] class CsvDirBatchWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val f = fs(conf)
+    val f = LakeFormat.fs(path)
     // wholesale: every attempt wrote under staging, so the destination
     // is untouched by construction
     f.delete(new org.apache.hadoop.fs.Path(path, s"_staging-$queryId"), true)
@@ -215,10 +211,12 @@ private[graft] class CsvDirBatchWrite(path: String, schema: StructType,
 }
 
 private[sources] class CsvDirWriterFactory(path: String, schema: StructType,
-    queryId: String, failPartition: Option[Int]) extends DataWriterFactory {
+    queryId: String, failPartition: Option[Int],
+    conf: Broadcast[LakeFormat.SerializableHadoopConf])
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new CsvDirDataWriter(path, schema, queryId, partitionId, taskId,
+    new CsvDirDataWriter(path, schema, queryId, partitionId, taskId, conf,
       failAfterFirstRow = failPartition.contains(partitionId))
 }
 
@@ -249,11 +247,12 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val (p, sch, qid) = (path, schema, queryId) // serializable capture
+    // serializable capture
+    val (p, sch, qid, conf) = (path, schema, queryId, LakeFormat.driverConf())
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
-        new CsvDirDataWriter(p, sch, qid, partitionId, taskId,
+        new CsvDirDataWriter(p, sch, qid, partitionId, taskId, conf,
           failAfterFirstRow = false,
           filePrefix = f"epoch=$epochId%05d-")
     }
@@ -261,11 +260,10 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val f = LakeFormat.fs(path)
     val dest = new org.apache.hadoop.fs.Path(path)
     val staging = new org.apache.hadoop.fs.Path(path, s"_staging-$queryId")
-    f.mkdirs(dest)
+    FileIO.mkdirs(f, dest)
     // idempotent replay: REPLACE this epoch's previously published
     // files (present only when a prior attempt crashed after its
     // publish but before the engine recorded the epoch). The files to
@@ -307,7 +305,7 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
     // renamed name is a no-op. A torn intent write is equally safe —
     // nothing is published until the renames below, and a partial name
     // list only produces no-op deletes on the next replay.
-    val mOut = f.create(manifest, true)
+    val mOut = FileIO.create(f, manifest, true)
     try mOut.write(messages.map { case CsvFileCommit(n, _) => n }
       .mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -320,7 +318,8 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
           new org.apache.hadoop.fs.Path(dest, name)),
         s"CsvDirSink epoch $epochId: publish rename failed for $name")
     }
-    f.create(new org.apache.hadoop.fs.Path(dest, "_SUCCESS"), true).close()
+    FileIO.create(f, new org.apache.hadoop.fs.Path(dest, "_SUCCESS"), true)
+      .close()
     // sweep THIS epoch's staging residue only (zombie attempts); other
     // epochs' files — there are none in micro-batch execution, but
     // continuous mode interleaves — stay untouched. Drop the dir itself
@@ -339,8 +338,7 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val f = LakeFormat.fs(path)
     val staging = new org.apache.hadoop.fs.Path(path, s"_staging-$queryId")
     if (f.exists(staging)) {
       f.listStatus(staging)
@@ -352,6 +350,7 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
 
 private[sources] class CsvDirDataWriter(path: String, schema: StructType,
     queryId: String, partitionId: Int, taskId: Long,
+    conf: Broadcast[LakeFormat.SerializableHadoopConf],
     failAfterFirstRow: Boolean,
     filePrefix: String = "") extends DataWriter[InternalRow] {
   // attempt-unique name: partition + task id (task ids are unique per
@@ -360,10 +359,8 @@ private[sources] class CsvDirDataWriter(path: String, schema: StructType,
   private val fileName = f"${filePrefix}part-$partitionId%05d-$taskId.csv"
   private val staging =
     new org.apache.hadoop.fs.Path(path, s"_staging-$queryId")
-  private val conf = new org.apache.hadoop.conf.Configuration()
-  private val f = staging.getFileSystem(conf)
-  f.mkdirs(staging)
-  private val out = f.create(
+  private val f = LakeFormat.fs(path, conf)
+  private val out = FileIO.create(f,
     new org.apache.hadoop.fs.Path(staging, fileName), true)
   private var rows = 0L
 

@@ -55,7 +55,7 @@ object LakeIngest {
     val tmp = new HPath(dir,
       s"_tmp-$name-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(f.create(tmp, false), "UTF-8"))
+      new java.io.OutputStreamWriter(FileIO.create(f, tmp, false), "UTF-8"))
     try out.write(body) finally out.close()
     val dst = new HPath(dir, name)
     require(f.rename(tmp, dst), s"copy into: rename $tmp -> $dst failed")

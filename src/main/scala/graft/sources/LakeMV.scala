@@ -67,7 +67,7 @@ object LakeMV {
     val tmp = new HPath(dir,
       s"_tmp-$name-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = new java.io.BufferedWriter(
-      new java.io.OutputStreamWriter(f.create(tmp, false), "UTF-8"))
+      new java.io.OutputStreamWriter(FileIO.create(f, tmp, false), "UTF-8"))
     try out.write(body) finally out.close()
     val dst = new HPath(dir, name)
     require(f.rename(tmp, dst), s"lake mv: rename $tmp -> $dst failed")
@@ -145,7 +145,7 @@ object LakeMV {
       !f.exists(new HPath(mvDir, DefFile)),
       s"lake mv: $mvDir already holds a lake table — MV targets must " +
         "be fresh directories")
-    f.mkdirs(new HPath(mvDir))
+    FileIO.mkdirs(f, new HPath(mvDir))
     // def FIRST: every later crash state is recognizably a half-create
     writeFresh(f, mvDir, DefFile,
       s"$srcDir\n${keys.mkString(",")}\n${sums.mkString(",")}")

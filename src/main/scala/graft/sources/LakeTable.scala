@@ -46,6 +46,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    stats. A reader binds to one manifest = one SNAPSHOT; writers
   *    never mutate a published manifest or data file.
   *
+  * Every file and directory here is made through [[FileIO]]. On a local
+  * filesystem that is `java.nio.file`, so the directory holds no `.crc`
+  * checksum sidecars and new entries take the process umask rather
+  * than Hadoop's `fs.permissions.umask-mode` (both default to 022).
+  * Files Spark itself writes elsewhere (checkpoints, parquet) still
+  * carry their `.crc`.
+  *
   * The protocol pieces, each the standard lakehouse answer:
   *
   *  - **Atomic commit + optimistic concurrency**: a commit stages task
@@ -455,6 +462,12 @@ object LakeFormat {
     }
   }
 
+  /** The filesystem under `path`, opened with the active session's
+    * Hadoop conf. Creates, mkdirs and the manifest listing on it go
+    * through [[FileIO]], which uses `java.nio.file` when this is the
+    * local filesystem: Hadoop's local filesystem forks `chmod` for
+    * every file and directory it makes when its native library is
+    * absent. */
   def fs(path: String): FileSystem =
     new HPath(path).getFileSystem(
       // honor spark.hadoop.* (credentials, fs.defaultFS) when a session
@@ -471,17 +484,16 @@ object LakeFormat {
   def fs(path: String, conf: Broadcast[SerializableHadoopConf]): FileSystem =
     new HPath(path).getFileSystem(conf.value.value)
 
-  /** All surviving manifest versions under `dir`, ascending. */
-  def versions(f: FileSystem, dir: String): Seq[Int] = {
-    val d = new HPath(dir)
-    if (!f.exists(d)) return Nil
-    f.listStatus(d).iterator.flatMap { st =>
-      st.getPath.getName match {
-        case ManifestRe(n) => Some(n.toInt)
-        case _ => None
-      }
-    }.toSeq.sorted
-  }
+  /** All surviving manifest versions under `dir`, ascending. Reads
+    * entry names only ([[FileIO.names]]): a table directory keeps every
+    * superseded file for time travel, and this runs on every
+    * `latestVersion`, so a stat per entry would grow with the table's
+    * history. */
+  def versions(f: FileSystem, dir: String): Seq[Int] =
+    FileIO.names(f, new HPath(dir)).flatMap {
+      case ManifestRe(n) => Some(n.toInt)
+      case _ => None
+    }.sorted
 
   def latestVersion(f: FileSystem, dir: String): Option[Int] =
     versions(f, dir).lastOption
@@ -953,7 +965,7 @@ object LakeFormat {
     if (f.exists(target)) return
     val tmp = new HPath(dir,
       s"_tmp-seg-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = f.create(tmp, false)
+    val out = FileIO.create(f, tmp, false)
     try out.write(content.getBytes("UTF-8")) finally out.close()
     LakeSource.segmentWriteCount.incrementAndGet()
     if (!f.rename(tmp, target)) {
@@ -1223,7 +1235,7 @@ object LakeFormat {
     val ts = math.max(System.currentTimeMillis(), prevTs + 1)
     val tmp = new HPath(dir,
       s"_tmp-manifest-${java.util.UUID.randomUUID().toString.take(12)}")
-    val out = f.create(tmp, false)
+    val out = FileIO.create(f, tmp, false)
     try {
       // generation 2 stays the default spelling; generation 3 is
       // written only when a header FLAG is set (`m` = maintenance,
@@ -1240,14 +1252,12 @@ object LakeFormat {
       val body = (header +: bodyLines).mkString("", "\n", "\n")
       out.write(body.getBytes("UTF-8"))
     } finally out.close()
-    val local = f.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
+    val local = FileIO.isLocal(f)
     val ok =
       if (local) {
         try {
           java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(target.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
+            FileIO.localPath(f, target), FileIO.localPath(f, tmp))
           true
         } catch {
           case _: java.nio.file.FileAlreadyExistsException => false
@@ -1336,7 +1346,7 @@ object LakeFormat {
       Option(LakeSource.beforeRowLevelCommit.getAndSet(null)).foreach(_.run())
     val dest = new HPath(path)
     val staging = new HPath(path, s"_staging-$queryId")
-    f.mkdirs(dest)
+    FileIO.mkdirs(f, dest)
     val newEntries = messages.flatMap {
       case c: LakeFileCommit => Seq(c)
       case LakeTaskCommit(cs) => cs // cluster-by writers: N bucket files
@@ -1540,7 +1550,7 @@ object LakeFormat {
           "the new snapshot")
     }
     if (!latestVersion(f, path).contains(v)) conflict(Nil)
-    f.mkdirs(dest)
+    FileIO.mkdirs(f, dest)
     val newEntries = messages.flatMap {
       case c: LakeFileCommit => Seq(c)
       case LakeTaskCommit(cs) => cs
@@ -1884,7 +1894,7 @@ object LakeFormat {
       dv = e.dv.map { case (n, c) => (abs(n), c) },
       blooms = e.blooms.map { case (c, n) => (c, abs(n)) }))
     val fd = fs(dstDir)
-    fd.mkdirs(new HPath(dstDir))
+    FileIO.mkdirs(fd, new HPath(dstDir))
     require(latestVersion(fd, dstDir).isEmpty,
       s"lake clone: $dstDir already holds a lake table — clone " +
         "targets must be fresh directories")
@@ -1958,9 +1968,8 @@ object LakeFormat {
     val v = versionAsOf.orElse(latestVersion(f, srcDir)).getOrElse(
       throw new IllegalArgumentException(
         s"lake branch: no manifest under $srcDir — nothing to fork"))
-    f.mkdirs(new HPath(bDir))
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      f.create(new HPath(bDir, "_branch_base"), false), "UTF-8"))
+      FileIO.create(f, new HPath(bDir, "_branch_base"), false), "UTF-8"))
     try out.write(v.toString) finally out.close()
     val (_, files) = shallowClone(srcDir, bDir, Some(v))
     (v, files)
@@ -2123,9 +2132,8 @@ object LakeFormat {
         s"lake table $dir already carries CHECK ($e) — constraints " +
           "are fixed at CREATE; CTAS into a fresh dir to change one")
       case None =>
-        f.mkdirs(new HPath(dir))
         val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          f.create(new HPath(dir, "_check.sql"), false), "UTF-8"))
+          FileIO.create(f, new HPath(dir, "_check.sql"), false), "UTF-8"))
         try out.write(sql) finally out.close()
     }
   }
@@ -2333,7 +2341,7 @@ object LakeFormat {
     val bb = java.nio.ByteBuffer.allocate(words.length * 8)
     words.foreach(bb.putLong)
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      f.create(new HPath(dir, name), false), "UTF-8"))
+      FileIO.create(f, new HPath(dir, name), false), "UTF-8"))
     try {
       out.write(s"$m $k\n")
       out.write(java.util.Base64.getUrlEncoder.withoutPadding
@@ -2387,9 +2395,8 @@ object LakeFormat {
     require(existing.isEmpty,
       s"lake table $dir already enrolls bloom columns " +
         s"(${existing.mkString(",")}) — enrollment is fixed at CREATE")
-    f.mkdirs(new HPath(dir))
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      f.create(new HPath(dir, "_bloom.cols"), false), "UTF-8"))
+      FileIO.create(f, new HPath(dir, "_bloom.cols"), false), "UTF-8"))
     try out.write(cols.mkString(",")) finally out.close()
   }
 
@@ -2483,7 +2490,7 @@ object LakeFormat {
   def writeNdv(f: FileSystem, dir: String, name: String,
       regs: Array[Byte]): Unit = {
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      f.create(new HPath(dir, name), false), "UTF-8"))
+      FileIO.create(f, new HPath(dir, name), false), "UTF-8"))
     try {
       out.write(s"hll $NdvP\n")
       out.write(java.util.Base64.getUrlEncoder.withoutPadding
@@ -2520,9 +2527,8 @@ object LakeFormat {
     require(existing.isEmpty,
       s"lake table $dir already enrolls ndv columns " +
         s"(${existing.mkString(",")}) — enrollment is fixed at CREATE")
-    f.mkdirs(new HPath(dir))
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      f.create(new HPath(dir, "_ndv.cols"), false), "UTF-8"))
+      FileIO.create(f, new HPath(dir, "_ndv.cols"), false), "UTF-8"))
     try out.write(cols.mkString(",")) finally out.close()
   }
 
@@ -2571,7 +2577,7 @@ object LakeFormat {
   def writeDv(f: FileSystem, dir: String, name: String,
       ordinals: Seq[Long]): Unit = {
     val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-      f.create(new HPath(dir, name), false), "UTF-8"))
+      FileIO.create(f, new HPath(dir, name), false), "UTF-8"))
     try ordinals.foreach { o => out.write(o.toString); out.write('\n') }
     finally out.close()
   }
@@ -4728,8 +4734,8 @@ private[sources] class LakeDataWriter(path: String,
     private val staged = new HPath(path, s"_staging-$queryId/$fileName")
     private val out = {
       val f = openFs()
-      new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(f.create(staged, true), "UTF-8"))
+      new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+        FileIO.create(f, staged, true), "UTF-8"))
     }
 
     def writeRow(record: InternalRow): Unit = {

@@ -3327,4 +3327,123 @@ class LakeSpec extends AnyFunSuite {
       assert(spark.table(t).count() == 8099L)
     } finally LakeFormat.segmentFiles = saved
   }
+
+  test("FileIO on a local table: INSERT OVERWRITE, a merge-on-read DELETE and OPTIMIZE leave no .crc sidecar and no _staging-* entry; rows read back") {
+    val dir = tmp("lake_fileio")
+    spark.conf.set("spark.sql.catalog.glt", "graft.sources.GraftCatalog")
+    spark.sql("DROP TABLE IF EXISTS glt.ns.tfileio")
+    spark.sql(s"""CREATE TABLE glt.ns.tfileio (
+      |  id BIGINT, bucket INT, kscore INT, score DOUBLE, doc_id STRING
+      |) USING lake LOCATION '$dir'
+      |TBLPROPERTIES ('bloomFor'='doc_id', 'ndvFor'='kscore',
+      |  'check'='kscore >= 0')""".stripMargin)
+    val t = "glt.ns.tfileio"
+    det(20000, 8).createOrReplaceTempView("lake_fileio_src")
+    spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_fileio_src")
+    LakeSource.lastDvWrites.set(Nil)
+    spark.sql(s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100")
+    assert(LakeSource.lastDvWrites.get().size == 1,
+      s"expected a merge-on-read delete: ${LakeSource.lastDvWrites.get()}")
+    LakeFormat.optimize(spark, dir, "bucket", files = 4)
+    val names = new java.io.File(dir).list().toSeq
+    // every kind of lake file was written: data, manifests, deletion
+    // vector, bloom and ndv sidecars, enrollment and CHECK sidecars
+    Seq("part-", "_manifest-v", "dv-", "bloom-", "ndv-", "_bloom.cols",
+      "_ndv.cols", "_check.sql").foreach(pre =>
+      assert(names.exists(_.startsWith(pre)), s"no $pre file in $names"))
+    assert(!names.exists(_.endsWith(".crc")),
+      s"checksum sidecars: ${names.filter(_.endsWith(".crc"))}")
+    assert(!names.exists(_.startsWith("_staging-")),
+      s"staging residue: ${names.filter(_.startsWith("_staging-"))}")
+    val r = spark.table(t).agg(count(lit(1)), sum(col("id"))).head
+    val deleted = (3000L to 3100L).sum
+    assert(r.getLong(0) == 19899L && r.getLong(1) == (0L until 20000L).sum -
+      deleted, r.toString)
+    assert(spark.read.format(Lake).option("path", dir)
+      .option("versionAsOf", 0).load().count() == 20000L)
+  }
+
+  test("FileIO.create over a stale Hadoop-written .crc reads back through LakeFormat.fs; overwrite = false on an existing path throws FileAlreadyExistsException") {
+    import graft.sources.FileIO
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path => HPath}
+    def slurp(f: org.apache.hadoop.fs.FileSystem, p: HPath): String = {
+      val in = f.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    def put(o: java.io.OutputStream, s: String): Unit =
+      try o.write(s.getBytes("UTF-8")) finally o.close()
+    val dir = tmp("lake_fileio_crc")
+    val f = LakeFormat.fs(dir)
+    assert(f.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem])
+    val p = new HPath(dir, "sub/side.txt")
+    val crc = new java.io.File(dir, "sub/.side.txt.crc")
+    put(f.create(p, false), "old bytes")
+    assert(crc.exists(), "Hadoop's local filesystem writes a .crc")
+    put(FileIO.create(f, p, true), "new and longer bytes")
+    assert(!crc.exists(), "the stale .crc survived the rewrite")
+    assert(slurp(LakeFormat.fs(dir), p) == "new and longer bytes")
+    val e = intercept[FileAlreadyExistsException](FileIO.create(f, p, false))
+    assert(e.getMessage.contains("side.txt"), e.getMessage)
+    assert(slurp(f, p) == "new and longer bytes")
+    // the same contract on a filesystem that is not the local one
+    WrappedLocalFs.registered(spark) {
+      val wp = new HPath(WrappedLocalFs.uri(s"$dir/w/side.txt"))
+      val wf = LakeFormat.fs(wp.toString)
+      assert(!FileIO.isLocal(wf))
+      put(FileIO.create(wf, wp, false), "wrapped")
+      intercept[FileAlreadyExistsException](FileIO.create(wf, wp, false))
+      assert(slurp(wf, wp) == "wrapped")
+    }
+  }
+
+  test("LakeFormat.versions lists manifest versions by name, sorted, past data and temp files; Nil for a missing directory") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val dir = tmp("lake_versions")
+    Seq("_manifest-v00010.tsv", "_manifest-v00002.tsv", "part-0-1-a.lake",
+      "_manifest-v00000.tsv", "_tmp-manifest-0123456789ab",
+      "._manifest-v00003.tsv.crc", "_manifest-v7.tsv", "_check.sql")
+      .foreach(n => java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, n), Array[Byte](1)))
+    new java.io.File(dir, "_branch-b").mkdir()
+    assert(LakeFormat.versions(LakeFormat.fs(dir), dir) == Seq(0, 2, 10))
+    assert(LakeFormat.latestVersion(LakeFormat.fs(dir), dir).contains(10))
+    val missing = s"$dir/nope"
+    assert(LakeFormat.versions(LakeFormat.fs(missing), missing) == Nil)
+    WrappedLocalFs.registered(spark) {
+      val w = WrappedLocalFs.uri(dir)
+      val wf = LakeFormat.fs(w)
+      assert(wf.isInstanceOf[WrappedLocalFs])
+      assert(LakeFormat.versions(wf, w) == Seq(0, 2, 10))
+      assert(LakeFormat.versions(wf, new HPath(w, "nope").toString) == Nil)
+    }
+  }
+
+  test("a lake table on a filesystem that is not the local one: write, append, DELETE and time travel through FileIO's generic branch") {
+    val dir = tmp("lake_wrapped")
+    val w = WrappedLocalFs.uri(dir)
+    WrappedLocalFs.registered(spark) {
+      det(1000, 2).write.format(Lake).option("path", w)
+        .mode("overwrite").save()
+      det(1000, 2).filter(col("id") < 10).write.format(Lake)
+        .option("path", w).mode("append").save()
+      assert(read(w).count() == 1010L)
+      spark.conf.set("spark.sql.catalog.glt", "graft.sources.GraftCatalog")
+      spark.sql("DROP TABLE IF EXISTS glt.ns.twrapped")
+      spark.sql(s"""CREATE TABLE glt.ns.twrapped (
+        |  id BIGINT, bucket INT, kscore INT, score DOUBLE, doc_id STRING
+        |) USING lake LOCATION '$w'""".stripMargin)
+      LakeSource.lastDvWrites.set(Nil)
+      spark.sql("DELETE FROM glt.ns.twrapped WHERE id >= 300 AND id <= 309")
+      assert(LakeSource.lastDvWrites.get().size == 1,
+        s"expected a merge-on-read delete: ${LakeSource.lastDvWrites.get()}")
+      assert(LakeFormat.versions(LakeFormat.fs(w), w) == Seq(0, 1, 2))
+      assert(read(w).count() == 1000L)
+      assert(spark.read.format(Lake).option("path", w)
+        .option("versionAsOf", 0).load().count() == 1000L)
+    }
+    // the table is plain files on the local disk, readable locally too
+    assert(read(dir).count() == 1000L)
+    assert(read(dir).filter(col("id").between(300, 309)).count() == 0L)
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_staging-")))
+  }
 }

@@ -876,6 +876,27 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.read.schema(schema).csv(dir).count() == 0L)
   }
 
+  test("DSv2 sink opens its filesystem with the session's Hadoop conf, on the driver and in its tasks") {
+    // `wrapfs` is known only through the session conf (with the
+    // filesystem cache off), so a sink that opens its filesystem with
+    // a bare Configuration fails with "No FileSystem for scheme"
+    val dir = tmp("graft_sink_conf")
+    val src = spark.read.format("graft.sources.DetRangeSource")
+      .option("rows", 1000).option("slices", 4).load()
+      .select(col("id"), col("bucket").cast("long").as("bucket"))
+    WrappedLocalFs.registered(spark) {
+      src.write.format("graft.sources.CsvDirSink")
+        .option("path", WrappedLocalFs.uri(dir)).mode("append").save()
+    }
+    val names = new java.io.File(dir).list().toSeq
+    assert(names.contains("_SUCCESS"), names.toString)
+    assert(!names.exists(_.startsWith("_staging-")),
+      s"staging residue after commit: $names")
+    val back = spark.read.schema("id BIGINT, bucket BIGINT").csv(dir)
+    assert(back.count() == 1000L)
+    assert(back.agg(sum(col("id"))).head.getLong(0) == 499500L)
+  }
+
   test("DSv2 sink: a failed APPEND commit leaves no _SUCCESS marker — partial renames are never visible as a committed table") {
     // r15 advisory (CsvDirSink:152): with the previous commit's marker
     // left in place, a rename failure partway through an append's

@@ -209,8 +209,19 @@ class VecDimSpec extends AnyFunSuite {
       operators.Vectors.pqIndexAppend(fresh, "tcomp", "s3")
       val n3 = operators.Vectors.pqIndex(train, "tcomp", rounds = 1)._1.count()
       assert(n3 == (N + 50L) * 32)
+      // a pointer an older writer checksummed: rewritten through
+      // Hadoop's local filesystem, it gets a `.crc` beside it, which the
+      // next compaction's crc-less pointer must not be read against
+      val ptr = new org.apache.hadoop.fs.Path(s"$dir/tcomp/_codes_current")
+      val lfs = ptr.getFileSystem(s128.sparkContext.hadoopConfiguration)
+      val raw = { val in = lfs.open(ptr); try in.readAllBytes() finally in.close() }
+      val o = lfs.create(ptr, true)
+      try o.write(raw) finally o.close()
+      val crc = java.nio.file.Paths.get(dir, "tcomp", "._codes_current.crc")
+      assert(java.nio.file.Files.exists(crc))
       // second compaction absorbs it too and stays idempotent
       assert(operators.Vectors.pqIndexCompact(s128, "tcomp") == (N + 50L) * 32)
+      assert(!java.nio.file.Files.exists(crc), "stale pointer checksum kept")
       assert(operators.Vectors.pqIndex(train, "tcomp", rounds = 1)._1.count()
         == (N + 50L) * 32)
     } finally s128.conf.unset(operators.Vectors.PqIndexDirKey)

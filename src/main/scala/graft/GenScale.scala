@@ -13,11 +13,15 @@ import org.apache.spark.sql.functions._
   * touch (region/nation/customer/supplier/part) are copied from the
   * source fixture byte-for-byte.
   *
-  * Everything is pure hash arithmetic on the row id (ScaleSmoke's
-  * generator discipline): re-running reproduces the corpus bit-for-bit,
-  * so a differential failure is always the ENGINE, never the data.
+  * Everything is pure hash arithmetic on the row id (no RNG):
+  * re-running reproduces the corpus bit-for-bit, so a differential
+  * failure is always the ENGINE, never the data.
   * Doc texts carry ~20% exact-dup groups (5-doc blocks) to keep the
   * dedup family's cluster structure non-trivial at every factor.
+  *
+  * The same corpus is where the registered queries are timed at scale:
+  * `SPARK_GRAFT_SF_DIR=<outDir> runMain graft.Scratch <query...>` (the
+  * operator-twin list is in [[ScaleSmoke]]'s scaladoc).
   *
   * Usage: `runMain graft.GenScale [srcDir] [outDir] [factor]`
   * (defaults /root/testdata/sf0.1 → /tmp/graft_sf1 ×10). */

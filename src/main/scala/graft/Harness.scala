@@ -15,6 +15,8 @@ import graft.operators.Scale
   * planner setup the bench runs. */
 object Harness {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Harness")
+
   /** Core count for every main: `SPARK_GRAFT_CPUS`, default 4. */
   val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
 
@@ -124,11 +126,20 @@ object Harness {
     *     reference, so files (on tmpfs: memory) accumulate until a
     *     late-run GC — the pass-4 slowdowns in the CC family tracked
     *     exactly this. Post-sweep nothing can read an old checkpoint
-    *     again, so an eager delete is safe. */
+    *     again, so an eager delete is safe.
+    * A `Dataset.persist()` outside [[Scale.pin]] that the query did not
+    * unpersist loses its blocks to the RDD pass, but its CacheManager
+    * entry stays: every later run of that plan reads through a stale,
+    * storage-less InMemoryRelation. The sweep cannot drop the entry
+    * without the Dataset, so it logs a WARN naming the query that
+    * grew the entry count and the surplus over the entry-time count. */
   def runEach[T](spark: SparkSession, names: Seq[String])(
       f: String => T): Seq[(String, T)] = {
     val sc = spark.sparkContext
     val kept = sc.getPersistentRDDs.keySet
+    def cacheEntries = org.apache.spark.sql.graftshim.Shim.numCachedEntries(spark)
+    val keptEntries = cacheEntries
+    var seenEntries = keptEntries
     names.map { name =>
       try name -> f(name)
       finally {
@@ -137,6 +148,14 @@ object Harness {
           if (!kept.contains(id)) rdd.unpersist(blocking = true)
         }
         Scale.reapCheckpoints(spark)
+        val entries = cacheEntries
+        if (entries > seenEntries)
+          log.warn(s"$name left ${entries - seenEntries} CacheManager " +
+            s"entries after the sweep (${entries - keptEntries} above " +
+            "runEach entry): a persist() outside Scale.pin that was " +
+            "never unpersisted; later runs of its plan read a stale " +
+            "InMemoryRelation")
+        seenEntries = entries
       }
     }
   }

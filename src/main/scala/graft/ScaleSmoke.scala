@@ -3,16 +3,35 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Scale-smoke harness: times graft's load-bearing operator entry
-  * points, lake DML/maintenance and a few registered queries on
-  * SYNTHETIC data 1-2 orders of magnitude past the sf0.1 fixtures
-  * (default 20M events / 2M docs vs 600k/2k), so the "would the plan
-  * hold at scale" question has measured evidence rather than argument.
-  * Deterministic generators (id arithmetic, no RNG), parquet-backed so
-  * scans/pushdown are real. Prints one `[smoke]` line per op with rows
-  * processed and wall seconds. Not part of the driver contract; run:
+/** Scale-smoke harness: times the surfaces no registered query reaches
+  * at scale — the DSv2 sink write, the micro-batch drain and lake
+  * DML/maintenance — on DetRangeSource data 1-2 orders of magnitude
+  * past the registered queries' fixed sizes (default 20M rows vs
+  * 5k–20k), so the "would the plan hold at scale" question has
+  * measured evidence rather than argument. The `require`s pin each
+  * block's pruning, rewrite and layout claims. Prints one `[smoke]`
+  * line per op with rows processed and wall seconds. Not part of the
+  * driver contract; run:
   *
   *   SPARK_GRAFT_SMOKE_ROWS=20000000 sbt "runMain graft.ScaleSmoke"
+  *
+  * The operator entry points (skew aggregation, as-of joins, dedup
+  * loops, PQ index lifecycle, subquery rewrites, …) are timed at scale
+  * by their registered queries themselves, over a [[GenScale]] corpus:
+  *
+  *   sbt "runMain graft.GenScale <sf0.1 dir> <out> 10"
+  *   SPARK_GRAFT_SF_DIR=<out> sbt "runMain graft.Scratch
+  *     q75_salted_skew_agg q22_window_ranks q90_describe q95_asof_native
+  *     t58_minhash_lsh_pairs t63_dedup_clusters t71_dedup_clusters_star
+  *     t67_context_packing t72_cms_heavy_hitters
+  *     t73_bloom_incremental_dedup t75_boilerplate_ngrams
+  *     v68_kmeans_lloyd v69_semantic_dedup q121_topk_heap_aggregator
+  *     t82_segment_dedup_rebuild v76_pq_ann v83_pq_index_append
+  *     q135_categorize q163_rfm_segments q171_asof_salted_hotkey
+  *     t97_token_pagerank q174_weighted_median t118_rrf_fusion
+  *     v92_centroid_classifier q203_corr_scalar_subquery
+  *     q206_select_scalar_count q213_recursive_cte_reach
+  *     v90_pq_index_compact"
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
@@ -32,439 +51,6 @@ object ScaleSmoke {
 
     val base = java.nio.file.Files.createTempDirectory("graft_smoke").toString
 
-    // ---- synthetic events: skewed event_type (80% 'click'), 100k users
-    spark.range(nEvents).select(
-      col("id").as("event_id"),
-      timestamp_micros(lit(1700000000000000L) + col("id") * 1000L).as("ts"),
-      pmod(xxhash64(col("id")), lit(100000L)).as("user_id"),
-      when(col("id") % 5 === 0, concat(lit("t"), col("id") % 4)).otherwise(lit("click"))
-        .as("event_type"),
-      (col("id") % 1000 / 7.0).as("value"))
-      .write.mode("overwrite").parquet(s"$base/events")
-    val ev = spark.read.parquet(s"$base/events")
-    ev.count() // warm FS cache / JIT before measuring
-
-    // ---- synthetic docs: ~10% exact-dup groups, 12-token texts.
-    // Written under the fixture's table name so Tables.documents()
-    // resolves this dir and REGISTERED queries can run on it directly
-    // (the round-12 t118 smoke below).
-    spark.range(nDocs).select(
-      col("id").as("doc_id"),
-      concat_ws(" ", (0 until 12).map(i =>  // id div 10: 10-doc dup groups
-        concat(lit(s"w$i"), pmod(xxhash64((col("id") / 10).cast("long") + i),
-          lit(5000L)))): _*)
-        .as("text"))
-      .write.mode("overwrite").parquet(s"$base/documents.parquet")
-    val docs = spark.read.parquet(s"$base/documents.parquet")
-    docs.count()
-    // ---- synthetic 16-d embeddings, vec_id ≡ doc_id (the t118/v90
-    // smokes; dot/norm are conf-free array folds, so a narrow dim keeps
-    // generation cheap while candidate volume — the actual scale risk —
-    // stays at nDocs)
-    // label: 10 classes with a per-class bias on component 0 so the v92
-    // probe has signal to learn (pure-hash components would make every
-    // class mean ~0 and the argmax a tie-break artifact)
-    spark.range(nDocs).select(col("id").as("vec_id"),
-      pmod(xxhash64(col("id") + 7), lit(10L)).cast("int").as("label"))
-      .select(col("vec_id"), col("label"),
-        transform(sequence(lit(0), lit(15)), i =>
-          ((pmod(xxhash64(col("vec_id") * 16 + i), lit(1000L)).cast("double")
-            / 500.0 - 1.0)
-            + when(i === 0, col("label").cast("double") / 5.0)
-              .otherwise(lit(0.0))).cast("float")).as("embedding"))
-      .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
-    spark.read.parquet(s"$base/embeddings.parquet").count()
-
-    time("salted skew agg (q75 shape)", nEvents) {
-      operators.Scale.saltedCountSum(ev, col("event_type"), col("value")).count()
-    }
-    time("global row_number (q22 shape)", nEvents) {
-      operators.Scale.globalRowNumber(
-        ev.select(col("value"), col("event_id")), floor(col("value") / 10),
-        Seq(col("value"), col("event_id")), "rn").count()
-    }
-    time("exact quantiles (q90 shape)", nEvents) {
-      operators.Aggregates.sortedQuantiles(ev, col("value"), v => floor(v / 10),
-        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75)).count()
-    }
-    time("native merge as-of (q95)", nEvents) {
-      val purchases = ev.filter(col("event_type") === "t1")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"))
-      plans.AsOf.lastTsAtOrBefore(
-        purchases, clicks, "user_id", "ts", "ts", "last_click_ts").count()
-    }
-    time("minhash+LSH bands (t58 shape)", nDocs) {
-      // signatures + band buckets + colliding-pair count (score step
-      // omitted: pair volume is the scale risk, scoring is per-pair O(1))
-      val shx = operators.Text.shingled(docs.filter(col("doc_id") % 20 < 2))
-      val hashes = (0 until 8).map(i =>
-        min(pmod(col("h") * (2654435761L + i * 40503L) + i, lit(2147483647L)))
-          .as(s"h$i"))
-      val sigs = shx.withColumn("h", pmod(xxhash64(col("s")), lit(2147483647L)))
-        .groupBy(col("doc_id"))
-        .agg(hashes.head, hashes.tail: _*)
-      val banded = sigs.select(col("doc_id"),
-        posexplode(array((0 until 4).map(b =>
-          xxhash64(col(s"h${2 * b}"), col(s"h${2 * b + 1}"))): _*))
-          .as(Seq("band", "bh")))
-      banded.as("x").join(banded.as("y"), Seq("band", "bh"))
-        .filter(col("x.doc_id") < col("y.doc_id")).count()
-    }
-    time("connected components (t63)", nDocs) {
-      val pairs = docs.filter(col("doc_id") % 10 < 2) // dup-heavy slice
-        .groupBy(col("text")).agg(min(col("doc_id")).as("da"), max(col("doc_id")).as("db"))
-        .filter(col("da") < col("db"))
-      operators.Dedup.connectedComponents(pairs.select("da", "db")).count()
-    }
-    time("star-contraction CC (t71)", nDocs) {
-      val pairs = docs.filter(col("doc_id") % 10 < 2)
-        .groupBy(col("text")).agg(min(col("doc_id")).as("da"), max(col("doc_id")).as("db"))
-        .filter(col("da") < col("db"))
-      operators.Dedup.connectedComponentsStar(pairs.select("da", "db")).count()
-    }
-    time("context packing (t67 shape)", nDocs) {
-      // banded global cumsum + bucket offsets over every doc
-      import org.apache.spark.sql.expressions.Window
-      val d = docs.select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n"))
-        .withColumn("_b", (col("doc_id") / 100000).cast("long"))
-      val w = Window.partitionBy(col("_b")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = d.withColumn("_local", sum(col("n")).over(w))
-      val counts = d.groupBy(col("_b").as("_bc")).agg(sum(col("n")).as("_bn"))
-      val offs = operators.Scale.bucketOffsets(counts, "_bc", "_bn", "_off")
-      local.join(broadcast(offs), col("_b") === col("_bc"))
-        .withColumn("wid", expr("(_off + _local - n) div 1024"))
-        .groupBy(col("wid")).agg(count(lit(1))).count()
-    }
-    time("CMS counter build (t72 shape)", nDocs) {
-      // portable token hash + 4-row bucket counters over the full corpus
-      val toks = docs.select(explode(split(col("text"), " ")).as("tok"))
-      functions.GraftFunctions.ensureRegistered(spark)
-      val hashed = toks.withColumn("th",
-        call_function("graft_polyhash", col("tok"), lit(131L), lit(1000000007L)))
-      hashed.select(posexplode(array((0 until 4).map(j =>
-          (col("th") * (1664525L + j * 98765L) + j) % 1000000007L % 512): _*))
-          .as(Seq("j", "bkt")))
-        .groupBy(col("j"), col("bkt")).agg(count(lit(1))).count()
-    }
-    time("bloom dedup gate (t73 shape)", nDocs) {
-      val existing = docs.filter(col("doc_id") % 2 === 0)
-      val incoming = docs.filter(col("doc_id") % 2 === 1)
-      operators.Curation.bloomIncrementalDedup(existing, incoming)
-        .groupBy(col("maybe_dup")).agg(count(lit(1))).count()
-    }
-    time("boilerplate ngrams (t75)", nDocs) {
-      // the REGISTERED t75 function, unmodified (r14: it now carries the
-      // SHUFFLE_HASH frequency join — the prior smoke-local SMJ copy
-      // spent ~70 s sorting the 20M-row shingle stream twice)
-      SparkEntry.queries("t75_boilerplate_ngrams")(spark, base).count()
-    }
-    operators.Scale.releasePins() // t75 pins its shingle frame; untimed cleanup
-    val nVec = nDocs / 10
-    time("kmeans lloyd (v68 shape)", nVec) {
-      // synthetic 16-d embeddings from id arithmetic; 4 centroids, 5
-      // rounds max — measures the E-step crossJoin + M-step posexplode
-      // mean at 100× the fixture vector count
-      val emb = spark.range(nVec).select(col("id").as("vec_id"),
-        transform(sequence(lit(0), lit(15)), i =>
-          (pmod(xxhash64(col("id") * 16 + i), lit(1000L)).cast("double")
-            / 500.0 - 1.0).cast("float")).as("embedding"))
-      val (asg, _) = operators.Vectors.kmeansLloyd(emb, Seq(0L, 1L, 2L, 3L), 5)
-      asg.count()
-    }
-    time("semantic dedup pairs (v69)", nVec) {
-      // per-cluster pair scan bounded by cell size: 2000 clusters of
-      // ~nVec/2000 members → Σ|c|² pairs scored, never corpus O(n²)
-      val emb = spark.range(nVec).select(col("id").as("vec_id"),
-        pmod(col("id"), lit(2000L)).as("label"),
-        transform(sequence(lit(0), lit(15)), i =>
-          (pmod(xxhash64(col("id") * 16 + i), lit(1000L)).cast("double")
-            / 500.0 - 1.0).cast("float")).as("embedding"))
-        .withColumn("nrm",
-          sqrt(call_function("graft_dot", col("embedding"), col("embedding"))))
-      val a = emb.select(col("label"), col("vec_id").as("a_id"),
-        col("embedding").as("ae"), col("nrm").as("an"))
-      val b = emb.select(col("label"), col("vec_id").as("b_id"),
-        col("embedding").as("be"), col("nrm").as("bn"))
-      a.join(b, Seq("label")).filter(col("b_id") < col("a_id"))
-        .withColumn("sim",
-          call_function("graft_dot", col("ae"), col("be")) / (col("an") * col("bn")))
-        .groupBy(col("label"), col("a_id")).agg(max(col("sim")).as("mx"))
-        .filter(col("mx") >= 0.9).count()
-    }
-    time("bounded top-k agg (q121)", nEvents) {
-      // map-side bounded-heap partial agg: shuffle carries ≤3 rows per
-      // (user × task) no matter the group size
-      import org.apache.spark.sql.Encoders
-      ev.select(col("user_id"), col("event_id").as("o_orderkey"),
-          col("value").as("o_totalprice"))
-        .groupBy(col("user_id"))
-        .agg(udaf(operators.Typed.Top3Orders,
-          Encoders.product[operators.Typed.TopEntry])(
-          col("o_orderkey"), col("o_totalprice")).as("top"))
-        .count()
-    }
-    time("segment dedup rebuild (t82)", nDocs) {
-      // ~2 8-token segments per 12-token doc; the dup groups collapse to
-      // one kept occurrence — one segment-keyed window + one doc groupBy
-      operators.Text.segmentDedupRebuild(docs, 8).count()
-    }
-    val nVec64 = nVec / 4
-    // 64-d synthetic embeddings for the full-width vector ops (PQ needs
-    // the 8×8 subspace layout; int8 quantization measures the map stage)
-    val emb64 = spark.range(nVec64).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)), i =>
-        (pmod(xxhash64(col("id") * 64 + i), lit(1000L)).cast("double")
-          / 500.0 - 1.0).cast("float")).as("embedding"))
-    time("PQ encode+ADC query (v76)", nVec64) {
-      // codebook training (2 rounds) + codes-only ADC scan for 10 probes
-      operators.Vectors.pqAdcTopK(emb64, nProbes = 10, k = 10, rounds = 2)
-        .count()
-    }
-    // the round-6 serving split: train ONCE outside the timer (the
-    // pqIndex layout), then measure the ADC scan + re-rank alone — the
-    // per-query cost a 100 TB store actually pays
-    locally {
-      val (codes0, cent0) = operators.Vectors.pqEncode(emb64, rounds = 2)
-      val codes = codes0.cache(); codes.count()
-      val cent = cent0.cache(); cent.count()
-      time("PQ ADC serve-only (v76 split)", nVec64) {
-        operators.Vectors.pqAdcTopKFrom(emb64, codes, cent, nProbes = 10, k = 10)
-          .count()
-      }
-      // round-7 ingest path: encode-only assignment of a 10% "new batch"
-      // against the FIXED codebook — broadcast argmin, no Lloyd rounds,
-      // the existing corpus is never rescanned
-      time("PQ append encode-only (v83)", nVec64 / 10) {
-        val fresh = spark.range(nVec64 / 10).select(
-          (col("id") + lit(10000000L)).as("vec_id"),
-          transform(sequence(lit(0), lit(63)), i =>
-            (pmod(xxhash64(col("id") * 64 + i + 7), lit(1000L)).cast("double")
-              / 500.0 - 1.0).cast("float")).as("embedding"))
-        val cbSq = cent.withColumn("csq",
-          graft.functions.VectorOps.dot(col("cv"), col("cv")))
-        val sv = fresh.select(col("vec_id"),
-            transform(col("embedding"), x => x.cast("double")).as("e"))
-          .select(col("vec_id"), posexplode(transform(sequence(lit(0), lit(15)),
-            i => slice(col("e"), i * 4 + 1, lit(4)))).as(Seq("sub", "sv")))
-          .withColumn("ssq", graft.functions.VectorOps.dot(col("sv"), col("sv")))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id"), col("sub")).orderBy(col("d2"), col("cid"))
-        sv.join(broadcast(cbSq), Seq("sub"))
-          .withColumn("d2", col("ssq") + col("csq")
-            - lit(2.0) * graft.functions.VectorOps.dot(col("sv"), col("cv")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .count()
-      }
-      codes.unpersist(); cent.unpersist()
-    }
-    time("categorize dictionary (q135)", nDocs) {
-      // multi-column dictionary build over the corpus + broadcast-join
-      // application to a disjoint slice: the dict is |vocab|-bounded
-      val cats = docs.select(col("doc_id"),
-        concat(lit("s"), pmod(xxhash64(col("doc_id")), lit(1000L))).as("src"),
-        concat(lit("l"), pmod(col("doc_id"), lit(50L))).as("lang"))
-      val dict = operators.Reshape.buildDictionary(cats, Seq("src", "lang"))
-      operators.Reshape.applyDictionary(
-        cats.filter(col("doc_id") % 7 === 0), dict, Seq("src", "lang"))
-        .groupBy(col("lang_code")).agg(count(lit(1))).count()
-    }
-    time("rfm quintile grid (q163 shape)", nEvents) {
-      // the ROUND-7 production shape: cut base + one multi-metric
-      // quantile pass + three independent globalRowNumber/ntile branches
-      // joined on user_id — 100k-user cardinality, quantile bands ≤64
-      val rfm = operators.Scale.cut(
-        ev.filter(col("event_type") === "click")
-          .groupBy(col("user_id"))
-          .agg(max(col("ts").cast("long")).as("r_s"),
-            count(lit(1)).as("f"), sum(col("value")).as("m")),
-        eager = true)
-      val ms = Seq(col("r_s"), col("f"), col("m"))
-      val edges = operators.Scale.quantileEdges(rfm, ms, 64)
-      val n1 = rfm.agg(count(lit(1)).as("_n"))
-      def quintile(metric: org.apache.spark.sql.Column,
-          es: Array[Double], out: String) =
-        operators.Scale.globalRowNumber(rfm,
-            operators.Scale.bucketsFromEdges(metric, es),
-            Seq(metric, col("user_id")), "_rn")
-          .join(broadcast(n1), lit(true))
-          .select(col("user_id"),
-            operators.Scale.ntileFromRowNumber(col("_rn"), col("_n"), 5).as(out))
-      quintile(col("r_s"), edges(0), "r_q")
-        .join(quintile(col("f"), edges(1), "f_q"), "user_id")
-        .join(quintile(col("m"), edges(2), "m_q"), "user_id")
-        .groupBy(col("r_q"), col("f_q"), col("m_q"))
-        .agg(count(lit(1))).count()
-    }
-    time("salted as-of hot keys (q171)", nEvents) {
-      // 4 keys over nEvents rows (25% weight each) — the workload a
-      // key-clustered as-of serializes; banded form spreads each key
-      // over ≤32 time-band window partitions
-      val lhs = ev.filter(col("event_type") =!= "click")
-        .select(col("event_id"), (col("user_id") % 4).as("hk"), col("ts"))
-      val rhs = ev.filter(col("event_type") === "click")
-        .select((col("user_id") % 4).as("hk"), col("ts"))
-      graft.plans.AsOf.saltedLastTsAtOrBefore(
-        lhs, rhs, "hk", "ts", "ts", "m", bands = 32).count()
-    }
-    time("token pagerank 2 iter (t97 shape)", nDocs) {
-      // ~60k-node / 20M-bigram token digraph: each iteration is one
-      // edges⋈ranks shuffle join + a target-keyed aggregate
-      val d2 = docs.select(col("doc_id"), split(col("text"), " ").as("ts"))
-      val bg = d2.select(explode(transform(sequence(lit(0), size(col("ts")) - 2),
-          i => struct(element_at(col("ts"), i + 1).as("w1"),
-            element_at(col("ts"), i + 2).as("w2")))).as("b"))
-        .select(col("b.w1"), col("b.w2"))
-      // round-7 production shape: the edge aggregate and node table are
-      // cut once — the unrolled plan references them ~10× otherwise
-      val e = operators.Scale.cut(bg.groupBy(col("w1"), col("w2"))
-        .agg((count(lit(1)) * lit(1.0)).as("w")), eager = true)
-      val nodes = operators.Scale.cut(
-        e.select(col("w1").as("tok")).union(e.select(col("w2"))).distinct(),
-        eager = true)
-      val nTot = nodes.agg((count(lit(1)) * lit(1.0)).as("nn"))
-      val outw = e.groupBy(col("w1")).agg(sum(col("w")).as("ow"))
-      val eo = e.join(outw, "w1")
-      def step(prev: org.apache.spark.sql.DataFrame) = {
-        val m = eo.join(prev.withColumnRenamed("tok", "rtok"),
-            col("w1") === col("rtok"))
-          .groupBy(col("w2")).agg(sum(col("r") * col("w") / col("ow")).as("m"))
-        nodes.join(m, col("tok") === col("w2"), "left")
-          .crossJoin(broadcast(nTot))
-          .select(col("tok"), (lit(0.15) / col("nn")
-            + lit(0.85) * coalesce(col("m"), lit(0.0))).as("r"))
-      }
-      val r0 = nodes.crossJoin(broadcast(nTot))
-        .select(col("tok"), (lit(1.0) / col("nn")).as("r"))
-      step(step(r0)).count()
-    }
-    time("weighted median bands (q174)", nEvents) {
-      // ROUND-8 production shape: quantile-band the metric, find each
-      // group's THRESHOLD band on the groups×bands table (≤ 5×64 rows),
-      // window only that band's rows (≈ nEvents/64) — no full-table
-      // sort, no checkpoint; binary-search graft_bucket banding
-      import org.apache.spark.sql.expressions.Window
-      val li = ev.select(col("event_type").as("k"), col("value").as("x"),
-        (col("event_id") % 50 + 1).cast("double").as("wt"), col("event_id"))
-      val edges = operators.Scale.quantileEdges(li, Seq(col("x")), 64).head
-      val withB = li.withColumn("_b",
-        operators.Scale.bucketsFromEdges(col("x"), edges))
-      val wOff = Window.partitionBy(col("k")).orderBy(col("_b"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val cum = withB.groupBy(col("k"), col("_b")).agg(sum(col("wt")).as("_bw"))
-        .withColumn("_off", coalesce(sum(col("_bw")).over(wOff), lit(0.0)))
-        .withColumn("tot", sum(col("_bw")).over(Window.partitionBy(col("k"))))
-      val thr = cum.filter(col("_off") + col("_bw") >= col("tot") / 2)
-        .groupBy(col("k"))
-        .agg(min_by(struct(col("_b"), col("_off"), col("tot")), col("_b")).as("s"))
-        .select(col("k").as("_tk"), col("s._b").as("_tb"),
-          col("s._off").as("_toff"), col("s.tot").as("tot"))
-      val wLoc = Window.partitionBy(col("k"))
-        .orderBy(col("x"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      withB.join(broadcast(thr),
-          col("k") === col("_tk") && col("_b") === col("_tb"))
-        .withColumn("_cwl", sum(col("wt")).over(wLoc))
-        .filter(col("_toff") + col("_cwl") >= col("tot") / 2)
-        .groupBy(col("k")).agg(min(col("x"))).count()
-    }
-    // ---- round-12 serving-lifecycle smokes (VERDICT r11 task 6) ----
-    time("RRF hybrid fusion (t118)", nDocs) {
-      // the REGISTERED t118 function, unmodified, over this dir's 2M
-      // synthetic documents + embeddings (vec_id ≡ doc_id): lexical
-      // side postings-bounded by the 10 probes' terms, semantic side a
-      // broadcast-probe codegen-dot scan, rank-only fusion
-      SparkEntry.queries("t118_rrf_fusion")(spark, base).count()
-    }
-    operators.Scale.releasePins() // t118 pins its token explode; untimed cleanup
-    time("centroid classifier train+infer (v92)", nDocs) {
-      // the REGISTERED v92 function, unmodified: training is one
-      // partial-aggregating pass over nDocs×16 posexploded integer-micro
-      // components, the 10-row model re-enters as a broadcast, inference
-      // is a single corpus scan with the codegen-dot argmax
-      SparkEntry.queries("v92_centroid_classifier")(spark, base).count()
-    }
-    // ---- round-14 decorrelation + recursion smokes (VERDICT r12 task 1,
-    // carried through r13): the r12 subquery family at 20M rows, and the
-    // recursive CTE on a deeper domain ----
-    ev.createOrReplaceTempView("graft_smoke_ev")
-    time("correlated scalar avg (q203 shape)", nEvents) {
-      // the q203 decorrelation at 20M rows / 100k correlation keys: the
-      // correlated avg must become ONE hash aggregate keyed by user_id
-      // joined back — two scans + one join, never a per-row rescan
-      // (20M rescans of a 20M table would be unbounded)
-      spark.sql(
-        """SELECT event_type, count(*) AS n_small
-          |FROM graft_smoke_ev e
-          |WHERE value < (SELECT 0.8 * avg(value) FROM graft_smoke_ev e2
-          |               WHERE e2.user_id = e.user_id)
-          |GROUP BY event_type""".stripMargin).count()
-    }
-    time("select-list scalar count (q206 shape)", nEvents) {
-      // the q206 COUNT-bug rewrite at 20M rows: LEFT OUTER against the
-      // grouped side + empty-group→0 repair; the distinct outer side is
-      // itself one aggregate, so the whole plan is two aggregates + one
-      // join — no per-user residue
-      spark.sql(
-        """SELECT u.user_id,
-          |       (SELECT count(*) FROM graft_smoke_ev e
-          |        WHERE e.user_id = u.user_id AND e.value > 100) AS n_big
-          |FROM (SELECT DISTINCT user_id FROM graft_smoke_ev) u""".stripMargin)
-        .count()
-    }
-    locally {
-      // q213's engine-owned recursion on a domain 10× the sf0.1 fixture:
-      // the binary tree over 2M keys is ~21 levels (sf0.1: ~17) — wall
-      // scales with LEVELS (one broadcast frontier-join job each, the
-      // documented planning-floor cost), not with row volume
-      spark.range(1, 2000001).toDF("k")
-        .write.mode("overwrite").parquet(s"$base/keys")
-      spark.read.parquet(s"$base/keys")
-        .createOrReplaceTempView("graft_smoke_keys")
-      // the reach set is the full 2M-key domain, past the engine's
-      // SECOND loud recursion cap's 1M default (cteRecursionRowLimit);
-      // the harness session sizes it for the certified workloads — at
-      // production scale this cap is the row-volume twin of the level
-      // limit and wants the same deliberate sizing
-      time("recursive CTE reach (q213 shape, ~21 levels)", 2000000L) {
-        spark.sql(
-          """WITH RECURSIVE reach(k) AS (
-            |  SELECT CAST(1 AS BIGINT) AS k
-            |  UNION ALL
-            |  SELECT t.k FROM (
-            |    SELECT k * 2 AS k FROM reach
-            |    UNION ALL SELECT k * 2 + 1 AS k FROM reach) c
-            |  JOIN graft_smoke_keys t ON t.k = c.k)
-            |SELECT count(*) AS n FROM reach""".stripMargin).head().getLong(0)
-      }
-      // the loud cap: a 100-level chain against a 40-level limit must
-      // THROW before runaway, not grind through 100 sequential jobs
-      val prevCap = spark.conf.getOption("spark.sql.cteRecursionLevelLimit")
-      spark.conf.set("spark.sql.cteRecursionLevelLimit", "40")
-      try {
-        spark.range(0, 100).toDF("n")
-          .createOrReplaceTempView("graft_smoke_chain")
-        val failedLoudly =
-          try {
-            spark.sql(
-              """WITH RECURSIVE walk(n) AS (
-                |  SELECT CAST(0 AS BIGINT) AS n
-                |  UNION ALL
-                |  SELECT w.n + 1 FROM walk w
-                |  JOIN graft_smoke_chain c ON c.n = w.n + 1)
-                |SELECT count(*) FROM walk""".stripMargin).head()
-            false
-          } catch { case _: Exception => true }
-        require(failedLoudly, "recursion level cap did not fire")
-        println("[smoke] recursion cap (40) fires loudly on a 100-level " +
-          "chain: ok")
-      } finally prevCap match {
-        case Some(v) => spark.conf.set("spark.sql.cteRecursionLevelLimit", v)
-        case None => spark.conf.unset("spark.sql.cteRecursionLevelLimit")
-      }
-    }
     // ---- round-14 DSv2 write + streaming-read smokes ----
     locally {
       // the q219 sink at 20M rows / 64 tasks: every task stages its own
@@ -500,29 +86,6 @@ object ScaleSmoke {
         spark.read.parquet(mbsOut).count()
       }
     }
-    locally {
-      // v90 segment compaction at nDocs vectors: train-once index (16-d
-      // geometry → 4 subspaces, nDocs×4 code rows), two committed 5%
-      // append segments, then ONE timed compaction — the honest cost is
-      // reading base+appends and writing the single compacted segment
-      // behind the atomic pointer swap
-      val pqDir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_pq").toString
-      spark.conf.set(operators.Vectors.PqIndexDirKey, pqDir)
-      val g = Some(graft.functions.VecGeom(dim = 16))
-      val embAll = spark.read.parquet(s"$base/embeddings.parquet")
-      val train = embAll.filter(col("vec_id") % 20 =!= 0)
-      operators.Vectors.pqIndex(train, "smoke", rounds = 1, geom = g)
-      operators.Vectors.pqIndexAppend(
-        embAll.filter(col("vec_id") % 40 === 0), "smoke", "sa", geom = g)
-      operators.Vectors.pqIndexAppend(
-        embAll.filter(col("vec_id") % 40 === 20), "smoke", "sb", geom = g)
-      time("PQ index compact (v90)", nDocs * 4) { // rows = code rows
-        operators.Vectors.pqIndexCompact(spark, "smoke")
-      }
-      spark.conf.unset(operators.Vectors.PqIndexDirKey)
-      Harness.deleteTree(java.nio.file.Paths.get(pqDir))
-    }
     // ---- round-16 lake table smokes ----
     locally {
       // the q225–q229 lakehouse table at 20M rows / 64 files: commit is
@@ -553,8 +116,7 @@ object ScaleSmoke {
           s"pruning planned ${graft.sources.LakeSource.lastPlannedFiles.get().size} files")
         n
       }
-      // copy-on-write DELETE touching one file: runtime group filtering
-      // must bound the rewrite to ~1 file's rows, not 20M
+      // the SQL DML blocks below address the table through the catalog
       spark.conf.set("spark.sql.catalog.gsmoke", "graft.sources.GraftCatalog")
       spark.sql("DROP TABLE IF EXISTS gsmoke.ns.lake")
       spark.sql(s"""CREATE TABLE gsmoke.ns.lake (

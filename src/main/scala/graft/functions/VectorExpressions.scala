@@ -90,8 +90,8 @@ case class DotProduct(left: Expression, right: Expression)
   * substr)))` HOF formulation (and the DuckDB `list_reduce` oracle), but
   * it runs as one primitive loop over the UTF8String's bytes inside
   * whole-stage codegen instead of O(len) interpreted substr/ascii Column
-  * evaluations — the CMS counter build (t72 shape) is ~8× faster at the
-  * 2M-doc scale smoke. base and p ride as literal-foldable children so
+  * evaluations — the CMS counter build (t72 shape) measured ~8× faster
+  * over 2M synthetic docs. base and p ride as literal-foldable children so
   * the generated loop inlines them. */
 case class StringPolyHash(child: Expression, baseE: Expression, modE: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {

@@ -17,30 +17,27 @@ import graft.Q
   * aggregate is an exact integer sum, so the oracle is value-exact. */
 object CustomSource {
 
-  /** One-shot arm for q219's exit-time sink-dir cleanup hook. */
-  private[operators] val sinkDirHookArmed =
+  /** One-shot arm for the exit-time tmp-dir cleanup hook. */
+  private[operators] val tmpDirHookArmed =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** Every tmp table dir the registered queries have created in this
-    * JVM (q219's sink, the q225–q229 lake tables). The single shutdown
-    * hook sweeps the whole set — a JVM hosting several sessions over
-    * time (test suites, long-lived drivers) creates one
+  /** Every tmp dir the registered queries have created in this JVM
+    * (q219's sink, the lake tables, the default PQ index root). The
+    * single shutdown hook sweeps the whole set — a JVM hosting several
+    * sessions over time (test suites, long-lived drivers) creates one
     * applicationId-keyed dir per session, and a hook that captured only
     * the first session's dir would leak every later one (r15 advisory). */
-  private[operators] val sinkDirsToReap =
+  private[operators] val tmpDirsToReap =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Register an applicationId-keyed tmp dir for exit-time reaping and
-    * arm the single per-JVM sweep hook. */
+  /** Register a tmp dir for exit-time reaping and arm the single
+    * per-JVM sweep hook. */
   private[operators] def registerTmpDir(dir: String): Unit = {
-    sinkDirsToReap.add(dir)
-    if (sinkDirHookArmed.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        sinkDirsToReap.forEach(d => rm(new java.io.File(d)))
-      }))
+    tmpDirsToReap.add(dir)
+    if (tmpDirHookArmed.compareAndSet(false, true))
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        tmpDirsToReap.forEach(d =>
+          graft.Harness.deleteTree(java.nio.file.Paths.get(d)))))
   }
 
   val qDsv2Pushdown: Q = Q(

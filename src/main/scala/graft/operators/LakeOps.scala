@@ -104,12 +104,13 @@ object LakeOps {
       .orderBy(col("bucket"))
   }
 
-  /** SQL `DELETE FROM` through the catalog — the group-based
-    * copy-on-write rewrite ([[graft.sources.LakeRowLevelOperation]]):
-    * `bucket = 7 OR id < 1000` touches every file (bucket = id % 16
-    * interleaves), so this exercises the full rewrite; the
-    * file-aligned/metadata-only fast path is pinned in LakeSpec. The
-    * oracle replays the delete as `WHERE NOT (…)` over `range()`. */
+  /** SQL `DELETE FROM` through the catalog — MERGE-ON-READ since round
+    * 17 ([[graft.sources.LakeDeltaDeleteOperation]]): `bucket = 7 OR
+    * id < 1000` matches rows in every file (bucket = id % 16
+    * interleaves), so every file grows a deletion vector and none is
+    * rewritten; the file-aligned/metadata-only fast path is pinned in
+    * LakeSpec. The oracle replays the delete as `WHERE NOT (…)` over
+    * `range()`. */
   val qLakeDelete: Q = Q(
     "q226_lake_delete",
     """SELECT CAST(id % 16 AS INT) AS bucket, count(*) AS n,

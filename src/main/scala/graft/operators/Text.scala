@@ -688,8 +688,7 @@ object Text {
       .select(col("doc_id"), col("seg_idx").cast("long").as("seg_idx"), col("seg"))
   }
 
-  /** The t82 transform over any (doc_id, text) frame — also driven at
-    * 100× fixture rows by ScaleSmoke. */
+  /** The t82 transform over any (doc_id, text) frame. */
   def segmentDedupRebuild(docs: DataFrame, segTokens: Int): DataFrame = {
     val segs = segmentsOf(docs, segTokens)
     val w = Window.partitionBy(col("seg")).orderBy(col("doc_id"), col("seg_idx"))

@@ -918,16 +918,7 @@ object Vectors {
     val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
     val dir = sys.props("java.io.tmpdir") +
       s"/graft_pq_index_run_${rt.getPid}_${rt.getStartTime}"
-    sys.addShutdownHook {
-      try {
-        val p = java.nio.file.Paths.get(dir)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(q => java.nio.file.Files.deleteIfExists(q))
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+    CustomSource.registerTmpDir(dir)
     dir
   }
 
@@ -1343,8 +1334,8 @@ object Vectors {
       .orderBy(col("probe_id"), col("rn"))
   }
 
-  /** End-to-end (train + query) form — ScaleSmoke and the recall tests
-    * drive this; the registered query goes through [[pqIndex]]. */
+  /** End-to-end (train + query) form — the recall tests drive this;
+    * the registered query goes through [[pqIndex]]. */
   def pqAdcTopK(emb: DataFrame, nProbes: Int, k: Int,
       rounds: Int = 3, geom: Option[VecGeom] = None): DataFrame = {
     val (codes, cent) = pqEncode(emb, rounds, geom)
@@ -1638,8 +1629,8 @@ object Vectors {
     s.read.parquet(dir)
   }
 
-  /** End-to-end (train + query) form — ScaleSmoke and the recall tests
-    * drive this; the registered query serves from [[pqIndex]]. */
+  /** End-to-end (train + query) form — the recall tests drive this;
+    * the registered query serves from [[pqIndex]]. */
   def ivfPqTopK(emb: DataFrame, nProbes: Int, k: Int, nCells: Int,
       rounds: Int = 2, geom: Option[VecGeom] = None): DataFrame = {
     val (codes, centPq) = pqEncode(emb, rounds, geom)

@@ -70,17 +70,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *    by Spark post-scan (the source accepts them only for pruning), so
   *    stats precision affects cost, never correctness.
   *  - **Row-level DML** (`DELETE`/`UPDATE`/`MERGE INTO`) via
-  *    group-based copy-on-write ([[SupportsRowLevelOperations]]):
-  *    Spark rewrites the command into a ReplaceData plan whose scan
-  *    receives the COMMAND CONDITION as pushed filters
-  *    (`GroupBasedRowLevelOperationScanPlanning`), so stats pruning
-  *    narrows the rewrite to files that MIGHT contain matching rows;
-  *    `RowLevelOperationRuntimeGroupFiltering` then narrows further to
-  *    exactly the affected files via a runtime `_file IN (…)` filter
-  *    (the scan is [[SupportsRuntimeV2Filtering]] on the `_file`
-  *    metadata column). Commit replaces exactly the files the scan
-  *    planned — at 100 TB, an UPDATE touching one hot document rewrites
-  *    one file, not the corpus.
+  *    merge-on-read ([[SupportsRowLevelOperations]] returning a
+  *    `SupportsDelta` operation): Spark rewrites the command into a
+  *    WriteDelta plan whose scan carries the row id `(_file, _pos)`
+  *    and receives the COMMAND CONDITION as pushed filters, so stats
+  *    pruning narrows the scan to files that MIGHT contain matching
+  *    rows. Matched rows become deletion-vector growth on their files,
+  *    updated and inserted rows append as new files — zero data files
+  *    are rewritten ([[LakeDeltaDeleteOperation]],
+  *    [[LakeDeltaMutateOperation]]). Group-based copy-on-write
+  *    ([[LakeRowLevelOperation]]: a ReplaceData plan narrowed by a
+  *    runtime `_file IN (…)` filter, replacing exactly the files the
+  *    scan planned) runs only for MERGE under the
+  *    `spark.graft.lake.merge.cow` escape hatch.
   *  - **Metadata-only DELETE** ([[SupportsDeleteV2]]): when the stats
   *    prove every file is entirely-matching or entirely-non-matching,
   *    the delete is a manifest edit — zero tasks, zero rewrite (Spark's
@@ -1759,45 +1761,8 @@ object LakeFormat {
     * advisory); returns the number of files compacted (0 = no-op —
     * fewer than 2 small files). */
   def compactSmall(spark: org.apache.spark.sql.SparkSession, dir: String,
-      underBytes: Long, into: Int): Int = {
-    val f = fs(dir)
-    val v = latestVersion(f, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"lake compact: no manifest under $dir — nothing to compact"))
-    val meta = readManifestMeta(f, dir, v)
-    val small = meta.entries.filter(_.bytes < underBytes)
-    if (small.size < 2) return 0 // nothing to gain: no commit at all
-    val pinned = small.map(_.name).mkString(",")
-    val reader = spark.read.format("graft.sources.LakeSource")
-      .option("path", dir).option("versionAsOf", v)
-      .option("pinnedFiles", pinned)
-    val partTerm = meta.part.map { case (c, u) => s"trunc($c,$u)," }
-      .getOrElse("")
-    val body = meta.cluster match {
-      // clustered: co-locate each bucket into one task (same pre-shuffle
-      // as optimizeCluster) and let the layout-split writer route rows
-      // — the compacted output is one pure file per (partition, bucket)
-      // touched, and the spec (incl. any part term) survives
-      case Some((col, n)) =>
-        import org.apache.spark.sql.functions.{col => fcol}
-        reader.load().repartition(n, bucketColumn(fcol(col), n))
-          .write.option("clusterBy", s"${partTerm}bucket($col,$n)")
-      case None if meta.part.isDefined =>
-        // part-only layout: the writer split keeps files partition-pure
-        reader.load().repartition(math.max(1, into))
-          .write.option("clusterBy", partTerm.stripSuffix(","))
-      case None => reader.load()
-        .repartition(math.max(1, into))
-        .write
-    }
-    body.format("graft.sources.LakeSource")
-      .option("path", dir)
-      .option("replaceFilesOfVersion", v.toString)
-      .option("replaceFiles", pinned)
-      .option("maintenance", "true") // row-preserving: feed skips it
-      .mode("append").save()
-    small.size
-  }
+      underBytes: Long, into: Int): Int =
+    compactFiles(spark, dir, _.bytes < underBytes, _ => math.max(1, into))._1
 
   /** Maintenance: COMPACT TO a TARGET SIZE (round 19 — r18 verdict
     * missing #4): bin-pack every file under ~half the target into
@@ -1815,18 +1780,30 @@ object LakeFormat {
   def compactToSize(spark: org.apache.spark.sql.SparkSession, dir: String,
       targetBytes: Long): (Int, Int) = {
     require(targetBytes > 0, s"compactToSize: target must be > 0 bytes")
+    // files at or above half the target gain ≤2× from recompaction —
+    // the classic bin-packing cutoff that keeps the rewrite from
+    // churning already-right-sized files every run
+    compactFiles(spark, dir, _.bytes < targetBytes / 2, small => math.max(1,
+      math.ceil(small.map(_.bytes).sum.toDouble / targetBytes).toInt))
+  }
+
+  /** The one COMPACT body behind [[compactSmall]] and [[compactToSize]]:
+    * rewrite the latest snapshot's `isSmall` files into `bins(small)`
+    * outputs (advisory on a bucket-clustered table, where the writer
+    * re-splits per bucket) and commit a snapshot-pinned DIFF replace.
+    * Returns (files compacted, bins); (0, 0) = fewer than 2 candidates,
+    * no commit. */
+  private def compactFiles(spark: org.apache.spark.sql.SparkSession,
+      dir: String, isSmall: FileEntry => Boolean,
+      bins: Seq[FileEntry] => Int): (Int, Int) = {
     val f = fs(dir)
     val v = latestVersion(f, dir).getOrElse(
       throw new IllegalArgumentException(
         s"lake compact: no manifest under $dir — nothing to compact"))
     val meta = readManifestMeta(f, dir, v)
-    // files at or above half the target gain ≤2× from recompaction —
-    // the classic bin-packing cutoff that keeps the rewrite from
-    // churning already-right-sized files every run
-    val small = meta.entries.filter(_.bytes < targetBytes / 2)
-    if (small.size < 2) return (0, 0)
-    val bins = math.max(1,
-      math.ceil(small.map(_.bytes).sum.toDouble / targetBytes).toInt)
+    val small = meta.entries.filter(isSmall)
+    if (small.size < 2) return (0, 0) // nothing to gain: no commit at all
+    val n = bins(small)
     val pinned = small.map(_.name).mkString(",")
     val reader = spark.read.format("graft.sources.LakeSource")
       .option("path", dir).option("versionAsOf", v)
@@ -1834,14 +1811,19 @@ object LakeFormat {
     val partTerm = meta.part.map { case (c, u) => s"trunc($c,$u)," }
       .getOrElse("")
     val body = meta.cluster match {
-      case Some((col, n)) =>
+      // clustered: co-locate each bucket into one task (same pre-shuffle
+      // as optimizeCluster) and let the layout-split writer route rows
+      // — the compacted output is one pure file per (partition, bucket)
+      // touched, and the spec (incl. any part term) survives
+      case Some((col, b)) =>
         import org.apache.spark.sql.functions.{col => fcol}
-        reader.load().repartition(n, bucketColumn(fcol(col), n))
-          .write.option("clusterBy", s"${partTerm}bucket($col,$n)")
+        reader.load().repartition(b, bucketColumn(fcol(col), b))
+          .write.option("clusterBy", s"${partTerm}bucket($col,$b)")
       case None if meta.part.isDefined =>
-        reader.load().repartition(bins)
+        // part-only layout: the writer split keeps files partition-pure
+        reader.load().repartition(n)
           .write.option("clusterBy", partTerm.stripSuffix(","))
-      case None => reader.load().repartition(bins).write
+      case None => reader.load().repartition(n).write
     }
     body.format("graft.sources.LakeSource")
       .option("path", dir)
@@ -1849,7 +1831,7 @@ object LakeFormat {
       .option("replaceFiles", pinned)
       .option("maintenance", "true") // row-preserving: feed skips it
       .mode("append").save()
-    (small.size, bins)
+    (small.size, n)
   }
 
   /** SHALLOW CLONE (round 19 — the Delta `CREATE TABLE … SHALLOW
@@ -3267,8 +3249,9 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
   // ---- SupportsDeleteV2: metadata-only delete ------------------------
   // Accepted ONLY when the stats decide every file entirely — then the
   // delete is a manifest edit with zero tasks. Undecidable files make
-  // canDeleteWhere false and Spark falls back to the copy-on-write
-  // rewrite, so this is purely a fast path, never a semantics change.
+  // canDeleteWhere false and Spark falls back to the merge-on-read
+  // (deletion-vector) DELETE, so this is purely a fast path, never a
+  // semantics change.
 
   private def decide(predicates: Array[V2Predicate])
       : Option[Seq[FileEntry] => Option[Seq[FileEntry]]] = {
@@ -4923,7 +4906,8 @@ private[sources] class LakeDataWriter(path: String,
   override def close(): Unit = ()
 }
 
-// ---- row-level operations (group-based copy-on-write) ---------------
+// ---- row-level operations (group-based copy-on-write: MERGE under
+// the spark.graft.lake.merge.cow escape hatch) ----
 
 /** A row-level operation that owns a scan: the scan Spark builds for
   * the command is paired with its write (Spark's own test-table

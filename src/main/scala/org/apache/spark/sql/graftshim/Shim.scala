@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 /** Minimal access shim for `Dataset.ofRows` and the Column↔Expression
   * bridge (both private[sql]) — the standard way Spark-extension
   * libraries materialize a DataFrame from a custom LogicalPlan node or
-  * wrap a custom codegen Expression as a user-facing Column. Nothing
+  * wrap a custom codegen Expression as a user-facing Column — plus the
+  * CacheManager's entry count, which the harness sweep checks. Nothing
   * else from the private surface is touched. */
 object Shim {
   def ofRows(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
@@ -20,4 +21,7 @@ object Shim {
   def expression(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  def numCachedEntries(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
 }

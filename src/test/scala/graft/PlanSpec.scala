@@ -973,6 +973,53 @@ class PinSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
+  /** WARN messages logged on `graft.Harness` while `body` runs. */
+  private def harnessWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "pinspec-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN)
+          got.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val logger = org.apache.logging.log4j.LogManager.getLogger("graft.Harness")
+      .asInstanceOf[Logger]
+    logger.addAppender(app)
+    try body
+    finally { logger.removeAppender(app); app.stop() }
+    import scala.jdk.CollectionConverters._
+    got.asScala.toSeq
+  }
+
+  test("Harness.runEach warns about a stray persist's CacheManager entry, not about a pin") {
+    import graft.operators.Scale
+    val stray = spark.range(700).selectExpr("id", "id * 5 AS s")
+    try {
+      val strayWarn = harnessWarnings {
+        Harness.runEach(spark, Seq("stray_step", "clean_step")) {
+          case "stray_step" => stray.persist().count()
+          case _ => spark.range(10).count()
+        }
+      }
+      // the entry outlives the sweep, and only the query that made it
+      // is named — the clean step after it adds nothing
+      assert(stray.storageLevel != StorageLevel.NONE)
+      assert(strayWarn.size == 1, strayWarn)
+      assert(strayWarn.head.startsWith("stray_step left 1 CacheManager entries"),
+        strayWarn.head)
+      stray.unpersist(blocking = true)
+      val pinWarn = harnessWarnings {
+        Harness.runEach(spark, Seq("pin_step")) { _ =>
+          Scale.pin(spark.range(800).selectExpr("id", "id * 7 AS p")).count()
+        }
+      }
+      assert(pinWarn.isEmpty, pinWarn)
+    } finally stray.unpersist(blocking = true)
+  }
+
   test("releasePins is idempotent and tolerates double-unpersist") {
     val df = spark.range(10).toDF("id").transform(graft.operators.Scale.pin(_))
     df.count()

@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   * skewed lang mix, src0–19, the five event types, dense orderkeys) —
   * at `factor`× the sf0.1 row counts, as ONE parquet file per table so
   * both `Tables.*` and the DuckDB oracle read them exactly like the
-  * driver fixtures. Dimension tables the differential queries never
-  * touch (region/nation/customer/supplier/part) are copied from the
-  * source fixture byte-for-byte.
+  * driver fixtures. Region, nation, customer, supplier and part are
+  * copied from the source fixture byte-for-byte, so they stay at sf0.1
+  * size (the default source) at every factor: a query that reads them
+  * scales only on its other tables — q206's outer side, `customer`,
+  * does not grow.
   *
   * Everything is pure hash arithmetic on the row id (no RNG):
   * re-running reproduces the corpus bit-for-bit, so a differential
@@ -158,7 +160,7 @@ object GenScale {
         + (h(col("id"), 26) % 2500) * lit(86400L)).as("l_shipdate"))
     writeSingle(lineitem, "lineitem")
 
-    // ---- untouched dimensions: copy the fixture files byte-for-byte
+    // ---- dimensions: copy the fixture files byte-for-byte (not scaled)
     Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(src, s"$t.parquet"),

@@ -239,6 +239,20 @@ object Dedup {
     found.crossJoin(broadcast(flags))
   }
 
+  /** Every edge `(a, b)` of `e` in both directions, as rows `(x, y)`:
+    * one generate over the two-element array of direction structs, so
+    * `e` is read once where a union of two projections reads it twice. */
+  private[graft] def undirected(e: DataFrame, a: String, b: String,
+      x: String, y: String): DataFrame =
+    e.select(inline(array(struct(col(a).as(x), col(b).as(y)),
+      struct(col(b).as(x), col(a).as(y)))))
+
+  /** The exact-Jaccard (>= 1/2) near-dup pairs of t54 as an edge list
+    * `(da, db)`: the input of t63's and t71's component resolution. */
+  private[graft] def nearDupEdges(s: SparkSession, d: String): DataFrame =
+    Text.jaccardPairs(Tables.documents(s, d).filter(col("doc_id") < 1000), 1, 2)
+      .select(col("da"), col("db"))
+
   /** Connected components over an undirected edge list `(da, db)` by
     * iterative min-label propagation: every node starts labeled with its
     * own id; each round labels flow across edges and every node keeps the
@@ -271,8 +285,10 @@ object Dedup {
     // guarantee with zero extra jobs, and a lost block recovers by
     // recomputing from the source instead of needing checkpoint files.
     // Only the EVOLVING per-round label state keeps the reliable cut.
-    val und = Scale.pin(edges.select(col("da").as("src"), col("db").as("dst"))
-      .union(edges.select(col("db").as("src"), col("da").as("dst"))))
+    // Both directions in ONE pass over `edges`: a union of two
+    // projections would put the un-cached edge plan (for t63, its whole
+    // pair build) into the pinned plan twice.
+    val und = Scale.pin(undirected(edges, "da", "db", "src", "dst"))
     // SEEDED start (optimization r20): the classic own-id init spends the
     // whole first round computing min(own, min(neighbor)) through the
     // join+union machinery; that closed-neighborhood min is one groupBy
@@ -351,8 +367,7 @@ object Dedup {
     // one star phase: every node u with closed-neighborhood min m links
     // the requested side of its neighborhood to m
     def star(e: DataFrame, large: Boolean): DataFrame = {
-      val und = e.select(col("src").as("u"), col("dst").as("v"))
-        .union(e.select(col("dst").as("u"), col("src").as("v")))
+      val und = undirected(e, "src", "dst", "u", "v")
       val mins = und.groupBy(col("u"))
         .agg(least(min(col("v")), first(col("u"))).as("m"))
       val joined = und.join(mins, Seq("u"))
@@ -453,9 +468,7 @@ object Dedup {
       |SELECT cluster, count(*) AS n_members
       |FROM labels GROUP BY cluster ORDER BY cluster""".stripMargin
   ) { (s, d) =>
-    val pairs = Text.jaccardPairs(
-      Tables.documents(s, d).filter(col("doc_id") < 1000), 1, 2)
-    connectedComponents(pairs.select(col("da"), col("db")))
+    connectedComponents(nearDupEdges(s, d))
       .groupBy(col("lbl").as("cluster")).agg(count(lit(1)).as("n_members"))
       .orderBy(col("cluster"))
   }
@@ -468,9 +481,7 @@ object Dedup {
     "t71_dedup_clusters_star",
     qDedupClusters.oracle.get
   ) { (s, d) =>
-    val pairs = Text.jaccardPairs(
-      Tables.documents(s, d).filter(col("doc_id") < 1000), 1, 2)
-    connectedComponentsStar(pairs.select(col("da"), col("db")))
+    connectedComponentsStar(nearDupEdges(s, d))
       .groupBy(col("lbl").as("cluster")).agg(count(lit(1)).as("n_members"))
       .orderBy(col("cluster"))
   }

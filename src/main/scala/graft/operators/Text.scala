@@ -230,32 +230,46 @@ object Text {
     // MinHash-LSH variant (t58) — on this small-vocab corpus the shingle
     // join degenerates toward all-pairs, which is exactly what LSH avoids.
     jaccardPairs(Tables.documents(s, d).filter(col("doc_id") < 1000), 1, 2)
+      .orderBy(col("da"), col("db"))
   }
 
-  /** Doc pairs with 3-gram-shingle Jaccard >= num/den (compared in
-    * integer arithmetic: i*den >= (na+nb-i)*num). Shared by the t54
-    * oracle query (1/2) and the LSH precision test (7/20). */
+  /** Doc pairs `(da, db, jaccard)`, `da < db`, with 3-gram-shingle
+    * Jaccard >= num/den (compared in integer arithmetic:
+    * i*den >= (na+nb-i)*num). Shared by t54 (1/2), the connected-component
+    * queries t63/t71/t83 (1/2), the LSH tuning curve t119 (0/1: every
+    * intersecting pair) and the LSH precision test (7/20).
+    *
+    * No output order: t54 sorts its own result, and the component
+    * queries only read the pairs as an edge list.
+    *
+    * A doc's shingle count is `n = size(shset)`, carried on each of its
+    * exploded rows and grouped through with the pair, so no per-doc
+    * count aggregate is joined back onto the intersections. `shset` is
+    * already distinct per doc, so this is the doc's number of distinct
+    * shingles PROVIDED `doc_id` is unique in `docs` (every fixture and
+    * GenScale corpus keys `documents` by doc_id); a repeated doc_id
+    * breaks that equality. */
   def jaccardPairs(docs: DataFrame, num: Int, den: Int): DataFrame = {
-    // shx feeds sizes + both self-join sides (3 consumers) — persist,
-    // or the tokenize→shingle→distinct explode runs three times.
-    val shx = shingled(docs)
+    // shx feeds both self-join sides — persist, or the
+    // tokenize→shingle→distinct explode runs twice. Outer explode plus
+    // not-null, as in `shingled`.
+    val shx = shingleSets(docs)
+      .select(col("doc_id"), size(col("shset")).as("n"),
+        explode_outer(col("shset")).as("s"))
+      .filter(col("s").isNotNull)
       .transform(Scale.pin(_))
-    val sizes = shx.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // distinct per-side names: a self-join on the SAME attribute makes
     // Spark warn + fall back to dataset-id disambiguation — works, but
     // explicit is safer than relying on it
-    val a = shx.select(col("doc_id").as("da"), col("s").as("sa"))
-    val b = shx.select(col("doc_id").as("db"), col("s").as("sb"))
-    val inter = a.join(b, col("sa") === col("sb") && col("da") < col("db"))
-      .groupBy(col("da"), col("db")).agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), Seq("da"))
-      .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
+    val a = shx.select(col("doc_id").as("da"), col("n").as("na"), col("s").as("sa"))
+    val b = shx.select(col("doc_id").as("db"), col("n").as("nb"), col("s").as("sb"))
+    a.join(b, col("sa") === col("sb") && col("da") < col("db"))
+      .groupBy(col("da"), col("db"), col("na"), col("nb"))
+      .agg(count(lit(1)).as("i"))
       .filter(col("i") * den >= (col("na") + col("nb") - col("i")) * num)
       .select(col("da"), col("db"),
         round(col("i") * lit(1.0) / (col("na") + col("nb") - col("i")), 6)
           .as("jaccard"))
-      .orderBy(col("da"), col("db"))
   }
 
   /** TF-IDF: top-scoring term per document (tf * ln(N/df)), deterministic

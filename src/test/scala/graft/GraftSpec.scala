@@ -103,6 +103,42 @@ class DedupSpec extends AnyFunSuite {
       s"${falsePositives.size} pairs below jaccard 0.35: ${falsePositives.take(5)}")
   }
 
+  test("jaccardPairs matches the per-doc count-join spelling row for row at sf0.01") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.01")
+    // the operator reads each doc's count off its own row: that is the
+    // per-doc count only when doc_id is unique
+    assert(docs.select("doc_id").distinct().count() == docs.count())
+    // the direct spelling: shingle counts aggregated per doc, then joined
+    // onto the pair intersections on both sides
+    def joined(num: Int, den: Int) = {
+      val shx = operators.Text.shingled(docs)
+      val sizes = shx.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+      shx.select(col("doc_id").as("da"), col("s").as("sa"))
+        .join(shx.select(col("doc_id").as("db"), col("s").as("sb")),
+          col("sa") === col("sb") && col("da") < col("db"))
+        .groupBy(col("da"), col("db")).agg(count(lit(1)).as("i"))
+        .join(sizes.select(col("doc_id").as("da"), col("n").as("na")), Seq("da"))
+        .join(sizes.select(col("doc_id").as("db"), col("n").as("nb")), Seq("db"))
+        .filter(col("i") * den >= (col("na") + col("nb") - col("i")) * num)
+        .select(col("da"), col("db"),
+          round(col("i") * lit(1.0) / (col("na") + col("nb") - col("i")), 6)
+            .as("jaccard"))
+    }
+    try {
+      // the thresholds the callers use: t54/t63/t71/t83, the LSH
+      // precision test, t119's every-intersecting-pair ground truth
+      for ((num, den) <- Seq((1, 2), (7, 20), (0, 1))) {
+        val got = operators.Text.jaccardPairs(docs, num, den)
+        val want = joined(num, den)
+        val n = want.count()
+        assert(n > 0, s"$num/$den: no pairs to compare")
+        assert(got.count() == n, s"$num/$den")
+        assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+          s"$num/$den: rows differ")
+      }
+    } finally operators.Scale.releasePins()
+  }
+
   test("simhash: near-dup docs have small hamming distance") {
     val sims = operators.Dedup.simHashRaw(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

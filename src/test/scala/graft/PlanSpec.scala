@@ -278,6 +278,46 @@ class PlanSpec extends AnyFunSuite {
     assert(hashEx == 1, s"expected 1 user_id hash exchange, got $hashEx")
   }
 
+  test("t63: the pair pipeline is evaluated once") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Sort, Union}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.operators.{Dedup, Scale, Text}
+    Scale.releasePins()
+    try {
+      // t63's fn runs its component loop eagerly and leaves the
+      // undirected edge list pinned: the one-pass frame built here must
+      // resolve to that pin, so this is the plan t63 caches
+      SparkEntry.queries("t63_dedup_clusters")(spark, sf)
+      val und = Dedup.undirected(Dedup.nearDupEdges(spark, sf),
+        "da", "db", "src", "dst")
+      assert(und.queryExecution.withCachedData.isInstanceOf[InMemoryRelation],
+        "t63 did not pin the one-pass undirected edge list")
+      val a = und.queryExecution.analyzed
+      assert(a.collect { case u: Union => u }.isEmpty, a.treeString)
+      // one copy of the pair pipeline: its shingle self-join and its
+      // pair aggregate, once each
+      assert(a.collect { case j: Join => j }.size == 1, a.treeString)
+      assert(a.collect { case g: Aggregate => g }.size == 1, a.treeString)
+
+      // jaccardPairs: no dead sort, no per-doc count aggregate joined back
+      val jp = Text.jaccardPairs(Tables.documents(spark, sf), 1, 2)
+        .queryExecution.optimizedPlan
+      assert(jp.collect { case s: Sort => s }.isEmpty, jp.treeString)
+      val joins = jp.collect { case j: Join => j }
+      assert(joins.size == 1 &&
+        joins.forall(_.collect { case g: Aggregate => g }.isEmpty), jp.treeString)
+
+      // t54 still orders its own output
+      SparkEntry.queries("t54_ngram_jaccard_pairs")(spark, sf)
+        .queryExecution.optimizedPlan match {
+          case s: Sort =>
+            assert(s.global &&
+              s.order.flatMap(_.child.references.map(_.name)) == Seq("da", "db"))
+          case p => fail("t54 must end in a sort on (da, db):\n" + p.treeString)
+        }
+    } finally Scale.releasePins()
+  }
+
   test("t75: boilerplate scoring joins on the shingle — no pair join, no cartesian, HASHED not sorted") {
     val p = plan("t75_boilerplate_ngrams")
     assert(!p.contains("CartesianProduct"), p.take(400))

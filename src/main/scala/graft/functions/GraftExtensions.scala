@@ -63,12 +63,22 @@ object ExistsOverSizeFilter extends Rule[LogicalPlan] {
 }
 
 /** Deployment-grade session wiring for graft's Catalyst extensions
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`): registers
-  * `graft_dot` as a session function usable from SQL text — not just the
-  * Column API — and installs [[ExistsOverSizeFilter]] into the
-  * optimizer. `Tables` still calls `GraftFunctions.ensureRegistered` so
-  * sessions built *without* the conf (e.g. the driver harness's own)
-  * keep working; this class is the path a cluster deployment uses.
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`). It installs:
+  *   - six session functions usable from SQL text, not just the Column
+  *     API: `graft_dot`, `graft_polyhash`, `graft_bloom_agg`,
+  *     `graft_might_contain`, `graft_bucket` and the `graft_char_ngrams`
+  *     generator;
+  *   - the optimizer rule [[ExistsOverSizeFilter]];
+  *   - the planner strategy [[graft.plans.GraftStrategies]] (the native
+  *     merge as-of join);
+  *   - the parser [[graft.plans.GraftSqlParser]] (lake maintenance SQL);
+  *   - the AQE query-stage preparation rule
+  *     [[graft.plans.SmallSortGather]], which sorts a small ORDER BY
+  *     input in one task. It keys on the existing adaptive broadcast
+  *     threshold and adds no conf of its own.
+  * `Tables` still calls `GraftFunctions.ensureRegistered` so sessions
+  * built *without* the conf keep their functions; this class is the path
+  * a cluster deployment uses.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -108,5 +118,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // lake maintenance SQL (OPTIMIZE …, VACUUM … RETAIN n VERSIONS) —
     // a delegating parser that intercepts only that grammar
     ext.injectParser((_, parser) => new graft.plans.GraftSqlParser(parser))
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortGather)
   }
 }

@@ -181,8 +181,8 @@ class CurationSpec extends AnyFunSuite {
   test("writePackedShards: round-trip complete, windows never straddle shards, manifest honest") {
     val docs = Tables.documents(spark, sf)
     val nDocs = docs.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_shards2").toString
+    val dir = TestSession.tmp("graft_shards")
+    val dir2 = TestSession.tmp("graft_shards2")
     try {
       val manifest = operators.Curation.writePackedShards(docs, dir, 4).collect()
       val back = spark.read.parquet(dir)

@@ -28,13 +28,53 @@ object TestSession {
       // (r17 advisory: a q235-local set leaked session conf)
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", tmp("graft_wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  private val made = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  // Runs after Spark's own shutdown hook (priority 40) has stopped the
+  // session, so no stream or job still writes into a directory it
+  // deletes.
+  private lazy val reaper: Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => made.forEach(d => org.apache.commons.io.FileUtils
+        .deleteQuietly(d.toFile)), 20)
+
+  /** Evaluate `body` and count the Spark jobs it started. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "graft_jobs_of"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      // drain the asynchronous listener bus (private[spark], so by reflection)
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A fresh temp directory, deleted with its contents when the test JVM
+    * exits. Every directory a test makes goes through here. */
+  def tmp(prefix: String): String = {
+    reaper
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    made.add(d)
+    d.toString
+  }
 }
 
 /** Golden parity with the reference's own smoke tests (FIXTURES.md §1):

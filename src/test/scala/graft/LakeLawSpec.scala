@@ -26,12 +26,9 @@ import graft.sources.LakeFormat
   * Seeds are FIXED (0..19): the histories are random in shape but the
   * test is deterministic — a failure names its seed and op list. */
 class LakeLawSpec extends AnyFunSuite {
-  import TestSession.spark
+  import TestSession.{spark, tmp}
 
   private val Lake = "graft.sources.LakeSource"
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** net(v) per row value from the cumulative feed, compared against
     * the live table. Row identity = ALL data columns, so an UPDATE's

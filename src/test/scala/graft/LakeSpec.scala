@@ -14,12 +14,9 @@ import graft.sources.{LakeFormat, LakeSource}
   * failed jobs leave the table untouched, and that vacuum kills time
   * travel loudly rather than serving partial snapshots. */
 class LakeSpec extends AnyFunSuite {
-  import TestSession.spark
+  import TestSession.{spark, tmp}
 
   private val Lake = "graft.sources.LakeSource"
-
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def det(rows: Long, slices: Int): DataFrame =
     spark.read.format("graft.sources.DetRangeSource")

@@ -646,6 +646,74 @@ class PlanSpec extends AnyFunSuite {
     assert(rp.count() == o.count())
   }
 
+  // SmallSortGather: a global sort over a small, materialized input
+  // sorts in one task instead of sampling ranges and shuffling by them.
+  // The adaptive broadcast threshold at -1 turns the rule off.
+  private val AqeThreshold = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+
+  private def ruleOff[T](body: => T): T = {
+    spark.conf.set(AqeThreshold, "-1")
+    try body finally spark.conf.unset(AqeThreshold)
+  }
+
+  /** Collect `df`; return its rows, the jobs the collect ran and the
+    * final adaptive plan. */
+  private def run(df: org.apache.spark.sql.DataFrame)
+      : (Seq[org.apache.spark.sql.Row], Int, String) = {
+    val (rows, jobs) = TestSession.jobsOf(df.collect().toSeq)
+    val fin = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    (rows, jobs, fin.toString)
+  }
+
+  private def smallAgg = {
+    import org.apache.spark.sql.functions._
+    Tables.orders(spark, sf).groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
+  }
+
+  test("SmallSortGather: ORDER BY over a small aggregate sorts in one task, two jobs fewer") {
+    val (rows, jobs, fin) = run(smallAgg.orderBy("o_orderpriority"))
+    assert(!fin.contains("rangepartitioning"), fin)
+    assert(fin.contains("Coalesce 1"), fin)
+    val (offRows, offJobs, offFin) = ruleOff(run(smallAgg.orderBy("o_orderpriority")))
+    assert(offFin.contains("rangepartitioning(o_orderpriority"), offFin)
+    assert(rows == offRows)
+    // the range sampling job and the range map stage are gone
+    assert(offJobs - jobs == 2, s"jobs with the rule $jobs, without $offJobs")
+  }
+
+  test("SmallSortGather: registered queries return the same rows in the same order with the rule on and off") {
+    try {
+      for (q <- Seq("q1_pricing_summary", "q123_group_cumcount",
+          "q175_local_supplier_revenue", "t63_dedup_clusters")) {
+        val (on, _, _) = run(SparkEntry.queries(q)(spark, sf))
+        graft.operators.Scale.releasePins()
+        val (off, _, _) = ruleOff(run(SparkEntry.queries(q)(spark, sf)))
+        graft.operators.Scale.releasePins()
+        assert(on.nonEmpty && on == off, q)
+      }
+    } finally graft.operators.Scale.releasePins()
+  }
+
+  test("SmallSortGather: ORDER BY over an explode keeps its range exchange") {
+    import org.apache.spark.sql.functions._
+    val (_, _, fin) = run(smallAgg
+      .select(col("o_orderpriority"), explode(sequence(lit(1), col("n"))).as("k"))
+      .orderBy("o_orderpriority", "k"))
+    assert(fin.contains("rangepartitioning(o_orderpriority"), fin)
+  }
+
+  test("SmallSortGather: a user repartitionByRange over a small aggregate keeps its ranges") {
+    import org.apache.spark.sql.functions._
+    val rp = Tables.orders(spark, sf).groupBy("o_custkey").agg(count(lit(1)).as("n"))
+      .repartitionByRange(7, col("o_custkey"))
+    assert(rp.rdd.getNumPartitions == 7)
+    val (_, _, fin) = run(rp)
+    assert(fin.contains("rangepartitioning(o_custkey#"), fin)
+  }
+
   test("q136: interval overlap plans as a banded equi-join, never theta/cartesian") {
     // the naive overlap theta join degenerates to a per-user cross
     // product; the band form must surface as a plain equi-join on
@@ -823,7 +891,7 @@ class PlanSpec extends AnyFunSuite {
     // The 100 TB layout is a date-partitioned directory tree; a day
     // predicate must prune directories at planning time (PartitionFilters),
     // never run as a post-scan data filter over every file.
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = TestSession.tmp("graft_part")
     try {
       Tables.events(spark, sf)
         .withColumn("day", to_date(col("ts")))

@@ -238,7 +238,7 @@ class PropertySpec extends AnyFunSuite {
     // (fault-tolerant files) instead of localCheckpoint — the cluster
     // knob: executor loss mid-loop must not kill the job. Results must
     // be identical either way; files must actually land in the dir.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    val dir = new java.io.File(TestSession.tmp("graft-ckpt"))
     spark.conf.set(operators.Scale.CheckpointDirKey, dir.getAbsolutePath)
     try {
       val edges = spark.createDataFrame(

@@ -12,10 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an embedded in-process Derby database — a real format("jdbc")
   * round-trip with zero network egress. */
 class SourcesSpec extends AnyFunSuite {
-  import TestSession.{spark, sf}
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+  import TestSession.{spark, sf, tmp}
 
   private lazy val li = Tables.lineitem(spark, sf)
     .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
@@ -579,7 +576,6 @@ class SourcesSpec extends AnyFunSuite {
   test("Tables.t resolves a fixture once per session: no job on a re-read, self-joins, cache substitution, re-resolve on a file or read-conf change") {
     import java.nio.file.{Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val dir = tmp("graft_tables")
@@ -593,25 +589,8 @@ class SourcesSpec extends AnyFunSuite {
       Files.move(part, file, StandardCopyOption.REPLACE_EXISTING)
       Harness.deleteTree(stage)
     }
-    val sc = spark.sparkContext
-    val group = "graft_tables_spec"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    def jobsOf(read: => DataFrame): Int = {
-      jobs.set(0)
-      sc.setJobGroup(group, group)
-      try read finally sc.clearJobGroup()
-      // drain the asynchronous listener bus (private[spark], so by reflection)
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
-      jobs.get
-    }
+    def jobsOf(read: => DataFrame): Int = TestSession.jobsOf(read)._2
     writeFile(spark.range(100).toDF("id"))
-    sc.addSparkListener(listener)
     var cached: DataFrame = null
     try {
       assert(jobsOf(Tables.t(spark, dir, "t")) >= 1, "the first read infers the schema")
@@ -646,7 +625,6 @@ class SourcesSpec extends AnyFunSuite {
         assert(cols() == Seq("a", "b", "c"))
       } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
     } finally {
-      sc.removeSparkListener(listener)
       if (cached != null) cached.unpersist(blocking = true)
       Harness.deleteTree(Paths.get(dir))
     }

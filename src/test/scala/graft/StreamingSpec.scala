@@ -263,10 +263,8 @@ class StreamingSpec extends AnyFunSuite {
       val maxTs = rows.map(_.ts.getTime).max
       val flush = Ev(-1L, new java.sql.Timestamp(maxTs + 10L * 24 * 3600 * 1000),
         999999999L, "click", 0.0)
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_tws_ckpt").toString
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_tws_out").toString
+      val ckpt = TestSession.tmp("graft_tws_ckpt")
+      val outDir = TestSession.tmp("graft_tws_out")
       val stream = MemoryStream[Ev]
       // parquet sink: the one in-repo sink that SUPPORTS checkpoint
       // recovery (the memory sink refuses to restart from a checkpoint)
@@ -560,8 +558,8 @@ class StreamingSpec extends AnyFunSuite {
   test("checkpoint recovery: restarted dedup stream keeps state across the restart") {
     implicit val sqlCtx = spark.sqlContext
     implicit val enc = Encoders.product[Ev]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_out").toString
+    val ckpt = TestSession.tmp("graft_ckpt")
+    val out = TestSession.tmp("graft_ckpt_out")
     // synthetic 1-minute-spaced events so the re-delivered rows are NEWER
     // than the recovered watermark (max(firstBatch.ts) - 1h) and therefore
     // reach the dedup state store — fixture rows spanning weeks would be
@@ -596,8 +594,8 @@ class StreamingSpec extends AnyFunSuite {
   test("stream-stream FULL OUTER join state survives a restart: a pre-restart stray matches a post-restart arrival") {
     implicit val sqlCtx = spark.sqlContext
     implicit val enc = Encoders.product[Ev]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_foj_ck").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_foj_out").toString
+    val ckpt = TestSession.tmp("graft_foj_ck")
+    val out = TestSession.tmp("graft_foj_out")
     def ev(id: Long, hhmm: String, user: Long, tpe: String) =
       Ev(id, java.sql.Timestamp.valueOf(s"2024-06-01 $hhmm:00"), user, tpe, 1.0)
     val stream = MemoryStream[Ev]
@@ -664,9 +662,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("Trigger.AvailableNow: file-source catch-up processes a backlog then stops") {
     import org.apache.spark.sql.streaming.Trigger
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_an_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_an_ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_an_out").toString
+    val srcDir = TestSession.tmp("graft_an_src")
+    val ckpt = TestSession.tmp("graft_an_ckpt")
+    val outDir = TestSession.tmp("graft_an_out")
     val ev = Tables.events(spark, sf).select("event_id", "ts", "user_id", "event_type", "value")
     val (a, b) = (ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1))
     a.write.mode("append").parquet(srcDir)
@@ -695,7 +693,7 @@ class StreamingSpec extends AnyFunSuite {
   test("toTable sink: streaming write lands in a queryable managed table") {
     implicit val sqlCtx = spark.sqlContext
     implicit val enc = Encoders.product[Ev]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_tbl_ckpt").toString
+    val ckpt = TestSession.tmp("graft_tbl_ckpt")
     val rows = eventRows().take(500)
     val stream = MemoryStream[Ev]
     stream.addData(rows)
@@ -847,8 +845,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val enc = Encoders.product[Ev]
     val rows = eventRows().take(40)
     val (first, second) = rows.splitAt(20)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_eos_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_eos_ckpt").toString
+    val outDir = TestSession.tmp("graft_eos_out")
+    val ckpt = TestSession.tmp("graft_eos_ckpt")
     val stream = MemoryStream[Ev]
     val killOn = new java.util.concurrent.atomic.AtomicLong(-1L)
     def start() = stream.toDF().writeStream
@@ -896,8 +894,8 @@ class StreamingSpec extends AnyFunSuite {
     // second start() grows the range to 2500 on the SAME checkpoint and
     // must resume at offset 1000 — appending exactly the new interval.
     import org.apache.spark.sql.streaming.Trigger
-    val out = java.nio.file.Files.createTempDirectory("graft_mbs_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mbs_ckpt").toString
+    val out = TestSession.tmp("graft_mbs_out")
+    val ckpt = TestSession.tmp("graft_mbs_ckpt")
     def run(rows: Int): Unit = {
       val q = spark.readStream.format("graft.sources.DetRangeSource")
         .option("rows", rows).option("rowsPerBatch", 300).load()
@@ -933,8 +931,8 @@ class StreamingSpec extends AnyFunSuite {
     // records the epoch — the exact window where an append-only sink
     // would double the epoch's rows on restart.
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssink_ck").toString
+    val dir = TestSession.tmp("graft_ssink")
+    val ckpt = TestSession.tmp("graft_ssink_ck")
     def start(rows: Int) = spark.readStream
       .format("graft.sources.DetRangeSource")
       .option("rows", rows).option("rowsPerBatch", 250).load()

@@ -123,7 +123,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndex trains once and serves from parquet on later calls") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_test").toString
+    val dir = TestSession.tmp("graft_pq_test")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       val (codes1, cent1) = operators.Vectors.pqIndex(emb128, "t128", rounds = 1)
@@ -146,7 +146,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndexAppend: encode-only append serves new vectors, exactly-once per batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_append").toString
+    val dir = TestSession.tmp("graft_pq_append")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       val train = emb128.filter(col("vec_id") < 200)
@@ -176,7 +176,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndexCompact: one segment after, serving multiset preserved, exactly-once survives") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_compact").toString
+    val dir = TestSession.tmp("graft_pq_compact")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       val train = emb128.filter(col("vec_id") < 200)
@@ -228,7 +228,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndexCompact crash window: orphan segment (crash before pointer swap) is invisible; re-run converges and sweeps it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_crash1").toString
+    val dir = TestSession.tmp("graft_pq_crash1")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       val train = emb128.filter(col("vec_id") < 200)
@@ -279,7 +279,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndexAppend crash window: torn append (codes, no marker) is invisible; the retry rewrites and commits") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_crash2").toString
+    val dir = TestSession.tmp("graft_pq_crash2")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       val train = emb128.filter(col("vec_id") < 200)
@@ -303,7 +303,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("lost _codes_current after compaction fails loudly (no stale fallback)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_crash3").toString
+    val dir = TestSession.tmp("graft_pq_crash3")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       val train = emb128.filter(col("vec_id") < 200)
@@ -323,7 +323,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndexCompact CAS guard: concurrent compactor commit inside the publish window aborts the late compactor, no append lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_cas").toString
+    val dir = TestSession.tmp("graft_pq_cas")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       val train = emb128.filter(col("vec_id") < 200)
@@ -372,7 +372,7 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndexAppend drift re-check flags a shifted ingest distribution") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_drift").toString
+    val dir = TestSession.tmp("graft_pq_drift")
     s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
     try {
       operators.Vectors.pqIndex(emb128, "tdrift", rounds = 1)

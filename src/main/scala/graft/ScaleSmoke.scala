@@ -125,10 +125,10 @@ object ScaleSmoke {
       spark.sql(s"""CREATE TABLE gsmoke.ns.lake (
         |  id BIGINT, bucket INT, kscore INT, score DOUBLE, doc_id STRING
         |) USING lake LOCATION '$lakeDir'""".stripMargin)
-      // (round 17 moved DELETE, and round 18 moved UPDATE, to the
-      // merge-on-read DV path — a 1000-row update against 20M commits
-      // as ONE file's vector growth plus a 1000-row appended file,
-      // ZERO rewrites; the COW-narrowness evidence now rides MERGE)
+      // (round 17 moved DELETE, round 18 UPDATE and round 19 MERGE to
+      // the merge-on-read DV path — a 1000-row update against 20M
+      // commits as ONE file's vector growth plus a 1000-row appended
+      // file, ZERO rewrites)
       time("lake MoR update (zero rewrites)", nEvents / 64) {
         spark.sql("UPDATE gsmoke.ns.lake SET kscore = kscore + 1 " +
           "WHERE id >= 1000 AND id < 2000")
@@ -137,24 +137,6 @@ object ScaleSmoke {
             .lastReplacedFiles.get().size} files")
         require(graft.sources.LakeSource.lastDvWrites.get()
           .map(_._2).sum == 1000L, "MoR update vector growth mismatch")
-        spark.sql("SELECT count(*) FROM gsmoke.ns.lake").head.getLong(0)
-      }
-      // MERGE went merge-on-read in r19; this shape keeps measuring
-      // the group-based COW twin through the escape hatch — the
-      // write-amplification the MoR path (next block) buys out of
-      time("lake COW merge (1-file rewrite)", nEvents / 64) {
-        spark.range(2000, 3000)
-          .selectExpr("id", "CAST(1 AS INT) AS delta")
-          .createOrReplaceTempView("smoke_cow_merge")
-        spark.conf.set("spark.graft.lake.merge.cow", "true")
-        try
-          spark.sql("MERGE INTO gsmoke.ns.lake t USING smoke_cow_merge s " +
-            "ON t.id = s.id " +
-            "WHEN MATCHED THEN UPDATE SET kscore = t.kscore + s.delta")
-        finally spark.conf.unset("spark.graft.lake.merge.cow")
-        require(graft.sources.LakeSource.lastReplacedFiles.get().size == 1,
-          s"rewrite touched ${graft.sources.LakeSource
-            .lastReplacedFiles.get().size} files")
         spark.sql("SELECT count(*) FROM gsmoke.ns.lake").head.getLong(0)
       }
       // metadata-only DELETE: a file-aligned predicate drops whole files

@@ -9,8 +9,8 @@ import graft.sources.LakeFormat
 /** Registered queries q225–q253 over the lakehouse table
   * ([[graft.sources.LakeTable]], rounds 16–19) — the mutable-table
   * surface a shared 100 TB corpus needs on top of write-once files:
-  * data-skipping scans, row-level DML (metadata-only, copy-on-write,
-  * and merge-on-read), time travel by version and timestamp, streaming
+  * data-skipping scans, row-level DML (metadata-only and
+  * merge-on-read), time travel by version and timestamp, streaming
   * read/write, change data feeds, storage-partitioned joins with
   * DDL-born clustering, RESTORE, small-file and target-size compaction,
   * merge-on-read MERGE with exact change feeds (including `WHEN NOT
@@ -300,7 +300,7 @@ object LakeOps {
     * scattered delete (`id % 997 = 13` touches ~2-3 rows in every one
     * of the 8 files) commits as per-file DELETION-VECTOR sidecars —
     * zero data files rewritten (LakeSpec pins lastReplacedFiles empty),
-    * readers anti-filter the ordinals at scan, OPTIMIZE/COW compact the
+    * readers anti-filter the ordinals at scan, OPTIMIZE compacts the
     * vectors away. At 100 TB this is kilobytes of sidecar instead of a
     * wholesale rewrite of every touched file. The oracle replays the
     * delete relationally. */
@@ -630,12 +630,12 @@ object LakeOps {
     * oracle checks not just the post-merge state but that the feed
     * surfaces EXACTLY the matched rows as deletes (with their
     * pre-merge values) and the replacement + not-matched rows as
-    * inserts. Under the old COW path this feed would have been every
-    * row of every touched file (whole-file delete+insert pairs);
-    * merge-on-read makes it the true row-level delta — what a
-    * downstream incremental consumer actually wants from a CDC apply.
-    * LakeSpec pins the protocol half (zero data files rewritten,
-    * vector growth, COW-replay identity, claim survival). */
+    * inserts. A copy-on-write rewrite would have fed every row of
+    * every touched file (whole-file delete+insert pairs); merge-on-read
+    * makes it the true row-level delta — what a downstream incremental
+    * consumer actually wants from a CDC apply. LakeSpec pins the
+    * protocol half (zero data files rewritten, vector growth, identity
+    * with a relational replay, claim survival). */
   val qLakeMergeFeed: Q = Q(
     "q242_lake_merge_feed",
     """WITH m AS (SELECT id FROM range(20000) t(id) WHERE id % 997 = 13),

@@ -19,7 +19,7 @@ import graft.{Q, Tables}
   */
 object Vectors {
 
-  /** TEST HOOK (local-mode-only, like `CsvDirSink.killNextEpochCommit`):
+  /** TEST HOOK (local-mode-only, like `LakeSource.beforeRowLevelCommit`):
     * when set, [[pqIndexCompact]] invokes it ONCE — after its compacted
     * segment is written and the tmp pointer staged, immediately BEFORE
     * the CAS-by-content check + pointer rename. VecDimSpec interleaves a

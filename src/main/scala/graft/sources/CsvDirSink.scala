@@ -33,7 +33,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    LAST (readers gate on it), then deletes the staging dir;
   *  - `BatchWrite.abort()` deletes the staging dir wholesale: a failed
   *    job leaves the destination EXACTLY as it was (SourcesSpec pins
-  *    this with an injected task failure).
+  *    this with a task that fails mid-write).
   *
   * This is the same publish-by-rename/manifest shape as Spark's own
   * FileCommitProtocol and the pqIndex pointer swap
@@ -48,19 +48,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   .option("path", dir).mode("append").save()`; `mode("overwrite")`
   * is supported via `SupportsTruncate` (destination data files are
   * removed in the same driver-side commit that publishes the new ones).
-  * Test hook: `option("failPartition", p)` makes partition p's writer
-  * throw after its first row — the abort-path SourcesSpec pin.
   */
-object CsvDirSink {
-  /** TEST HOOK (local-mode-only, like `DetRangeSource.generatedRows`):
-    * when armed, the NEXT streaming epoch commit completes its publish
-    * and then throws — the crash window where output is on disk but the
-    * engine's checkpoint never records the epoch, forcing a replay of
-    * the SAME epochId on restart. StreamingSpec arms it to prove the
-    * epoch-replacement idempotence; never set in production use. */
-  val killNextEpochCommit = new java.util.concurrent.atomic.AtomicBoolean(false)
-}
-
 class CsvDirSink extends TableProvider {
   // a pure sink: the schema is whatever the written query provides
   override def supportsExternalMetadata(): Boolean = true
@@ -72,13 +60,12 @@ class CsvDirSink extends TableProvider {
       properties: JMap[String, String]): Table = {
     val path = properties.get("path")
     require(path != null && path.nonEmpty, "CsvDirSink requires option(\"path\", ...)")
-    new CsvDirTable(path, schema,
-      Option(properties.get("failPartition")).map(_.toInt))
+    new CsvDirTable(path, schema)
   }
 }
 
-private[sources] class CsvDirTable(path: String, writeSchema: StructType,
-    failPartition: Option[Int]) extends Table with SupportsWrite {
+private[sources] class CsvDirTable(path: String, writeSchema: StructType)
+    extends Table with SupportsWrite {
   override def name(): String = s"csv_dir_sink($path)"
   override def schema(): StructType = writeSchema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -86,18 +73,16 @@ private[sources] class CsvDirTable(path: String, writeSchema: StructType,
       TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE)
   override def newWriteBuilder(
       info: LogicalWriteInfo): WriteBuilder =
-    new CsvDirWriteBuilder(path, info.schema(), info.queryId(),
-      failPartition)
+    new CsvDirWriteBuilder(path, info.schema(), info.queryId())
 }
 
 private[sources] class CsvDirWriteBuilder(path: String, schema: StructType,
-    queryId: String, failPartition: Option[Int])
-    extends WriteBuilder with SupportsTruncate {
+    queryId: String) extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
-      new CsvDirBatchWrite(path, schema, queryId, failPartition, doTruncate)
+      new CsvDirBatchWrite(path, schema, queryId, doTruncate)
     override def toStreaming: StreamingWrite =
       new CsvDirStreamingWrite(path, schema, queryId)
   }
@@ -109,12 +94,10 @@ private[graft] case class CsvFileCommit(fileName: String, rows: Long)
     extends WriterCommitMessage
 
 private[graft] class CsvDirBatchWrite(path: String, schema: StructType,
-    queryId: String, failPartition: Option[Int], truncate: Boolean)
-    extends BatchWrite {
+    queryId: String, truncate: Boolean) extends BatchWrite {
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    new CsvDirWriterFactory(path, schema, queryId, failPartition,
-      LakeFormat.driverConf())
+    new CsvDirWriterFactory(path, schema, queryId, LakeFormat.driverConf())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val f = LakeFormat.fs(path)
@@ -211,13 +194,11 @@ private[graft] class CsvDirBatchWrite(path: String, schema: StructType,
 }
 
 private[sources] class CsvDirWriterFactory(path: String, schema: StructType,
-    queryId: String, failPartition: Option[Int],
-    conf: Broadcast[LakeFormat.SerializableHadoopConf])
+    queryId: String, conf: Broadcast[LakeFormat.SerializableHadoopConf])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
-    new CsvDirDataWriter(path, schema, queryId, partitionId, taskId, conf,
-      failAfterFirstRow = failPartition.contains(partitionId))
+    new CsvDirDataWriter(path, schema, queryId, partitionId, taskId, conf)
 }
 
 /** STREAMING write (round 14 — `STREAMING_WRITE`, the fourth corner of
@@ -229,9 +210,9 @@ private[sources] class CsvDirWriterFactory(path: String, schema: StructType,
   * of epoch N published — named by that attempt's per-epoch MANIFEST
   * (`_epoch-N.manifest`, written as a publish intent before the
   * renames) — before renaming the staged ones in, so a replay of epoch
-  * N (crash after publish, before the engine's checkpoint commit — the
-  * window StreamingSpec drives via [[CsvDirSink.killNextEpochCommit]])
-  * REPLACES its own output instead of appending a duplicate. The
+  * N (crash after publish, before the engine's checkpoint commit —
+  * StreamingSpec rebuilds that state by deleting the epoch's
+  * commit-log entry) REPLACES its own output instead of appending a duplicate. The
   * manifest, not a destination listing, drives the replacement: commit
   * cost is O(this epoch's files), independent of how many epochs the
   * stream has ever published (r14 verdict #2 — the full `listStatus`
@@ -253,7 +234,6 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
         new CsvDirDataWriter(p, sch, qid, partitionId, taskId, conf,
-          failAfterFirstRow = false,
           filePrefix = f"epoch=$epochId%05d-")
     }
   }
@@ -331,9 +311,6 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
         .foreach(st => f.delete(st.getPath, false))
       if (f.listStatus(staging).isEmpty) f.delete(staging, false)
     }
-    if (CsvDirSink.killNextEpochCommit.getAndSet(false))
-      throw new RuntimeException(
-        "injected kill: epoch published, engine commit never recorded")
   }
 
   override def abort(epochId: Long,
@@ -351,7 +328,6 @@ private[sources] class CsvDirStreamingWrite(path: String, schema: StructType,
 private[sources] class CsvDirDataWriter(path: String, schema: StructType,
     queryId: String, partitionId: Int, taskId: Long,
     conf: Broadcast[LakeFormat.SerializableHadoopConf],
-    failAfterFirstRow: Boolean,
     filePrefix: String = "") extends DataWriter[InternalRow] {
   // attempt-unique name: partition + task id (task ids are unique per
   // attempt), so a retry never clobbers the zombie's file; streaming
@@ -385,9 +361,6 @@ private[sources] class CsvDirDataWriter(path: String, schema: StructType,
     }.mkString("", ",", "\n")
     out.write(line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     rows += 1
-    if (failAfterFirstRow)
-      throw new RuntimeException(
-        s"injected failure in partition $partitionId (test hook)")
   }
 
   override def commit(): WriterCommitMessage = {

@@ -131,7 +131,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         new LakeTable(lt.path,
           LakeFormat.readManifestRoot(LakeFormat.fs(lt.path), lt.path, v)
             .schema, // root-only header read (r17 review)
-          Some(v), None, catalogBacked = true)
+          Some(v), catalogBacked = true)
       case null => throw new NoSuchTableException(ident)
       case _ => throw new UnsupportedOperationException(
         s"$ident is not a lake table — only lake tables are versioned")
@@ -152,7 +152,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         val v = LakeFormat.resolveTimestamp(f, lt.path,
           Math.floorDiv(timestampMicros, 1000L))
         new LakeTable(lt.path,
-          LakeFormat.readManifestRoot(f, lt.path, v).schema, Some(v), None,
+          LakeFormat.readManifestRoot(f, lt.path, v).schema, Some(v),
           catalogBacked = true)
       case null => throw new NoSuchTableException(ident)
       case _ => throw new UnsupportedOperationException(
@@ -317,7 +317,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
               s"column (${sch.fieldNames.mkString(", ")})"))
           LakeFormat.writeNdvCols(f, path, cols)
         }
-        new LakeTable(path, sch, None, None, catalogBacked = true)
+        new LakeTable(path, sch, None, catalogBacked = true)
       case "graft.sources.csvdirsink" | "csvdir" =>
         // DDL normalizes OPTIONS(path …) / LOCATION into PROP_LOCATION
         val path = Option(properties.get(TableCatalog.PROP_LOCATION))
@@ -327,8 +327,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "got keys " + properties.keySet().asScala.mkString("[", ",", "]"))
         // catalog tables carry their declared schema; the write path
         // validates the incoming query against it (Spark's own
-        // by-name/by-position resolution), failPartition test hook N/A
-        new CsvDirTable(path, schema, failPartition = None)
+        // by-name/by-position resolution)
+        new CsvDirTable(path, schema)
       case other => throw new IllegalArgumentException(
         s"GraftCatalog supports USING detrange|lake|csvdir " +
           s"(graft.sources.DetRangeSource|LakeSource|CsvDirSink), not '$other'")

@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDeleteV2, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Expressions => V2Expressions, Literal => V2Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -78,11 +78,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    rows. Matched rows become deletion-vector growth on their files,
   *    updated and inserted rows append as new files — zero data files
   *    are rewritten ([[LakeDeltaDeleteOperation]],
-  *    [[LakeDeltaMutateOperation]]). Group-based copy-on-write
-  *    ([[LakeRowLevelOperation]]: a ReplaceData plan narrowed by a
-  *    runtime `_file IN (…)` filter, replacing exactly the files the
-  *    scan planned) runs only for MERGE under the
-  *    `spark.graft.lake.merge.cow` escape hatch.
+  *    [[LakeDeltaMutateOperation]]). This is the only row-level write
+  *    path; data files are rewritten only by OPTIMIZE and COMPACT.
   *  - **Metadata-only DELETE** ([[SupportsDeleteV2]]): when the stats
   *    prove every file is entirely-matching or entirely-non-matching,
   *    the delete is a manifest edit — zero tasks, zero rewrite (Spark's
@@ -110,8 +107,9 @@ import org.apache.spark.unsafe.types.UTF8String
 object LakeSource {
   /** TEST HOOKS (local-mode only, same pattern as
     * `DetRangeSource.generatedRows`): the file names the most recent
-    * scan planned after stats + runtime pruning, the files the most
-    * recent row-level commit replaced, and the files the most recent
+    * scan planned after stats pruning, the files the most recent
+    * small-file COMPACT replaced (emptied by a merge-on-read DML
+    * commit, which replaces none), and the files the most recent
     * metadata-only delete dropped. LakeSpec reads these to pin that
     * pruning/narrowing actually happened — counts the result hash
     * can't see. */
@@ -161,7 +159,6 @@ object LakeSource {
       if (hit != null) return hit
     }
     val v = LakeFormat.readBloom(f, dir, name) // IO outside the lock
-    bloomReadCount.incrementAndGet()
     bloomLru.synchronized {
       if (!bloomLru.containsKey(key)) {
         bloomLru.put(key, v)
@@ -178,10 +175,6 @@ object LakeSource {
     }
     v
   }
-  /** Monotone count of bloom sidecars READ (cache misses) — LakeSpec
-    * pins that probes read only surviving candidates' sidecars. */
-  val bloomReadCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Driver-side LRU over decoded NDV sketches (round 19 continuation)
     * — same immutable-sidecar contract as blooms; 2 KB each, so an
     * entry cap suffices. */
@@ -203,8 +196,8 @@ object LakeSource {
   }
 
   /** TEST HOOK (one-shot): runs at the start of the next
-    * SNAPSHOT-PINNED commit (row-level rewrite or OPTIMIZE) — the
-    * window between the rewrite's snapshot read and its publish.
+    * SNAPSHOT-PINNED commit (row-level DML, OPTIMIZE or COMPACT) — the
+    * window between the commit's snapshot read and its publish.
     * LakeSpec plants a concurrent commit here to pin that the rewrite
     * LOSES loudly instead of silently dropping the concurrent writer's
     * rows. */
@@ -217,14 +210,6 @@ object LakeSource {
     * (zero entries in [[lastReplacedFiles]]). */
   val lastDvWrites =
     new java.util.concurrent.atomic.AtomicReference[Seq[(String, Long)]](Nil)
-
-  /** TEST HOOK (one-shot, mirrors `CsvDirSink.killNextEpochCommit`):
-    * the next streaming epoch commit completes its publish and then
-    * throws — output is on disk but the engine's checkpoint never
-    * records the epoch, forcing a same-epochId replay on restart.
-    * LakeSpec arms it to prove epoch-replacement exactly-once. */
-  val killNextEpochCommit =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
 class LakeSource extends TableProvider {
@@ -370,8 +355,7 @@ class LakeSource extends TableProvider {
         chRoot.colmap)
     }
     new LakeTable(path, schema,
-      travelVersion(path, k => Option(opts.get(k))),
-      Option(opts.get("failPartition")).map(_.toInt))
+      travelVersion(path, k => Option(opts.get(k))))
   }
 }
 
@@ -1455,7 +1439,7 @@ object LakeFormat {
       // cluster spec (a cluster-by write) sets it when it agrees with
       // whatever base entries survive; any other commit inherits the
       // base's spec iff its result keeps the invariant (appends of
-      // unbucketed files or COW rewrites drop it — the layout guarantee
+      // unbucketed files drop it — the layout guarantee
       // is gone). A declared spec that DIFFERS from surviving base
       // entries' spec yields None: pk values minted under two different
       // bucket functions must never be served as one layout.
@@ -1510,11 +1494,11 @@ object LakeFormat {
     f.delete(staging, true)
   }
 
-  /** Snapshot-pinned DIFF commit, shared by the row-level COW rewrite
-    * (MERGE), the deletion-vector DML commit (DELETE/UPDATE), and
-    * small-file compaction: rename the staged task files in, then
-    * publish v+1 = snapshot v with `replaced` dropped and `edits`
-    * applied (deletion-vector growth) plus the new entries, through
+  /** Snapshot-pinned DIFF commit, shared by the deletion-vector DML
+    * commit (DELETE/UPDATE/MERGE) and small-file compaction: rename
+    * the staged task files in, then publish v+1 = snapshot v with
+    * `replaced` dropped and `edits` applied (deletion-vector growth)
+    * plus the new entries, through
     * [[writeManifestCASDiff]] — untouched segments copy through, only
     * the ones holding a touched file are rebuilt. Any other current
     * version aborts loudly and the just-renamed files are unlinked
@@ -2785,7 +2769,7 @@ object LakeFormat {
 }
 
 class LakeTable(private[graft] val path: String, tableSchema: StructType,
-    versionAsOf: Option[Int], failPartition: Option[Int],
+    versionAsOf: Option[Int],
     /** True when this handle was resolved through a [[GraftCatalog]]:
       * only then can a write's [[RequiresDistributionAndOrdering]]
       * request the `bucket(n, col)` transform — Spark resolves the
@@ -2802,9 +2786,9 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
   /** SCHEMA EVOLUTION. `ADD COLUMNS` (round 16): a new nullable column
     * appended at the end — old data files simply lack the trailing
     * column (the reader null-pads short rows), new writes carry it
-    * with stats, and a copy-on-write rewrite upgrades any file it
-    * touches. The evolution itself is a manifest commit: same entries,
-    * widened schema header, CAS-retried like any commutative commit
+    * with stats, and an OPTIMIZE or COMPACT rewrite upgrades any file
+    * it touches. The evolution itself is a manifest commit: same
+    * entries, widened schema header, CAS-retried like any commutative commit
     * ([[LakeFormat.publish]] keeps the header monotone if a
     * stale-schema append races it). `RENAME COLUMN` and `DROP COLUMN`
     * (round 19) are metadata-only too, via column mapping —
@@ -2881,7 +2865,7 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
           s"lake schema evolution on $path lost $attempts CAS races")
       }
     }
-    new LakeTable(path, evolved, None, failPartition, catalogBacked)
+    new LakeTable(path, evolved, None, catalogBacked)
   }
 
   /** RENAME / DROP COLUMN via column mapping (round 19 — r18 verdict
@@ -2953,8 +2937,7 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
           if (idx < 0) {
             require(d.ifExists(), s"lake drop on $path: no column " +
               s"'$name' (${root.schema.fieldNames.mkString(", ")})")
-            return new LakeTable(path, root.schema, None, failPartition,
-              catalogBacked)
+            return new LakeTable(path, root.schema, None, catalogBacked)
           }
           require(root.schema.length > 1,
             s"lake drop on $path: cannot drop the only column")
@@ -3057,7 +3040,7 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
           s"lake rename/drop on $path lost $attempts CAS races")
       }
     }
-    new LakeTable(path, evolved, None, failPartition, catalogBacked)
+    new LakeTable(path, evolved, None, catalogBacked)
   }
 
   LakeTable.requireSupported(tableSchema)
@@ -3159,7 +3142,6 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
           .split(',').iterator.map(_.trim).filter(_.nonEmpty).toSet)
       }
     new LakeWriteBuilder(path, tableSchema, info.schema(), info.queryId(),
-      failPartition,
       // internal option set by LakeFormat.optimize: pins the commit to
       // the snapshot the rewrite read (fixedBase CAS — r16 verdict #1)
       replaceOf, clusterSpec, catalogBacked, replaceFiles,
@@ -3206,26 +3188,14 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
       //    lakehouses moved to merge-on-read first.
       // OPTIMIZE / COMPACT still rewrite vectors away; metadata-only
       // deletes still win outright via SupportsDeleteV2 when the stats
-      // decide. Escape hatch: `spark.graft.lake.merge.cow = true`
-      // plans MERGE group-based copy-on-write — the replay twin the
-      // LakeSpec identity pin compares against.
-      {
-        val cur = currentRoot() // ONE root read per DML plan (r19 #7)
-        info.command() match {
-          case Command.DELETE =>
-            new LakeDeltaDeleteOperation(path, tableSchema)
-          case Command.UPDATE =>
-            new LakeDeltaMutateOperation(path, tableSchema, clusterOf(cur),
-              Command.UPDATE, cur.flatMap(_.colmap), partOf(cur))
-          case Command.MERGE
-              if !org.apache.spark.sql.internal.SQLConf.get
-                .getConfString("spark.graft.lake.merge.cow", "false")
-                .toBoolean =>
-            new LakeDeltaMutateOperation(path, tableSchema, clusterOf(cur),
-              Command.MERGE, cur.flatMap(_.colmap), partOf(cur))
-          case _ => new LakeRowLevelOperation(path, tableSchema,
-            info.command(), failPartition, cur.flatMap(_.colmap))
-        }
+      // decide.
+      info.command() match {
+        case Command.DELETE =>
+          new LakeDeltaDeleteOperation(path, tableSchema)
+        case cmd => // UPDATE or MERGE
+          val cur = currentRoot() // ONE root read per DML plan (r19 #7)
+          new LakeDeltaMutateOperation(path, tableSchema, clusterOf(cur),
+            cmd, cur.flatMap(_.colmap), partOf(cur))
       }
 
   /** The CURRENT snapshot's root — ONE read supplies the cluster
@@ -3601,8 +3571,8 @@ private[sources] class LakeScanBuilder(path: String,
   // 100 TB the difference between a manifest read and a full pass.
   // Complete-or-nothing, refused whenever rows are needed: any pushed
   // filter (all are residual here), GROUP BY, a poisoned stats column
-  // (NaN/Inf file), or a row-level scan (owner present — its planned
-  // set IS the replace set and must stay a real file scan).
+  // (NaN/Inf file), or a row-level scan (owner present — it must read
+  // the rows whose ids the delta commit records).
 
   private def statCol(
       e: org.apache.spark.sql.connector.expressions.Expression)
@@ -3706,8 +3676,8 @@ private[sources] class LakeScanBuilder(path: String,
       },
       pushedSeq, timeTravel, readOptions,
       // key-grouped reporting stays OFF for row-level-operation scans:
-      // their planned set IS the replace set and their runtime `_file`
-      // narrowing may drop whole buckets after partitioning is fixed
+      // reporting it would change the join plan a DML runs against its
+      // source
       root.flatMap(_.cluster).filter(_ => owner.isEmpty),
       root.flatMap(_.colmap))
     owner.foreach(_.configuredScan = scan)
@@ -3796,17 +3766,15 @@ private[sources] class LakeAggScan(tableSchema: StructType,
 
 private[sources] class LakeScan(path: String, tableSchema: StructType,
     required: StructType, val snapshotVersion: Int,
-    entries0: Seq[LakeFormat.FileEntry],
+    entries: Seq[LakeFormat.FileEntry],
     pushed: Seq[FFilter] = Nil,
     timeTravel: Boolean = false,
     readOptions: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     cluster: Option[(String, Int)] = None,
     colmap: Option[LakeFormat.ColMap] = None)
-    extends Scan with Batch with SupportsRuntimeV2Filtering
+    extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  @volatile private var entries = entries0
 
   /** STORAGE-PARTITIONED JOINS (round 17 — r16 verdict missing #4):
     * when the snapshot's layout is bucket-clustered and every surviving
@@ -3824,7 +3792,7 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
     * Reported only when the cluster column survives column pruning —
     * partitioning resolves against the scan OUTPUT. */
   private val keyed: Option[(String, Int)] = cluster.filter { case (c, _) =>
-    entries0.nonEmpty && entries0.forall(_.pk.isDefined) &&
+    entries.nonEmpty && entries.forall(_.pk.isDefined) &&
       required.fieldNames.contains(c)
   }
 
@@ -3835,17 +3803,11 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
         new org.apache.spark.sql.connector.read.partitioning
           .KeyGroupedPartitioning(
             Array(V2Expressions.bucket(nb, c)),
-            entries0.flatMap(_.pk).distinct.size)
+            entries.flatMap(_.pk).distinct.size)
       case None =>
         new org.apache.spark.sql.connector.read.partitioning
           .UnknownPartitioning(0)
     }
-  /** Files this scan actually planned — the groups a row-level commit
-    * must replace. Set at plan time (after runtime narrowing); until
-    * then, the stats-pruned set stands in. */
-  @volatile private[sources] var plannedNames: Seq[String] =
-    entries0.map(_.name)
-
   /** POST-PRUNING statistics from the manifest (exact rows, serialized
     * bytes): a lake dimension filtered under the broadcast threshold
     * auto-broadcasts — the optimizer decision that matters most at
@@ -3865,7 +3827,6 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
     * numeric, and a wrong-typed min would be worse than none. */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
-    val es = entries
     val physOf: String => String = colmap match {
       case Some(cm) =>
         val m = cm.physByLogical(tableSchema)
@@ -3874,9 +3835,9 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
     }
     new org.apache.spark.sql.connector.read.Statistics {
       override val numRows: java.util.OptionalLong =
-        java.util.OptionalLong.of(es.map(_.liveRows).sum)
+        java.util.OptionalLong.of(entries.map(_.liveRows).sum)
       override val sizeInBytes: java.util.OptionalLong =
-        java.util.OptionalLong.of(math.max(1L, es.map(_.bytes).sum))
+        java.util.OptionalLong.of(math.max(1L, entries.map(_.bytes).sum))
       override def columnStats(): java.util.Map[NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
         val out = new java.util.HashMap[NamedReference,
@@ -3890,19 +3851,19 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
             val p = physOf(fld.name)
             // a file written before an ADD COLUMN null-pads it: absent
             // stats = all rows null, which is exactly what it serves
-            val nulls = es.map(e =>
+            val nulls = entries.map(e =>
               e.stats.get(p).map(_.nulls).getOrElse(e.rows)).sum
             val numeric = fld.dataType match {
               case LongType | IntegerType | DoubleType => true
               case _ => false
             }
-            val complete = numeric && es.forall(e =>
+            val complete = numeric && entries.forall(e =>
               e.stats.get(p).exists(s =>
                 (s.min.isDefined && s.max.isDefined) || s.nulls == e.rows))
             def edge(takeMin: Boolean): java.util.Optional[Object] =
               if (!complete) java.util.Optional.empty()
               else {
-                val vs = es.flatMap(e => e.stats.get(p).flatMap(s =>
+                val vs = entries.flatMap(e => e.stats.get(p).flatMap(s =>
                   if (takeMin) s.min else s.max)).map(BigDecimal(_))
                 val v = if (takeMin) vs.minOption else vs.maxOption
                 java.util.Optional.ofNullable(v.map[Object](x =>
@@ -3918,7 +3879,7 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
             // sidecar reads, zero data IO. Reported only when every
             // row-bearing survivor carries a sketch.
             val ndvK = LakeFormat.ndvKey(p)
-            val rowBearing = es.filter(_.rows > 0)
+            val rowBearing = entries.filter(_.rows > 0)
             val ndvEst: java.util.OptionalLong =
               if (rowBearing.isEmpty ||
                   !rowBearing.forall(_.blooms.contains(ndvK)))
@@ -3952,40 +3913,13 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
   override def description(): String =
     s"LakeScan v$snapshotVersion files=${entries.size} $path"
 
-  override def filterAttributes(): Array[NamedReference] =
-    // advertise `_file` as runtime-filterable ONLY when this scan
-    // actually carries it (row-level scans do — the operation's
-    // requiredMetadataAttributes force it into the output). On an
-    // ordinary pruned read, Spark's runtime-filter planning resolves
-    // filterAttributes against the scan output and a missing `_file`
-    // fails the WHOLE query with an AnalysisException (caught by the
-    // r16 join smoke); empty = nothing filterable, rule skips us.
-    if (required.fieldNames.contains("_file"))
-      Array(V2Expressions.column("_file"))
-    else Array.empty
-
-  override def filter(predicates: Array[V2Predicate]): Unit = {
-    // runtime group narrowing: Spark hands us `_file IN (…)` (or `=`)
-    // from the group-filter subquery; anything else is ignored —
-    // runtime filters are an optimization contract, rows are still
-    // filtered post-scan
-    val keep = predicates.flatMap(LakeFormat.v2ToV1).flatMap {
-      case FIn("_file", vs) => Some(vs.map(String.valueOf(_)).toSet)
-      case FEqualTo("_file", v) => Some(Set(String.valueOf(v)))
-      case _ => None
-    }
-    keep.foreach(names => entries = entries.filter(e => names(e.name)))
-  }
-
   override def planInputPartitions(): Array[InputPartition] = {
-    val es = entries
-    plannedNames = es.map(_.name)
-    LakeSource.lastPlannedFiles.set(plannedNames)
+    LakeSource.lastPlannedFiles.set(entries.map(_.name))
     if (keyed.isDefined)
-      es.map(e => LakeKeyedInputPartition(e.name, e.dv.map(_._1),
+      entries.map(e => LakeKeyedInputPartition(e.name, e.dv.map(_._1),
         e.pk.get): InputPartition).toArray
     else
-      es.map(e =>
+      entries.map(e =>
         LakeInputPartition(e.name, e.dv.map(_._1)): InputPartition).toArray
   }
 
@@ -4313,7 +4247,7 @@ private[sources] class LakeReaderFactory(path: String,
 
 private[sources] class LakeWriteBuilder(path: String,
     tableSchema: StructType, writeSchema: StructType, queryId: String,
-    failPartition: Option[Int], replaceOfVersion: Option[Int] = None,
+    replaceOfVersion: Option[Int] = None,
     clusterSpec: Option[(String, Int)] = None,
     catalogBacked: Boolean = false,
     replaceFilesOf: Option[(Int, Set[String])] = None,
@@ -4355,9 +4289,8 @@ private[sources] class LakeWriteBuilder(path: String,
         : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
       Array.empty
     override def toBatch: BatchWrite = new LakeBatchWrite(path,
-      tableSchema, writeSchema, queryId, doTruncate, failPartition,
-      replaceOfVersion, clusterSpec, replaceFilesOf, maintenance, colmap,
-      partSpec)
+      tableSchema, writeSchema, queryId, doTruncate, replaceOfVersion,
+      clusterSpec, replaceFilesOf, maintenance, colmap, partSpec)
     override def toStreaming: StreamingWrite =
       new LakeStreamingWrite(path, tableSchema, writeSchema, queryId,
         clusterSpec, colmap, partSpec)
@@ -4369,8 +4302,8 @@ private[sources] class LakeWriteBuilder(path: String,
   * every file an epoch publishes carries its `epoch=NNNNN-` prefix, and
   * `commit(N, …)` drops any same-prefix entries from the base manifest
   * before adding the new ones, so a replayed epoch (crash after
-  * publish, before the engine's checkpoint commit — the window
-  * [[LakeSource.killNextEpochCommit]] drives in LakeSpec) REPLACES its
+  * publish, before the engine's checkpoint commit — LakeSpec rebuilds
+  * that state by deleting the epoch's commit-log entry) REPLACES its
   * own output instead of appending a duplicate. Because the replacement
   * is a pure function of the base entries, the version CAS retries like
   * an append — concurrent batch commits interleave safely. A replaced
@@ -4403,10 +4336,9 @@ private[sources] class LakeStreamingWrite(path: String,
     new StreamingDataWriterFactory {
       override def createWriter(partitionId: Int, taskId: Long,
           epochId: Long): DataWriter[InternalRow] =
-        new LakeDataWriter(p, ts, ws, qid, partitionId, taskId,
-          failAfterFirstRow = false,
+        new LakeDataWriter(p, ts, ws, qid, partitionId, taskId, conf,
           filePrefix = LakeFormat.epochPrefix(qid, epochId),
-          writeUid = writeUid, conf = conf, clusterSpec = spec,
+          writeUid = writeUid, clusterSpec = spec,
           colmap = cm, partSpec = pt, check = ck, bloomCols = bc,
           ndvCols = nc)
     }
@@ -4428,10 +4360,6 @@ private[sources] class LakeStreamingWrite(path: String,
       // epoch files (the factory split above) and RE-CLAIMS the spec,
       // so a tailed table keeps its storage-partitioned layout (r18)
       cluster = clusterSpec, part = partSpec)
-    if (LakeSource.killNextEpochCommit.compareAndSet(true, false))
-      throw new RuntimeException(
-        "injected lake epoch-commit failure AFTER publish (test hook) — " +
-          s"epoch $epochId will replay on restart")
   }
 
   override def abort(epochId: Long,
@@ -4458,7 +4386,7 @@ private[sources] case class LakeTaskCommit(files: Seq[LakeFileCommit])
 
 private[sources] class LakeBatchWrite(path: String,
     tableSchema: StructType, writeSchema: StructType, queryId: String,
-    truncate: Boolean, failPartition: Option[Int],
+    truncate: Boolean,
     replaceOfVersion: Option[Int] = None,
     clusterSpec: Option[(String, Int)] = None,
     replaceFilesOf: Option[(Int, Set[String])] = None,
@@ -4470,7 +4398,7 @@ private[sources] class LakeBatchWrite(path: String,
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
     new LakeWriterFactory(path, tableSchema, writeSchema, queryId,
-      failPartition, clusterSpec, colmap, partSpec)
+      clusterSpec, colmap, partSpec)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // small-file compaction (round 18): replace EXACTLY the named
@@ -4515,7 +4443,6 @@ private[sources] class LakeBatchWrite(path: String,
 
 private[sources] class LakeWriterFactory(path: String,
     tableSchema: StructType, writeSchema: StructType, queryId: String,
-    failPartition: Option[Int],
     clusterSpec: Option[(String, Int)] = None,
     colmap: Option[LakeFormat.ColMap] = None,
     partSpec: Option[(String, Long)] = None) extends DataWriterFactory {
@@ -4536,17 +4463,17 @@ private[sources] class LakeWriterFactory(path: String,
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(path, tableSchema, writeSchema, queryId,
-      partitionId, taskId, failPartition.contains(partitionId),
-      writeUid = writeUid, conf = conf, clusterSpec = clusterSpec,
+      partitionId, taskId, conf,
+      writeUid = writeUid, clusterSpec = clusterSpec,
       colmap = colmap, partSpec = partSpec, check = check,
       bloomCols = bloomCols, ndvCols = ndvCols)
 }
 
 private[sources] class LakeDataWriter(path: String,
     tableSchema: StructType, writeSchema: StructType, queryId: String,
-    partitionId: Int, taskId: Long, failAfterFirstRow: Boolean,
+    partitionId: Int, taskId: Long,
+    conf: Broadcast[LakeFormat.SerializableHadoopConf],
     filePrefix: String = "", writeUid: String = "w",
-    conf: Broadcast[LakeFormat.SerializableHadoopConf] = null,
     clusterSpec: Option[(String, Int)] = None,
     colmap: Option[LakeFormat.ColMap] = None,
     partSpec: Option[(String, Long)] = None,
@@ -4578,14 +4505,8 @@ private[sources] class LakeDataWriter(path: String,
     }
   }
 
-  // factories capture the driver conf; the null fallback only serves
-  // direct driver-side construction in tests
-  private def openFs(): FileSystem =
-    if (conf != null) fs(path, conf) else fs(path)
-
-  // incoming rows follow writeSchema, which may carry extra plan
-  // columns (e.g. `_file` riding a row-level rewrite); persist exactly
-  // the table columns, located by name
+  // incoming rows follow writeSchema, which may carry columns beyond
+  // the table's; persist exactly the table columns, located by name
   private val srcIdx = tableSchema.fields.map { f =>
     require(writeSchema.fieldNames.contains(f.name),
       s"lake write is missing table column ${f.name}; " +
@@ -4716,7 +4637,7 @@ private[sources] class LakeDataWriter(path: String,
         pk.map(b => s"-b$b").getOrElse("") + ".lake"
     private val staged = new HPath(path, s"_staging-$queryId/$fileName")
     private val out = {
-      val f = openFs()
+      val f = fs(path, conf)
       new java.io.BufferedWriter(new java.io.OutputStreamWriter(
         FileIO.create(f, staged, true), "UTF-8"))
     }
@@ -4814,7 +4735,7 @@ private[sources] class LakeDataWriter(path: String,
           if (bs == null || bs.isEmpty) None
           else {
             val bn = bloomName(physName(i), fileName)
-            writeBloom(openFs(), path, bn, bs)
+            writeBloom(fs(path, conf), path, bn, bs)
             Some(physName(i) -> bn)
           }
         } ++ tableSchema.fields.indices.flatMap { i =>
@@ -4825,7 +4746,7 @@ private[sources] class LakeDataWriter(path: String,
           if (rg == null) None
           else {
             val nn = ndvName(physName(i), fileName)
-            writeNdv(openFs(), path, nn, rg)
+            writeNdv(fs(path, conf), path, nn, rg)
             Some(ndvKey(physName(i)) -> nn)
           }
         }).toMap
@@ -4887,9 +4808,6 @@ private[sources] class LakeDataWriter(path: String,
         s
       }
     sink.writeRow(record)
-    if (failAfterFirstRow)
-      throw new RuntimeException(
-        s"injected lake task failure (partition $partitionId)")
   }
 
   override def commit(): WriterCommitMessage =
@@ -4898,7 +4816,7 @@ private[sources] class LakeDataWriter(path: String,
       bucketSinks.values.asScala.toSeq.sortBy(_.fileName).map(_.commitMsg()))
 
   override def abort(): Unit = {
-    val f = openFs()
+    val f = fs(path, conf)
     if (defaultSink != null) defaultSink.drop(f)
     bucketSinks.values.asScala.foreach(_.drop(f))
   }
@@ -4906,76 +4824,13 @@ private[sources] class LakeDataWriter(path: String,
   override def close(): Unit = ()
 }
 
-// ---- row-level operations (group-based copy-on-write: MERGE under
-// the spark.graft.lake.merge.cow escape hatch) ----
+// ---- row-level operations ----
 
 /** A row-level operation that owns a scan: the scan Spark builds for
   * the command is paired with its write (Spark's own test-table
-  * contract) — COW commits replace the scan's planned files, delta
-  * commits pin the scan's snapshot version. */
+  * contract), and the delta commit pins the scan's snapshot version. */
 private[sources] trait LakeOperationHost {
   @volatile private[sources] var configuredScan: LakeScan = _
-}
-
-private[sources] class LakeRowLevelOperation(path: String,
-    tableSchema: StructType, cmd: Command, failPartition: Option[Int],
-    colmap: Option[LakeFormat.ColMap] = None)
-    extends RowLevelOperation with LakeOperationHost {
-
-  override def command(): Command = cmd
-
-  override def newScanBuilder(
-      options: CaseInsensitiveStringMap): ScanBuilder =
-    LakeScanBuilder.atVersion(path, tableSchema, versionAsOf = None,
-      owner = Some(this))
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch: BatchWrite = new LakeReplaceDataWrite(path,
-          tableSchema, info.schema(), info.queryId(), failPartition,
-          () => configuredScan, colmap)
-      }
-    }
-
-  override def requiredMetadataAttributes(): Array[NamedReference] =
-    Array(V2Expressions.column("_file"))
-
-  override def description(): String = s"LakeRowLevelOperation($cmd)"
-}
-
-private[sources] class LakeReplaceDataWrite(path: String,
-    tableSchema: StructType, writeSchema: StructType, queryId: String,
-    failPartition: Option[Int], scanRef: () => LakeScan,
-    colmap: Option[LakeFormat.ColMap] = None)
-    extends BatchWrite {
-  import LakeFormat._
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new LakeWriterFactory(path, tableSchema, writeSchema, queryId,
-      failPartition, colmap = colmap)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val scan = scanRef()
-    require(scan != null,
-      "lake row-level commit before its scan was configured")
-    val replaced = scan.plannedNames.toSet
-    // NOT commutative: the replacement rows are only valid against the
-    // exact snapshot the rewrite read — publishDiffReplace pins it
-    // (any other current version aborts loudly, never a lost update)
-    // and rebuilds only the segments holding a replaced file (round
-    // 18): a 1-file COW rewrite on a 10⁶-file table writes O(1)
-    // metadata, not a full manifest re-chunk.
-    LakeFormat.publishDiffReplace(fs(path), path, queryId, messages,
-      tableSchema, scan.snapshotVersion, replaced)
-    LakeSource.lastReplacedFiles.set(replaced.toSeq.sorted)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val f = fs(path)
-    f.delete(new HPath(path, s"_staging-$queryId"), true)
-  }
 }
 
 // ---- merge-on-read DELETE (SupportsDelta + deletion vectors, r17) ----
@@ -5225,8 +5080,8 @@ private[sources] class LakeDeltaWriterFactory(path: String,
           "lake delta DELETE writes vectors only — no inserts")
         if (inserts == null)
           inserts = new LakeDataWriter(path, tableSchema, writeSchema,
-            queryId, partitionId, taskId, failAfterFirstRow = false,
-            writeUid = writeUid, conf = conf, clusterSpec = clusterSpec,
+            queryId, partitionId, taskId, conf,
+            writeUid = writeUid, clusterSpec = clusterSpec,
             colmap = colmap, partSpec = partSpec, check = check,
             bloomCols = bloomCols, ndvCols = ndvCols)
         inserts.write(row)
@@ -5263,10 +5118,9 @@ private[sources] class LakeDeltaWriterFactory(path: String,
   *  - a DELETION-VECTOR GROWN by v emits exactly the newly covered
   *    ordinals as `delete` (old rows still readable — vectors are
   *    immutable sidecars, the base file is untouched);
-  *  - a copy-on-write rewrite (the `spark.graft.lake.merge.cow`
-  *    escape hatch; the r16-era DML) therefore surfaces as whole-file
-  *    delete+insert pairs — honest file-diff semantics without
-  *    row-lineage tracking (no update_pre/postimage); MAINTENANCE
+  *  - the feed is a file diff without row-lineage tracking (no
+  *    update_pre/postimage): an overwrite surfaces as the old files'
+  *    rows deleted and the new files' rows inserted; MAINTENANCE
   *    rewrites (OPTIMIZE / COMPACT — row-preserving by construction)
   *    are header-flagged and emit NOTHING (r19; r18 ADVICE).
   *
@@ -5402,8 +5256,8 @@ private[sources] class LakeChangesTable(val path: String,
   * offsets are manifest versions exactly like the append-only tail
   * ([[LakeMicroBatchStream]]), but each micro-batch serves the version
   * range's CHANGES ([[LakeChanges.partitions]]): inserts, deletes from
-  * grown vectors, and COW delete+insert pairs, instead of failing
-  * loudly on rewrites. This is what lets a pipeline follow a CURATED
+  * grown vectors, and whole-file delete+insert pairs from overwrites,
+  * instead of failing loudly on rewrites. This is what lets a pipeline follow a CURATED
   * corpus — one that gets deduplicated, redacted, and re-clustered
   * while being consumed — with exactly-once incremental recompute:
   * the engine's checkpoint owns the version cursor, replay of a batch

@@ -67,6 +67,26 @@ object TestSession {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Identity on a LONG column that throws in partition `p` once that
+    * partition has passed its first row: a task that fails part-way
+    * through a write, injected from outside the code under test.
+    * Nondeterministic, so the optimizer neither folds nor moves it. */
+  def failInPartition(p: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf(new FailAfterFirstRow(p)).asNondeterministic()
+
+  /** Forget that a streaming query committed micro-batch `batch`: delete
+    * its commit-log entry (and checksum) under checkpoint `ckpt`. The
+    * batch's output stays published, and the next start of the query
+    * replays the batch under the same id — the state a crash between
+    * a sink's commit and the engine's commit-log write leaves. */
+  def forgetCommit(ckpt: String, batch: Long): Unit = {
+    val entry = new java.io.File(s"$ckpt/commits/$batch")
+    assert(entry.isFile, s"no commit-log entry for batch $batch in $ckpt")
+    java.nio.file.Files.delete(entry.toPath)
+    java.nio.file.Files.deleteIfExists(
+      new java.io.File(s"$ckpt/commits/.$batch.crc").toPath)
+  }
+
   /** A fresh temp directory, deleted with its contents when the test JVM
     * exits. Every directory a test makes goes through here. */
   def tmp(prefix: String): String = {
@@ -74,6 +94,20 @@ object TestSession {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     made.add(d)
     d.toString
+  }
+}
+
+/** The function behind [[TestSession.failInPartition]]. Each task
+  * deserializes its own copy, so `seen` counts one task's rows. */
+final class FailAfterFirstRow(p: Int) extends (Long => Long) with Serializable {
+  private var seen = 0L
+  def apply(id: Long): Long = {
+    if (org.apache.spark.TaskContext.getPartitionId() == p) {
+      seen += 1
+      if (seen > 1)
+        throw new RuntimeException(s"injected task failure in partition $p")
+    }
+    id
   }
 }
 

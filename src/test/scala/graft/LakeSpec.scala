@@ -9,7 +9,7 @@ import graft.sources.{LakeFormat, LakeSource}
 /** Protocol pins for the round-16 lakehouse table
   * ([[graft.sources.LakeTable]]) — the invariants the q225–q229 result
   * hashes can't see: how many files a scan PLANNED (data skipping), how
-  * many a rewrite REPLACED (copy-on-write narrowness), that concurrent
+  * many a commit REPLACED (none under merge-on-read DML), that concurrent
   * commits resolve as retry-or-loud-abort (never a lost update), that
   * failed jobs leave the table untouched, and that vacuum kills time
   * travel loudly rather than serving partial snapshots. */
@@ -173,9 +173,10 @@ class LakeSpec extends AnyFunSuite {
       .mode("overwrite").save()
     val f = LakeFormat.fs(dir)
     val v0 = LakeFormat.latestVersion(f, dir).get
+    // partition 2's task fails after its writer has staged a row
     intercept[Exception] {
-      det(1000, 4).write.format(Lake).option("path", dir)
-        .option("failPartition", "2").mode("append").save()
+      det(1000, 4).withColumn("id", TestSession.failInPartition(2)(col("id")))
+        .write.format(Lake).option("path", dir).mode("append").save()
     }
     assert(LakeFormat.latestVersion(f, dir).contains(v0),
       "a failed job published a manifest version")
@@ -304,9 +305,10 @@ class LakeSpec extends AnyFunSuite {
   test("streaming write: a killed epoch commit replays as a manifest-level REPLACEMENT, no dup/loss") {
     // exactly-once ingest into the lake table: every epoch's files carry
     // an epoch prefix; a replayed epoch drops its prior attempt's
-    // entries from the manifest before adding its own. The injected kill
-    // fires AFTER the publish, BEFORE the engine records the epoch — the
-    // window where an append-only sink would double the epoch's rows.
+    // entries from the manifest before adding its own. Deleting the
+    // epoch's commit-log entry rebuilds a crash AFTER the publish,
+    // BEFORE the engine records the epoch — the window where an
+    // append-only sink would double the epoch's rows.
     import org.apache.spark.sql.streaming.Trigger
     val dir = tmp("lake_stream")
     val ckpt = tmp("lake_stream_ck")
@@ -321,17 +323,16 @@ class LakeSpec extends AnyFunSuite {
     val q1 = start(500) // epochs 0,1
     assert(q1.awaitTermination(120000))
     assert(read(dir).count() == 500L)
-    LakeSource.killNextEpochCommit.set(true)
-    val q2 = start(750) // epoch 2 (rows 500..749) publishes, then "crashes"
-    intercept[Exception] { q2.awaitTermination(120000) }
-    try q2.stop() catch { case _: Exception => () }
+    val q2 = start(750) // epoch 2 (rows 500..749)
+    assert(q2.awaitTermination(120000))
+    TestSession.forgetCommit(ckpt, 2)
     // torn state: epoch 2's files on disk AND in the latest manifest,
     // but the engine never recorded the epoch
     val f = LakeFormat.fs(dir)
     val vTorn = LakeFormat.latestVersion(f, dir).get
     val tornEntries = LakeFormat.readManifest(f, dir, vTorn)._2
       .count(_.name.contains("-epoch=00002-")) // prefix = q=<queryId>-epoch=…
-    assert(tornEntries > 0, "kill fired before the publish — wrong window")
+    assert(tornEntries > 0, "epoch 2 published nothing — wrong window")
     val q3 = start(750) // replay of epoch 2 under the SAME id
     assert(q3.awaitTermination(120000))
     val back = read(dir)
@@ -1803,27 +1804,24 @@ class LakeSpec extends AnyFunSuite {
       "OPTIMIZE left deletion vectors behind")
   }
 
-  test("merge-on-read MERGE INTO: scattered merge writes vectors + appends, zero rewrites; identical to the COW replay; feed = exactly the matched+inserted rows (r19 — r18 verdict #1)") {
-    def runMerge(t: String): Unit = {
-      det(20000, 8).createOrReplaceTempView("mormerge_src")
-      spark.sql(s"INSERT OVERWRITE $t SELECT * FROM mormerge_src")
-      // source: ~20 scattered matches across all 8 files + 100 new ids
-      spark.range(0, 20100).filter(col("id") % 997 === 13 ||
-          col("id") >= 20000)
-        .select(col("id"), (col("id") % 7).cast("int").as("delta"))
-        .createOrReplaceTempView("mormerge_delta")
-      spark.sql(s"""MERGE INTO $t t USING mormerge_delta s ON t.id = s.id
-        |WHEN MATCHED AND t.bucket = 3 THEN DELETE
-        |WHEN MATCHED THEN UPDATE SET kscore = t.kscore + s.delta
-        |WHEN NOT MATCHED THEN INSERT (id, bucket, kscore, score, doc_id)
-        |  VALUES (s.id, CAST(s.id % 16 AS INT), CAST(s.delta AS INT),
-        |          CAST(0.0 AS DOUBLE), 'ins')""".stripMargin)
-    }
+  test("merge-on-read MERGE INTO: scattered merge writes vectors + appends, zero rewrites; identical to a relational replay; feed = exactly the matched+inserted rows (r19 — r18 verdict #1)") {
     val dir = tmp("lake_mormerge")
     val t = catalogTable("tmormerge", dir)
     LakeSource.lastReplacedFiles.set(Seq("sentinel"))
     LakeSource.lastDvWrites.set(Nil)
-    runMerge(t)
+    det(20000, 8).createOrReplaceTempView("mormerge_src")
+    spark.sql(s"INSERT OVERWRITE $t SELECT * FROM mormerge_src")
+    // source: ~20 scattered matches across all 8 files + 100 new ids
+    spark.range(0, 20100).filter(col("id") % 997 === 13 ||
+        col("id") >= 20000)
+      .select(col("id"), (col("id") % 7).cast("int").as("delta"))
+      .createOrReplaceTempView("mormerge_delta")
+    spark.sql(s"""MERGE INTO $t t USING mormerge_delta s ON t.id = s.id
+      |WHEN MATCHED AND t.bucket = 3 THEN DELETE
+      |WHEN MATCHED THEN UPDATE SET kscore = t.kscore + s.delta
+      |WHEN NOT MATCHED THEN INSERT (id, bucket, kscore, score, doc_id)
+      |  VALUES (s.id, CAST(s.id % 16 AS INT), CAST(s.delta AS INT),
+      |          CAST(0.0 AS DOUBLE), 'ins')""".stripMargin)
     // the MoR pin: ZERO data files rewritten — matched rows are vector
     // growth, replacements + not-matched rows are appended files
     assert(LakeSource.lastReplacedFiles.get().isEmpty,
@@ -1831,20 +1829,25 @@ class LakeSpec extends AnyFunSuite {
     val dv = LakeSource.lastDvWrites.get()
     assert(dv.nonEmpty && dv.map(_._2).sum == 21L,
       s"expected 21 matched ordinals in vectors, got $dv")
-    // value identity with the copy-on-write replay of the SAME merge
-    val cowDir = tmp("lake_cowmerge")
-    val tc = catalogTable("tcowmerge", cowDir)
-    spark.conf.set("spark.graft.lake.merge.cow", "true")
-    try {
-      LakeSource.lastReplacedFiles.set(Nil)
-      runMerge(tc)
-      assert(LakeSource.lastReplacedFiles.get().nonEmpty,
-        "the COW escape hatch did not run the group-based rewrite")
-    } finally spark.conf.unset("spark.graft.lake.merge.cow")
+    // value identity with the same merge replayed as DataFrame joins:
+    // matched bucket-3 rows drop, other matched rows add the delta,
+    // unmatched source rows insert
+    val src = spark.table("mormerge_src")
+    val delta = spark.table("mormerge_delta")
+    val kept = src.join(delta, Seq("id"), "left_outer")
+      .filter(col("delta").isNull || col("bucket") =!= 3)
+      .select(col("id"), col("bucket"),
+        (col("kscore") + coalesce(col("delta"), lit(0))).as("kscore"),
+        col("score"), col("doc_id"))
+    val added = delta.join(src, Seq("id"), "left_anti")
+      .select(col("id"), (col("id") % 16).cast("int").as("bucket"),
+        col("delta").as("kscore"), lit(0.0).as("score"),
+        lit("ins").as("doc_id"))
+    val expected = kept.unionByName(added).orderBy("id", "kscore")
+      .collect().toSeq
     val mor = spark.table(t).orderBy("id", "kscore").collect().toSeq
-    val cow = spark.table(tc).orderBy("id", "kscore").collect().toSeq
-    assert(mor == cow, s"MoR and COW merges disagree: " +
-      s"${mor.size} vs ${cow.size} rows")
+    assert(mor == expected, s"MoR merge and relational replay disagree: " +
+      s"${mor.size} vs ${expected.size} rows")
     // change feed surfaces EXACTLY the matched rows (deletes) and the
     // replacement + not-matched rows (inserts) — no phantom churn from
     // carried-over rows, because none were rewritten

@@ -825,15 +825,15 @@ class SourcesSpec extends AnyFunSuite {
     val back = spark.read.schema(schema).csv(dir)
     assert(back.count() == 1000L)
     assert(back.agg(sum(col("id"))).head.getLong(0) == 499500L)
-    // ABORT path: partition 2's writer throws after its first row; the
-    // failed job must leave the destination byte-for-byte as committed
-    // (every attempt wrote only under staging, and BatchWrite.abort
-    // swept it)
+    // ABORT path: partition 2's task fails after its writer has
+    // written one row; the failed job must leave the destination
+    // byte-for-byte as committed (every attempt wrote only under
+    // staging, and BatchWrite.abort swept it)
     val before = new java.io.File(dir).list().toSeq.sorted
     intercept[Exception] {
-      src.write.format("graft.sources.CsvDirSink")
-        .option("path", dir).option("failPartition", "2")
-        .mode("append").save()
+      src.withColumn("id", TestSession.failInPartition(2)(col("id")))
+        .write.format("graft.sources.CsvDirSink")
+        .option("path", dir).mode("append").save()
     }
     val after = new java.io.File(dir).list().toSeq.sorted
     assert(after == before, s"aborted write left residue: $after vs $before")
@@ -896,7 +896,7 @@ class SourcesSpec extends AnyFunSuite {
     // rename failing after some files already landed
     val w = new graft.sources.CsvDirBatchWrite(dir,
       StructType(Seq(StructField("id", LongType))),
-      queryId = "qtest-appendfail", failPartition = None, truncate = false)
+      queryId = "qtest-appendfail", truncate = false)
     intercept[Exception] {
       w.commit(Array(graft.sources.CsvFileCommit("part-does-not-exist.csv", 1L)))
     }

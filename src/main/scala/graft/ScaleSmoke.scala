@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.sources.{LakeFormat, LakeScans}
 
 /** Scale-smoke harness: times the surfaces no registered query reaches
   * at scale — the DSv2 sink write, the micro-batch drain and lake
@@ -50,6 +52,25 @@ object ScaleSmoke {
       val s = (System.nanoTime() - t0) / 1e9
       println(f"[smoke] $label%-28s rows_in=$rows%,d out=$out%,d ${s}%8.2f s  " +
         f"${rows / s / 1e6}%6.1f M rows/s")
+    }
+
+    def lakeRead(dir: String): DataFrame =
+      spark.read.format("graft.sources.LakeSource").option("path", dir).load()
+    // the facts the lake requires pin belong to one query: planned files
+    // and segments come from the scans of the plan that ran, replaced
+    // files and vector growth from the diff of the version committed
+    def scansOf(df: DataFrame): (Array[Row], Seq[LakeScans.Planned]) =
+      (df.collect(), LakeScans.in(df.queryExecution.executedPlan))
+    def countPlanned(df: DataFrame): (Long, Seq[String]) = {
+      val (rows, scans) = scansOf(df.groupBy().count()) // df.count()'s plan
+      (rows(0).getLong(0), scans.flatMap(_.files))
+    }
+    def committed(dir: String)(command: => Unit): LakeFormat.VersionDiff = {
+      command
+      val f = LakeFormat.fs(dir)
+      val v = LakeFormat.latestVersion(f, dir).get
+      LakeFormat.versionDiff(f, dir, Some(LakeFormat.readManifestRoot(f,
+        dir, v - 1)), LakeFormat.readManifestRoot(f, dir, v))
     }
 
     val base = java.nio.file.Files.createTempDirectory("graft_smoke").toString
@@ -104,19 +125,16 @@ object ScaleSmoke {
             col("doc_id"))
           .write.format("graft.sources.LakeSource")
           .option("path", lakeDir).mode("overwrite").save()
-        spark.read.format("graft.sources.LakeSource")
-          .option("path", lakeDir).load().count()
+        lakeRead(lakeDir).count()
       }
       // stats-pruned scan: the predicate covers 1 of 64 contiguous-id
       // files — planning must launch ~1/64 of the tasks AND read ~1/64
-      // of the bytes (wall time is the evidence; lastPlannedFiles the
+      // of the bytes (wall time is the evidence; the planned files the
       // proof)
       time("lake pruned scan (1/64 files)", nEvents / 64) {
-        val n = spark.read.format("graft.sources.LakeSource")
-          .option("path", lakeDir).load()
-          .filter(col("id") < lit(nEvents / 64)).count()
-        require(graft.sources.LakeSource.lastPlannedFiles.get().size <= 2,
-          s"pruning planned ${graft.sources.LakeSource.lastPlannedFiles.get().size} files")
+        val (n, files) =
+          countPlanned(lakeRead(lakeDir).filter(col("id") < lit(nEvents / 64)))
+        require(files.size <= 2, s"pruning planned ${files.size} files")
         n
       }
       // the SQL DML blocks below address the table through the catalog
@@ -130,21 +148,23 @@ object ScaleSmoke {
       // commits as ONE file's vector growth plus a 1000-row appended
       // file, ZERO rewrites)
       time("lake MoR update (zero rewrites)", nEvents / 64) {
-        spark.sql("UPDATE gsmoke.ns.lake SET kscore = kscore + 1 " +
-          "WHERE id >= 1000 AND id < 2000")
-        require(graft.sources.LakeSource.lastReplacedFiles.get().isEmpty,
-          s"MoR update rewrote ${graft.sources.LakeSource
-            .lastReplacedFiles.get().size} files")
-        require(graft.sources.LakeSource.lastDvWrites.get()
-          .map(_._2).sum == 1000L, "MoR update vector growth mismatch")
+        val d = committed(lakeDir)(spark.sql("UPDATE gsmoke.ns.lake " +
+          "SET kscore = kscore + 1 WHERE id >= 1000 AND id < 2000"))
+        require(d.removed.isEmpty,
+          s"MoR update rewrote ${d.removed.size} files")
+        require(d.dvGrowth.map(_._2).sum == 1000L,
+          "MoR update vector growth mismatch")
         spark.sql("SELECT count(*) FROM gsmoke.ns.lake").head.getLong(0)
       }
       // metadata-only DELETE: a file-aligned predicate drops whole files
       // with zero tasks — wall time must be manifest-IO, not row work
       time("lake metadata delete (file-aligned)", nEvents / 4) {
-        spark.sql(s"DELETE FROM gsmoke.ns.lake WHERE id >= ${nEvents / 4 * 3}")
-        require(graft.sources.LakeSource.lastMetadataDeleted.get().size == 16,
-          s"metadata delete dropped ${graft.sources.LakeSource.lastMetadataDeleted.get().size} files")
+        val d = committed(lakeDir)(spark.sql(
+          s"DELETE FROM gsmoke.ns.lake WHERE id >= ${nEvents / 4 * 3}"))
+        require(d.added.isEmpty && d.dvChanged.isEmpty &&
+          d.removed.size == 16,
+          s"metadata delete dropped ${d.removed.size} files " +
+            s"(added ${d.added.size}, vectors ${d.dvChanged.size})")
         spark.sql("SELECT count(*) FROM gsmoke.ns.lake").head.getLong(0)
       }
       spark.sql("DROP TABLE IF EXISTS gsmoke.ns.lake")
@@ -152,7 +172,6 @@ object ScaleSmoke {
     // ---- round-17 lake smokes: two-level manifests, DV deletes,
     // change feed, storage-partitioned join ----
     locally {
-      import graft.sources.{LakeFormat, LakeSource}
       val dir = s"$base/lake17_smoke"
       spark.read.format("graft.sources.DetRangeSource")
         .option("rows", nEvents).option("slices", 64).load()
@@ -164,22 +183,18 @@ object ScaleSmoke {
       // one full pass (read + shuffle-by-range + write + one commit)
       time("lake OPTIMIZE into 512 files", nEvents) {
         spark.sql(s"OPTIMIZE '$dir' RANGE BY id INTO 512 FILES")
-        spark.read.format("graft.sources.LakeSource")
-          .option("path", dir).load().count()
+        lakeRead(dir).count()
       }
       // 512 entries > 256 → a TWO-LEVEL manifest (2 segments); a needle
       // predicate must read 1 segment of 2 and plan ~1 file of 512 —
       // planning metadata scales with surviving segments, not files
       time("lake 2-level needle scan", nEvents / 512) {
-        val n = spark.read.format("graft.sources.LakeSource")
-          .option("path", dir).load()
-          .filter(col("id") < lit(nEvents / 512)).count()
-        val (segs, total) = LakeSource.lastSegmentsPlanned.get()
+        val (rows, Seq(LakeScans.Planned(files, (segs, total)))) = scansOf(
+          lakeRead(dir).filter(col("id") < lit(nEvents / 512)).groupBy().count())
         require(total == 2 && segs == 1,
           s"segment pruning read $segs of $total segments")
-        require(LakeSource.lastPlannedFiles.get().size <= 2,
-          s"planned ${LakeSource.lastPlannedFiles.get().size} files")
-        n
+        require(files.size <= 2, s"planned ${files.size} files")
+        rows(0).getLong(0)
       }
       // scattered merge-on-read DELETE: ~20 rows across the table — the
       // cost is the matched-file scan + sidecar writes, ZERO rewrites
@@ -188,11 +203,11 @@ object ScaleSmoke {
         |  id BIGINT, bucket INT, kscore INT, score DOUBLE, doc_id STRING
         |) USING lake LOCATION '$dir'""".stripMargin)
       time("lake DV delete (scattered)", nEvents) {
-        spark.sql(s"DELETE FROM gsmoke.ns.lake17 WHERE id % 1000003 = 7")
-        require(LakeSource.lastReplacedFiles.get().isEmpty,
-          s"DV delete rewrote ${LakeSource.lastReplacedFiles.get().size} files")
-        require(LakeSource.lastDvWrites.get().nonEmpty, "no vectors written")
-        LakeSource.lastDvWrites.get().map(_._2).sum
+        val d = committed(dir)(
+          spark.sql(s"DELETE FROM gsmoke.ns.lake17 WHERE id % 1000003 = 7"))
+        require(d.removed.isEmpty, s"DV delete rewrote ${d.removed.size} files")
+        require(d.dvGrowth.nonEmpty, "no vectors written")
+        d.dvGrowth.map(_._2).sum
       }
       // change feed of JUST that delete: rows out = the matched handful,
       // cost = the touched files' scan — incremental consumers never
@@ -215,8 +230,7 @@ object ScaleSmoke {
         .option("path", dimDir).mode("overwrite").save()
       time("lake OPTIMIZE CLUSTER BY (fact)", nEvents) {
         spark.sql(s"OPTIMIZE '$dir' CLUSTER BY bucket(id, 64)")
-        spark.read.format("graft.sources.LakeSource")
-          .option("path", dir).load().count()
+        lakeRead(dir).count()
       }
       spark.sql(s"OPTIMIZE '$dimDir' CLUSTER BY bucket(id, 64)")
       spark.sql("DROP TABLE IF EXISTS gsmoke.ns.lake17dim")
@@ -241,7 +255,6 @@ object ScaleSmoke {
     // ---- round-18 lake smokes: born-clustered ingest, small-file
     // compaction, RESTORE ----
     locally {
-      import graft.sources.LakeFormat
       val factDir = s"$base/lake18_fact"
       val dimDir = s"$base/lake18_dim"
       spark.conf.set("spark.sql.catalog.gsmoke", "graft.sources.GraftCatalog")
@@ -341,7 +354,6 @@ object ScaleSmoke {
     // ---- round-19 lake smokes: MoR MERGE, rename/drop, composite
     // layout, target-size compaction ----
     locally {
-      import graft.sources.{LakeFormat, LakeSource}
       spark.conf.set("spark.sql.catalog.gsmoke", "graft.sources.GraftCatalog")
       val dir = s"$base/lake19"
       spark.sql("DROP TABLE IF EXISTS gsmoke.ns.lake19")
@@ -370,14 +382,14 @@ object ScaleSmoke {
         .select(col("id"), (col("id") % 7 + 1).cast("int").as("delta"))
         .createOrReplaceTempView("lake19_cdc")
       time("lake MoR MERGE (scattered CDC)", nEvents) {
-        LakeSource.lastReplacedFiles.set(Seq("sentinel"))
-        spark.sql(s"""MERGE INTO $t t USING lake19_cdc s ON t.id = s.id
+        val d = committed(dir)(spark.sql(
+          s"""MERGE INTO $t t USING lake19_cdc s ON t.id = s.id
           |WHEN MATCHED THEN UPDATE SET kscore = t.kscore + s.delta
           |WHEN NOT MATCHED THEN INSERT (id, bucket, kscore, score, doc_id)
           |  VALUES (s.id, CAST(s.id % 16 AS INT), CAST(s.delta AS INT),
-          |          CAST(0.0 AS DOUBLE), 'ins')""".stripMargin)
-        require(LakeSource.lastReplacedFiles.get().isEmpty,
-          s"MoR MERGE rewrote: ${LakeSource.lastReplacedFiles.get()}")
+          |          CAST(0.0 AS DOUBLE), 'ins')""".stripMargin))
+        require(d.removed.isEmpty,
+          s"MoR MERGE rewrote: ${d.removed.map(_.name)}")
         val m = metaOf(dir)
         require(m.cluster.contains(("id", 64)),
           s"MERGE dropped the claim: ${m.cluster}")
@@ -420,11 +432,10 @@ object ScaleSmoke {
         spark.table(tc).count()
       }
       time("lake composite partition prune (64/512)", nEvents / 8) {
-        val c = spark.table(tc)
-          .filter(col("id") >= unit && col("id") < unit * 2).count()
-        require(LakeSource.lastPlannedFiles.get().size == 64,
-          s"partition predicate planned " +
-            s"${LakeSource.lastPlannedFiles.get().size} files, wanted 64")
+        val (c, files) = countPlanned(spark.table(tc)
+          .filter(col("id") >= unit && col("id") < unit * 2))
+        require(files.size == 64,
+          s"partition predicate planned ${files.size} files, wanted 64")
         c
       }
       // TARGET-SIZE COMPACTION (r19): 16 micro-appends land 1,024 tiny
@@ -462,7 +473,6 @@ object ScaleSmoke {
     // ---- round-19b lake smokes: Z-ORDER, NMS MERGE, type widening,
     // string stats, SHALLOW CLONE ----
     locally {
-      import graft.sources.{LakeFormat, LakeSource}
       spark.conf.set("spark.sql.catalog.gsmoke", "graft.sources.GraftCatalog")
       val zdir = s"$base/lake19z"
       def metaOf(d: String) = {
@@ -476,29 +486,23 @@ object ScaleSmoke {
           col("doc_id"))
         .write.format("graft.sources.LakeSource")
         .option("path", zdir).mode("overwrite").save()
-      def planned(): Int = LakeSource.lastPlannedFiles.get().size
-      def lakeRead(d: String) =
-        spark.read.format("graft.sources.LakeSource")
-          .option("path", d).load()
       // Z-ORDER at 20M: the full-table Morton rewrite (codegen'd key,
       // manifest-stats bounds) — then needles on BOTH columns prune,
       // where the id-append layout planned all 64 files for either
-      require({
-        lakeRead(zdir).filter(col("bucket") === 3)
-          .agg(sum(col("id"))).head.getLong(0)
-        planned() == 64
-      }, "pre-zorder bucket needle should plan all 64 files")
+      require(scansOf(lakeRead(zdir).filter(col("bucket") === 3)
+        .agg(sum(col("id"))))._2.flatMap(_.files).size == 64,
+        "pre-zorder bucket needle should plan all 64 files")
       time("lake ZORDER rewrite (2 cols)", nEvents) {
         spark.sql(s"OPTIMIZE '$zdir' ZORDER BY (bucket, kscore) " +
           "INTO 64 FILES").collect()
         metaOf(zdir).entries.size.toLong
       }
       time("lake ZORDER 2-D prune", nEvents / 16) {
-        val c1 = lakeRead(zdir).filter(col("bucket") === 3).count()
-        val p1 = planned()
-        lakeRead(zdir).filter(col("kscore").between(100, 199))
-          .agg(sum(col("id"))).head.getLong(0)
-        val p2 = planned()
+        val (c1, files1) = countPlanned(
+          lakeRead(zdir).filter(col("bucket") === 3))
+        val p1 = files1.size
+        val p2 = scansOf(lakeRead(zdir).filter(col("kscore").between(100, 199))
+          .agg(sum(col("id"))))._2.flatMap(_.files).size
         require(p1 <= 24 && p2 <= 24,
           s"z-order needles planned $p1/$p2 of 64 files")
         c1
@@ -516,16 +520,16 @@ object ScaleSmoke {
         |) USING lake LOCATION '$zdir'""".stripMargin)
       val tz = "gsmoke.ns.lake19z"
       time("lake MERGE NOT MATCHED BY SRC", nEvents) {
-        LakeSource.lastReplacedFiles.set(Seq("sentinel"))
-        spark.sql(s"""MERGE INTO $tz t USING lake19_nms s ON t.id = s.id
+        val d = committed(zdir)(spark.sql(
+          s"""MERGE INTO $tz t USING lake19_nms s ON t.id = s.id
           |WHEN MATCHED THEN UPDATE SET kscore = t.kscore + s.delta
           |WHEN NOT MATCHED THEN INSERT (id, bucket, kscore, score, doc_id)
           |  VALUES (s.id, CAST(s.id % 16 AS INT), CAST(s.delta AS INT),
           |          CAST(0.0 AS DOUBLE), 'ins')
           |WHEN NOT MATCHED BY SOURCE AND t.id % 4099 = 1 THEN DELETE
-          |""".stripMargin)
-        require(LakeSource.lastReplacedFiles.get().isEmpty,
-          s"NMS MERGE rewrote: ${LakeSource.lastReplacedFiles.get()}")
+          |""".stripMargin))
+        require(d.removed.isEmpty,
+          s"NMS MERGE rewrote: ${d.removed.map(_.name)}")
         spark.table(tz).count()
       }
       // TYPE WIDENING at 20M: one O(root) header write — then values
@@ -537,10 +541,10 @@ object ScaleSmoke {
           "widening touched data files")
         spark.sql(s"INSERT INTO $tz VALUES " +
           s"(${nEvents + 50000}L, 0, 3000000000L, 0.0D, 'big')")
-        val c = spark.table(tz)
-          .filter(col("kscore") === 3000000000L).count()
-        require(c == 1 && planned() == 1,
-          s"widened needle: count=$c planned=${planned()}")
+        val (c, files) = countPlanned(spark.table(tz)
+          .filter(col("kscore") === 3000000000L))
+        require(c == 1 && files.size == 1,
+          s"widened needle: count=$c planned=${files.size}")
         c
       }
       // STRING STATS at 20M: RANGE BY a string column, then a doc-id
@@ -553,18 +557,18 @@ object ScaleSmoke {
         metaOf(zdir).entries.size.toLong
       }
       time("lake string needle + agg", nEvents / 1000) {
-        val c = lakeRead(zdir).filter(col("doc_id") === "doc_497").count()
-        require(planned() <= 2,
-          s"string needle planned ${planned()} of 64 files")
-        LakeSource.lastPlannedFiles.set(Nil)
-        val mm = lakeRead(zdir)
-          .agg(min(col("doc_id")), max(col("doc_id"))).head
+        val (c, files) = countPlanned(
+          lakeRead(zdir).filter(col("doc_id") === "doc_497"))
+        require(files.size <= 2,
+          s"string needle planned ${files.size} of 64 files")
+        val (mmRows, mmScans) = scansOf(
+          lakeRead(zdir).agg(min(col("doc_id")), max(col("doc_id"))))
+        val (mm, mmPlanned) = (mmRows(0), mmScans.flatMap(_.files))
         // 'big' (the widen insert) and 'ins' (the NMS merge inserts)
         // straddle the doc_ corpus lexicographically
         require(mm.getString(0) == "big" && mm.getString(1) == "ins" &&
-          LakeSource.lastPlannedFiles.get().isEmpty,
-          s"string MIN/MAX not manifest-only: $mm " +
-            s"planned=${LakeSource.lastPlannedFiles.get()}")
+          mmPlanned.isEmpty,
+          s"string MIN/MAX not manifest-only: $mm planned=$mmPlanned")
         c
       }
       // BLOOM SKIPPING at 20M: a unique hashed key — every file's
@@ -590,16 +594,16 @@ object ScaleSmoke {
         // derived from nEvents so sub-20M smoke runs keep a live needle
         val nid = nEvents / 2
         val needle = s"h${(nid * 2654435761L) % 1073741824L}_$nid"
-        val c = spark.table("gsmoke.ns.lake19b")
-          .filter(col("doc_id") === needle).count()
-        require(c == 1 && planned() == 1,
-          s"bloom needle: count=$c planned=${planned()}")
-        val c0 = spark.table("gsmoke.ns.lake19b")
-          .filter(col("doc_id") === "h0_nope").count()
+        val (c, files) = countPlanned(spark.table("gsmoke.ns.lake19b")
+          .filter(col("doc_id") === needle))
+        require(c == 1 && files.size == 1,
+          s"bloom needle: count=$c planned=${files.size}")
+        val (c0, files0) = countPlanned(spark.table("gsmoke.ns.lake19b")
+          .filter(col("doc_id") === "h0_nope"))
         // ≤2 not ==0: with 64 filters at ~0.3% FPR a stray false
         // positive is possible — it costs one file read, never a row
-        require(c0 == 0 && planned() <= 2,
-          s"absent needle planned ${planned()} files")
+        require(c0 == 0 && files0.size <= 2,
+          s"absent needle planned ${files0.size} files")
         c
       }
       spark.sql("DROP TABLE IF EXISTS gsmoke.ns.lake19b")
@@ -630,9 +634,6 @@ object ScaleSmoke {
     // ---- round-19 continuation smokes: WAP branches, incremental MV,
     // idempotent COPY INTO ----
     locally {
-      def lakeRead(d: String): DataFrame =
-        spark.read.format("graft.sources.LakeSource")
-          .option("path", d).load()
       val dir = s"$base/lake19wap"
       spark.read.format("graft.sources.DetRangeSource")
         .option("rows", nEvents).option("slices", 64).load()

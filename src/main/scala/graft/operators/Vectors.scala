@@ -19,18 +19,6 @@ import graft.{Q, Tables}
   */
 object Vectors {
 
-  /** TEST HOOK (local-mode-only, like `LakeSource.beforeRowLevelCommit`):
-    * when set, [[pqIndexCompact]] invokes it ONCE — after its compacted
-    * segment is written and the tmp pointer staged, immediately BEFORE
-    * the CAS-by-content check + pointer rename. VecDimSpec interleaves a
-    * full second compaction here to pin the concurrent-compactor guard:
-    * the late compactor must detect the pointer change, abort, and clean
-    * its staging — never publishing a pointer that loses a concurrently
-    * absorbed append. One-shot (cleared before invocation) so the inner
-    * compaction doesn't recurse; never set in production use. */
-  val compactBeforeSwapHook =
-    new java.util.concurrent.atomic.AtomicReference[Runnable](null)
-
   /** vectors with a precomputed norm column. */
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nrm", VectorOps.norm(col("embedding")))
@@ -1079,7 +1067,6 @@ object Vectors {
     try out.write(ptrTxt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     val ptr = new org.apache.hadoop.fs.Path(s"$dir/_codes_current")
-    Option(Vectors.compactBeforeSwapHook.getAndSet(null)).foreach(_.run())
     // CAS-BY-CONTENT publish (r14 verdict #1 — the concurrent-compactor
     // guard): re-read the pointer immediately before the rename and
     // compare to the content captured at listing time. A mismatch means

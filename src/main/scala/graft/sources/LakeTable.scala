@@ -92,7 +92,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * pruning, DELETE, UPDATE, MERGE and time travel under the DuckDB
   * oracle; LakeSpec pins the protocol invariants (conflict loss is
   * loud, failed jobs leave the table untouched, pruning counts,
-  * rewrite narrowness, snapshot stability).
+  * rewrite narrowness, snapshot stability). Those counts belong to one
+  * query: planned files and segments come from the executed plan's
+  * scans ([[LakeScans]]), replaced files and vector growth from the
+  * diff of the version a command committed ([[LakeFormat.versionDiff]]).
   *
   * Usage:
   * {{{
@@ -105,38 +108,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   */
 object LakeSource {
-  /** TEST HOOKS (local-mode only, same pattern as
-    * `DetRangeSource.generatedRows`): the file names the most recent
-    * scan planned after stats pruning, the files the most recent
-    * small-file COMPACT replaced (emptied by a merge-on-read DML
-    * commit, which replaces none), and the files the most recent
-    * metadata-only delete dropped. LakeSpec reads these to pin that
-    * pruning/narrowing actually happened — counts the result hash
-    * can't see. */
-  val lastPlannedFiles =
-    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-  /** (segments read, segments total) of the most recent SEGMENTED plan
-    * — pins that filtered planning reads O(surviving segments) of
-    * metadata, not O(files) (two-level manifests, round 17). */
-  val lastSegmentsPlanned =
-    new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
-  val lastReplacedFiles =
-    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-  val lastMetadataDeleted =
-    new java.util.concurrent.atomic.AtomicReference[Seq[String]](Nil)
-
-  /** Monotone count of manifest-segment sidecars actually WRITTEN (not
-    * reused) — LakeSpec snapshots it around a commit to pin that DIFF
-    * commits (round 18) write O(touched segments) metadata, not
-    * O(files): a DML touching one file of a 10k-file table must
-    * rebuild at most the one segment holding it. */
-  val segmentWriteCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Monotone count of manifest-segment sidecars READ — pins the diff
-    * writer's early stop: a DML touching only inline-tail (recent)
-    * files copies every segment reference through UNREAD (r18). */
-  val segmentReadCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** Driver-side LRU over decoded bloom sidecars (r19): repeated
     * needle queries pay one sidecar read per (table, file, column).
     * Sidecars are immutable once referenced (same contract as DVs), so
@@ -194,22 +165,6 @@ object LakeSource {
     ndvLru.synchronized { ndvLru.put(key, v) }
     v
   }
-
-  /** TEST HOOK (one-shot): runs at the start of the next
-    * SNAPSHOT-PINNED commit (row-level DML, OPTIMIZE or COMPACT) — the
-    * window between the commit's snapshot read and its publish.
-    * LakeSpec plants a concurrent commit here to pin that the rewrite
-    * LOSES loudly instead of silently dropping the concurrent writer's
-    * rows. */
-  val beforeRowLevelCommit =
-    new java.util.concurrent.atomic.AtomicReference[Runnable](null)
-
-  /** TEST HOOK: (data file, deleted-ordinal count) pairs the most
-    * recent merge-on-read DELETE committed as deletion-vector sidecars
-    * — LakeSpec pins that a scattered delete wrote VECTORS, not files
-    * (zero entries in [[lastReplacedFiles]]). */
-  val lastDvWrites =
-    new java.util.concurrent.atomic.AtomicReference[Seq[(String, Long)]](Nil)
 }
 
 class LakeSource extends TableProvider {
@@ -953,7 +908,6 @@ object LakeFormat {
       s"_tmp-seg-${java.util.UUID.randomUUID().toString.take(12)}")
     val out = FileIO.create(f, tmp, false)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    LakeSource.segmentWriteCount.incrementAndGet()
     if (!f.rename(tmp, target)) {
       f.delete(tmp, false)
       // a lost rename is fine ONLY because the winner wrote identical
@@ -968,7 +922,6 @@ object LakeFormat {
 
   def readSegment(f: FileSystem, dir: String,
       name: String): Seq[FileEntry] = {
-    LakeSource.segmentReadCount.incrementAndGet()
     val in = f.open(new HPath(dir, name))
     val lines = try {
       scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
@@ -1038,6 +991,44 @@ object LakeFormat {
     ManifestMeta(r.schema, r.tsMillis, r.cluster,
       r.segs.flatMap(s => readSegment(f, dir, s.name)) ++ r.inline,
       r.colmap, r.part)
+  }
+
+  /** File-level difference of one version against its predecessor:
+    * the entries `cur` lists and `prev` does not, the entries `prev`
+    * lists and `cur` does not, and the (before, after) pairs of files
+    * both list under a different deletion vector. */
+  final case class VersionDiff(added: Seq[FileEntry],
+      removed: Seq[FileEntry], dvChanged: Seq[(FileEntry, FileEntry)]) {
+    /** (file, ordinals its vector gained), sorted by file: what a
+      * merge-on-read DML committed as deletion-vector growth. */
+    def dvGrowth: Seq[(String, Long)] = dvChanged.map { case (p, c) =>
+      c.name -> (c.dv.map(_._2).getOrElse(0L) - p.dv.map(_._2).getOrElse(0L))
+    }.sortBy(_._1)
+  }
+
+  /** Diff version `cur` against its predecessor `prev` (None = the
+    * empty table before v0). Segments are content-addressed, so a
+    * segment reference common to both roots names byte-identical
+    * entries that cancel exactly: only the symmetric-difference
+    * segments plus both inline tails are read — O(root + touched
+    * segments) for a diff-shaped commit, never the unchanged corpus.
+    * The change feed ([[LakeChanges]]) builds its partitions from this. */
+  def versionDiff(f: FileSystem, dir: String, prev: Option[RootMeta],
+      cur: RootMeta): VersionDiff = {
+    val prevSegNames = prev.toSeq.flatMap(_.segs).map(_.name).toSet
+    val curSegNames = cur.segs.map(_.name).toSet
+    def changedEntries(r: RootMeta, commonWith: Set[String]) =
+      r.segs.filterNot(s => commonWith.contains(s.name))
+        .flatMap(s => readSegment(f, dir, s.name)) ++ r.inline
+    val before = prev.toSeq.flatMap(r => changedEntries(r, curSegNames))
+    val after = changedEntries(cur, prevSegNames)
+    val beforeBy = before.map(e => e.name -> e).toMap
+    val afterNames = after.map(_.name).toSet
+    VersionDiff(
+      added = after.filterNot(e => beforeBy.contains(e.name)),
+      removed = before.filterNot(e => afterNames.contains(e.name)),
+      dvChanged = after.flatMap(e =>
+        beforeBy.get(e.name).filter(_.dv != e.dv).map(_ -> e)))
   }
 
   /** Commit timestamp of version `v`, reading only the header line —
@@ -1325,11 +1316,6 @@ object LakeFormat {
       appendOnly: Boolean = false,
       maintenance: Boolean = false,
       part: Option[(String, Long)] = None): Unit = {
-    // test hook: the window between a snapshot-pinned commit's read and
-    // its publish — LakeSpec plants a concurrent commit here to pin
-    // that row-level rewrites AND OPTIMIZE lose loudly, never silently
-    if (fixedBase.isDefined)
-      Option(LakeSource.beforeRowLevelCommit.getAndSet(null)).foreach(_.run())
     val dest = new HPath(path)
     val staging = new HPath(path, s"_staging-$queryId")
     FileIO.mkdirs(f, dest)
@@ -1522,9 +1508,6 @@ object LakeFormat {
       writerSpec: Option[(String, Int)] = None,
       maintenance: Boolean = false,
       writerPart: Option[(String, Long)] = None): Seq[FileEntry] = {
-    // the same snapshot-pinned read→publish window every pinned commit
-    // exposes — LakeSpec plants concurrent commits here
-    Option(LakeSource.beforeRowLevelCommit.getAndSet(null)).foreach(_.run())
     val dest = new HPath(path)
     val staging = new HPath(path, s"_staging-$queryId")
     def conflict(renamed: Seq[FileEntry]): Nothing = {
@@ -3288,10 +3271,8 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
         "metadata delete became undecidable after a concurrent commit — " +
           "re-run the DELETE (it will take the rewrite path)"))
       val dropped = entries.map(_.name).diff(remaining.map(_.name))
-      if (dropped.isEmpty) {
-        LakeSource.lastMetadataDeleted.set(Nil)
+      if (dropped.isEmpty)
         return // no file matched: the table is already the answer
-      }
       // header monotonicity, same rule as publish (r16 advisory: a
       // handle predating an ADD COLUMN must not shrink the header back);
       // dropping whole files preserves a clustered layout (empty result
@@ -3304,10 +3285,8 @@ class LakeTable(private[graft] val path: String, tableSchema: StructType,
       if (writeManifestCASDiff(f, path, base.get + 1, outSchema, root,
           dropped.map(n => n -> ((_: FileEntry) =>
             None: Option[FileEntry])).toMap,
-          Nil, outCluster, part = outPart)) {
-        LakeSource.lastMetadataDeleted.set(dropped)
+          Nil, outCluster, part = outPart))
         return
-      }
       attempts += 1
       require(attempts < 20,
         s"lake metadata delete on $path lost $attempts CAS races — aborting")
@@ -3647,14 +3626,13 @@ private[sources] class LakeScanBuilder(path: String,
     // two-level pruning: segment aggregates first (skipped segments are
     // never READ — the metadata win at 10⁶-file scale), then per-file
     // stats inside the surviving segments
-    val candidates = root match {
-      case None => Nil
+    val (candidates, segments) = root match {
+      case None => (Nil, (0, 0))
       case Some(r) =>
         val live = r.segs.filter(s => LakeFormat.survives(s.agg, pushedSeq))
-        LakeSource.lastSegmentsPlanned.set((live.size, r.segs.size))
         val f = LakeFormat.fs(path)
-        live.flatMap(s => LakeFormat.readSegment(f, path, s.name)) ++
-          r.inline
+        (live.flatMap(s => LakeFormat.readSegment(f, path, s.name)) ++
+          r.inline, (live.size, r.segs.size))
     }
     val scan = new LakeScan(path,
       // readers resolve fields against the SCANNED VERSION's header
@@ -3679,7 +3657,7 @@ private[sources] class LakeScanBuilder(path: String,
       // reporting it would change the join plan a DML runs against its
       // source
       root.flatMap(_.cluster).filter(_ => owner.isEmpty),
-      root.flatMap(_.colmap))
+      root.flatMap(_.colmap), segments)
     owner.foreach(_.configuredScan = scan)
     scan
   }
@@ -3771,7 +3749,8 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
     timeTravel: Boolean = false,
     readOptions: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     cluster: Option[(String, Int)] = None,
-    colmap: Option[LakeFormat.ColMap] = None)
+    colmap: Option[LakeFormat.ColMap],
+    val segments: (Int, Int))
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -3911,10 +3890,10 @@ private[sources] class LakeScan(path: String, tableSchema: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"LakeScan v$snapshotVersion files=${entries.size} $path"
+    s"LakeScan v$snapshotVersion files=${entries.size} " +
+      s"segments=${segments._1}/${segments._2} $path"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    LakeSource.lastPlannedFiles.set(entries.map(_.name))
     if (keyed.isDefined)
       entries.map(e => LakeKeyedInputPartition(e.name, e.dv.map(_._1),
         e.pk.get): InputPartition).toArray
@@ -4133,7 +4112,6 @@ private[sources] class LakeMicroBatchStream(path: String,
     if (b <= a) return Array.empty
     val batch = addedBetween(a, b)
       .filter(e => survives(e, pushedPhys)) // stats pruning per batch
-    LakeSource.lastPlannedFiles.set(batch.map(_.name))
     batch.map(e =>
       LakeInputPartition(e.name, e.dv.map(_._1)): InputPartition).toArray
   }
@@ -4413,7 +4391,6 @@ private[sources] class LakeBatchWrite(path: String,
         // aborts first — but the rule stays uniform
         writerSpec = clusterSpec, maintenance = maintenance,
         writerPart = partSpec)
-      LakeSource.lastReplacedFiles.set(names.toSeq.sorted)
       return
     }
     // appends and truncates are COMMUTATIVE against concurrent commits:
@@ -4996,7 +4973,6 @@ private[sources] class LakeDeltaBatchWrite(path: String,
     // edit closure unions the new ordinals into the entry's vector in
     // place; an edit name missing from the snapshot fails loudly
     // inside the diff writer (the old `known` subset check).
-    val dvWrites = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val edits: Map[String, FileEntry => Option[FileEntry]] =
       newDeletes.map { case (name, ords) =>
         name -> { (e: FileEntry) =>
@@ -5014,7 +4990,6 @@ private[sources] class LakeDeltaBatchWrite(path: String,
           else {
             val dv = dvName(e.name)
             writeDv(f, path, dv, merged)
-            dvWrites += ((e.name, merged.size.toLong - old.size))
             Some(e.copy(dv = Some((dv, merged.size.toLong))))
           }
         }
@@ -5027,8 +5002,6 @@ private[sources] class LakeDeltaBatchWrite(path: String,
     LakeFormat.publishDiffReplace(f, path, queryId, messages, tableSchema,
       scan.snapshotVersion, replaced = Set.empty, edits = edits,
       writerSpec = clusterSpec, writerPart = partSpec)
-    LakeSource.lastDvWrites.set(dvWrites.toSeq.sortBy(_._1))
-    LakeSource.lastReplacedFiles.set(Nil) // zero data-file rewrites
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -5136,14 +5109,12 @@ private[graft] object LakeChanges {
     StructField("_commit_timestamp", LongType, nullable = false))
 
   /** Driver-side planning: manifest reads only, no data IO — and only
-    * the CHANGED metadata (round 18): manifest segments are content-
-    * addressed, so a segment reference common to both versions names
-    * byte-identical entries that cancel exactly in the name-diff below.
-    * Each version pair therefore flattens only its symmetric-difference
-    * segments plus the inline tails; with diff-shaped DML commits
-    * (r18) that is O(root + touched segments) per version — a one-file
-    * DML on a 10⁶-file table feeds its delta without ever reading the
-    * unchanged corpus's metadata. */
+    * the CHANGED metadata (round 18): each version pair goes through
+    * [[LakeFormat.versionDiff]], which flattens only the symmetric-
+    * difference segments plus the inline tails; with diff-shaped DML
+    * commits (r18) that is O(root + touched segments) per version — a
+    * one-file DML on a 10⁶-file table feeds its delta without ever
+    * reading the unchanged corpus's metadata. */
   def partitions(f: FileSystem, dir: String, from: Int,
       to: Int): Seq[LakeChangePartition] = {
     import LakeFormat._
@@ -5173,56 +5144,37 @@ private[graft] object LakeChanges {
     }
   }
 
-  /** One version's file-level diff against its predecessor — the body
-    * [[partitions]] runs for every NON-maintenance version in range. */
+  /** One version's change partitions — the body [[partitions]] runs
+    * for every NON-maintenance version in range. */
   private def changesAt(f: FileSystem, dir: String, v: Int,
       curRoot: LakeFormat.RootMeta, prevRoot: Option[LakeFormat.RootMeta])
       : Seq[LakeChangePartition] = {
-    import LakeFormat._
-    {
-      val prevSegNames = prevRoot.toSeq.flatMap(_.segs).map(_.name).toSet
-      val curSegNames = curRoot.segs.map(_.name).toSet
-      def changedEntries(r: RootMeta, commonWith: Set[String]) =
-        r.segs.filterNot(s => commonWith.contains(s.name))
-          .flatMap(s => readSegment(f, dir, s.name)) ++ r.inline
-      val prev = prevRoot.toSeq
-        .flatMap(r => changedEntries(r, curSegNames))
-      val cur = changedEntries(curRoot, prevSegNames)
-      val ts = manifestTs(f, dir, v)
-      val prevBy = prev.map(e => e.name -> e).toMap
-      val curBy = cur.map(e => e.name -> e).toMap
-      val inserts = cur.filterNot(e => prevBy.contains(e.name)).map(e =>
-        LakeChangePartition(e.name, "insert", v, ts,
-          antiDv = e.dv.map(_._1)))
-      val deletes = prev.filterNot(e => curBy.contains(e.name)).map(e =>
-        LakeChangePartition(e.name, "delete", v, ts,
-          antiDv = e.dv.map(_._1)))
-      // a file present in BOTH versions whose vector CHANGED: emit the
-      // symmetric difference — ordinals covered now but not before are
-      // deletes (vector growth: DML), ordinals covered before but not
-      // now are INSERTS (vector shrink/disappearance: RESTORE to a
-      // pre-delete snapshot resurrects those rows — r18 review #1; the
-      // old code threw 'corrupt history' there, permanently failing
-      // every feed crossing a real restore). Each side may emit zero
-      // rows; along plain DML history one side always does.
-      val changedDv = cur.flatMap { e =>
-        prevBy.get(e.name).toSeq.flatMap { p =>
-          if (p.dv == e.dv) Nil
-          else {
-            val newlyDeleted = e.dv.map { case (nb, _) =>
-              LakeChangePartition(e.name, "delete", v, ts, antiDv = None,
-                amongDv = Some(nb), exceptDv = p.dv.map(_._1))
-            }
-            val resurrected = p.dv.map { case (ob, _) =>
-              LakeChangePartition(e.name, "insert", v, ts, antiDv = None,
-                amongDv = Some(ob), exceptDv = e.dv.map(_._1))
-            }
-            newlyDeleted.toSeq ++ resurrected.toSeq
-          }
-        }
+    val d = LakeFormat.versionDiff(f, dir, prevRoot, curRoot)
+    val ts = LakeFormat.manifestTs(f, dir, v)
+    val inserts = d.added.map(e =>
+      LakeChangePartition(e.name, "insert", v, ts, antiDv = e.dv.map(_._1)))
+    val deletes = d.removed.map(e =>
+      LakeChangePartition(e.name, "delete", v, ts, antiDv = e.dv.map(_._1)))
+    // a file present in BOTH versions whose vector CHANGED: emit the
+    // symmetric difference — ordinals covered now but not before are
+    // deletes (vector growth: DML), ordinals covered before but not
+    // now are INSERTS (vector shrink/disappearance: RESTORE to a
+    // pre-delete snapshot resurrects those rows — r18 review #1; the
+    // old code threw 'corrupt history' there, permanently failing
+    // every feed crossing a real restore). Each side may emit zero
+    // rows; along plain DML history one side always does.
+    val changedDv = d.dvChanged.flatMap { case (p, e) =>
+      val newlyDeleted = e.dv.map { case (nb, _) =>
+        LakeChangePartition(e.name, "delete", v, ts, antiDv = None,
+          amongDv = Some(nb), exceptDv = p.dv.map(_._1))
       }
-      inserts ++ deletes ++ changedDv
+      val resurrected = p.dv.map { case (ob, _) =>
+        LakeChangePartition(e.name, "insert", v, ts, antiDv = None,
+          amongDv = Some(ob), exceptDv = e.dv.map(_._1))
+      }
+      newlyDeleted.toSeq ++ resurrected.toSeq
     }
+    inserts ++ deletes ++ changedDv
   }
 }
 

@@ -60,11 +60,54 @@ object TestSession {
     try {
       sc.setJobGroup(group, group)
       val out = try body finally sc.clearJobGroup()
-      // drain the asynchronous listener bus (private[spark], so by reflection)
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
+      drainListenerBus()
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Evaluate `body` and return the executed physical plans of the SQL
+    * executions it ran, in the order they finished: the plans of its
+    * actions and commands, and of the executions those ran inside them.
+    * Executions are matched to `body` by a job tag on the calling
+    * thread, so plans of other threads' queries on the same session are
+    * never mixed in. A streaming query's plans come from its
+    * `lastExecution` instead. */
+  def plansOf[T](body: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+    val sc = spark.sparkContext
+    val tag = s"graft_plans_of_${java.util.UUID.randomUUID()}"
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobTags.contains(tag) =>
+          mine.add(s.executionId)
+        case end: SparkListenerSQLExecutionEnd if mine.contains(end.executionId) =>
+          // the event's QueryExecution is private[sql], so by reflection
+          val qe = end.getClass.getMethod("qe").invoke(end)
+            .asInstanceOf[QueryExecution]
+          // (a query that failed in planning has no plan to add)
+          Option(qe).flatMap(q => scala.util.Try(q.executedPlan).toOption)
+            .foreach(plans.add)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val out = try body finally sc.removeJobTag(tag)
+      drainListenerBus()
+      (out, plans.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // waits out the asynchronous listener bus (private[spark], so by reflection)
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", classOf[Long]).invoke(bus, Long.box(60000L))
   }
 
   /** Identity on a LONG column that throws in partition `p` once that

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{LakeFormat, LakeSource}
+import graft.sources.{LakeFormat, LakeScans, LakeSource}
 
 /** Protocol pins for the round-16 lakehouse table
   * ([[graft.sources.LakeTable]]) — the invariants the q225–q229 result
@@ -30,6 +30,43 @@ class LakeSpec extends AnyFunSuite {
   private def lakeFiles(dir: String): Seq[String] =
     new java.io.File(dir).list().toSeq.filter(_.startsWith("part-"))
 
+  /** `body`'s value, with the files the lake scans of every plan it
+    * ran planned after stats and bloom pruning. */
+  private def planned[T](body: => T): (T, Seq[String]) = {
+    val (out, scans) = scanned(body)
+    (out, scans.flatMap(_.files))
+  }
+
+  /** `body`'s value, with every lake scan of the plans it ran. */
+  private def scanned[T](body: => T): (T, Seq[LakeScans.Planned]) = {
+    val (out, plans) = TestSession.plansOf(body)
+    (out, plans.flatMap(LakeScans.in))
+  }
+
+  /** The file-level diff of the version `command` committed on the lake
+    * table at `dir` — empty when it committed none. Replaced files are
+    * the removed entries; deletion-vector writes are `dvGrowth`. */
+  private def committed(dir: String)(command: => Unit): LakeFormat.VersionDiff = {
+    val f = LakeFormat.fs(dir)
+    val before = LakeFormat.latestVersion(f, dir)
+    command
+    val after = LakeFormat.latestVersion(f, dir)
+    if (after == before) LakeFormat.VersionDiff(Nil, Nil, Nil)
+    else {
+      assert(after == before.map(_ + 1).orElse(Some(0)),
+        s"expected one commit on $dir: $before → $after")
+      LakeFormat.versionDiff(f, dir,
+        before.map(LakeFormat.readManifestRoot(f, dir, _)),
+        LakeFormat.readManifestRoot(f, dir, after.get))
+    }
+  }
+
+  /** The files a commit dropped from the manifest as a metadata-only
+    * delete: removed entries with nothing added and no vector changed. */
+  private def metadataDeleted(d: LakeFormat.VersionDiff): Seq[String] =
+    if (d.added.isEmpty && d.dvChanged.isEmpty) d.removed.map(_.name)
+    else Nil
+
   private def catalogTable(name: String, dir: String): String = {
     spark.conf.set("spark.sql.catalog.glt", "graft.sources.GraftCatalog")
     spark.sql(s"DROP TABLE IF EXISTS glt.ns.$name")
@@ -47,21 +84,24 @@ class LakeSpec extends AnyFunSuite {
     // full scan plans all 8 files (SUM is not manifest-answerable, so
     // this is a REAL scan — a bare count() would short-circuit into the
     // manifest-only LakeAggScan and plan no data partition at all)
-    assert(read(dir).agg(sum(col("kscore"))).head.getLong(0) > 0L)
-    assert(LakeSource.lastPlannedFiles.get().size == 8)
+    val (total, all) = planned(read(dir).agg(sum(col("kscore"))).head.getLong(0))
+    assert(total > 0L)
+    assert(all.size == 8)
     // 8 slices = contiguous 2500-id files; id < 2500 is exactly file 0
-    assert(read(dir).filter(col("id") < 2500).count() == 2500L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1,
-      s"stats pruning planned ${LakeSource.lastPlannedFiles.get()} " +
-        "for a single-file predicate")
+    val (n0, file0) = planned(read(dir).filter(col("id") < 2500).count())
+    assert(n0 == 2500L)
+    assert(file0.size == 1,
+      s"stats pruning planned $file0 for a single-file predicate")
     // sub-file predicate: still ONE planned file, and the rows are
     // filtered post-scan (stats narrow cost, never results)
-    assert(read(dir).filter(col("id") >= 3000 && col("id") <= 3004)
-      .count() == 5L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1)
+    val (n5, sub) = planned(read(dir)
+      .filter(col("id") >= 3000 && col("id") <= 3004).count())
+    assert(n5 == 5L)
+    assert(sub.size == 1)
     // IN-list across two files
-    assert(read(dir).filter(col("id").isin(100L, 5100L)).count() == 2L)
-    assert(LakeSource.lastPlannedFiles.get().size == 2)
+    val (n2, two) = planned(read(dir).filter(col("id").isin(100L, 5100L)).count())
+    assert(n2 == 2L)
+    assert(two.size == 2)
   }
 
   test("metadata-only DELETE drops whole files without launching a rewrite") {
@@ -69,17 +109,14 @@ class LakeSpec extends AnyFunSuite {
     val t = catalogTable("tmeta", dir)
     det(20000, 8).createOrReplaceTempView("lake_metadel_src")
     spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_metadel_src")
-    LakeSource.lastReplacedFiles.set(Nil)
-    LakeSource.lastMetadataDeleted.set(Nil)
     // id < 5000 is exactly files 0 and 1 — every file decides wholly,
     // so Spark's OptimizeMetadataOnlyDeleteFromTable takes the
     // canDeleteWhere path: a manifest edit, zero rewrite tasks
-    spark.sql(s"DELETE FROM $t WHERE id < 5000")
+    val d = committed(dir)(spark.sql(s"DELETE FROM $t WHERE id < 5000"))
     assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 15000L)
-    assert(LakeSource.lastMetadataDeleted.get().size == 2,
-      s"expected a 2-file metadata delete, got " +
-        s"${LakeSource.lastMetadataDeleted.get()}")
-    assert(LakeSource.lastReplacedFiles.get().isEmpty,
+    assert(metadataDeleted(d).size == 2,
+      s"expected a 2-file metadata delete, got $d")
+    assert(d.added.isEmpty,
       "a file-aligned DELETE ran the copy-on-write rewrite instead of " +
         "the metadata-only path")
     // data files stay on disk (old snapshots reference them) — only the
@@ -93,17 +130,16 @@ class LakeSpec extends AnyFunSuite {
     det(20000, 8).createOrReplaceTempView("lake_mordel_src")
     spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_mordel_src")
     val dataFiles = lakeFiles(dir).toSet
-    LakeSource.lastReplacedFiles.set(Nil)
-    LakeSource.lastDvWrites.set(Nil)
     // ids 3000–3100 live in file 1 only and the predicate is not
     // file-aligned: the r16 engine COW-rewrote that whole file; the
     // merge-on-read path writes ONE tiny deletion-vector sidecar and
     // rewrites NOTHING
-    spark.sql(s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100")
+    val del = committed(dir)(
+      spark.sql(s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100"))
     assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 19899L)
-    assert(LakeSource.lastReplacedFiles.get().isEmpty,
-      s"scattered delete rewrote files: ${LakeSource.lastReplacedFiles.get()}")
-    assert(LakeSource.lastDvWrites.get() match {
+    assert(del.removed.isEmpty,
+      s"scattered delete rewrote files: ${del.removed.map(_.name)}")
+    assert(del.dvGrowth match {
       case Seq((_, 101L)) => true
       case other => fail(s"expected one 101-ordinal vector, got $other")
     })
@@ -132,10 +168,10 @@ class LakeSpec extends AnyFunSuite {
     // MoR UPDATE (round 18) reads THROUGH the vector and lands as
     // delete+insert: the touched file's vector GROWS by the matched
     // ordinal, the replacement row appends — zero data files rewritten
-    LakeSource.lastReplacedFiles.set(Nil)
-    spark.sql(s"UPDATE $t SET kscore = -1 WHERE id = 3500")
-    assert(LakeSource.lastReplacedFiles.get().isEmpty,
-      s"MoR update rewrote files: ${LakeSource.lastReplacedFiles.get()}")
+    val upd = committed(dir)(
+      spark.sql(s"UPDATE $t SET kscore = -1 WHERE id = 3500"))
+    assert(upd.removed.isEmpty,
+      s"MoR update rewrote files: ${upd.removed.map(_.name)}")
     assert(dvTotal() == 152L,
       "the update's matched ordinal must join the file's vector")
     assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 19849L)
@@ -186,44 +222,50 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("concurrent commits: appends retry past a lost CAS; row-level rewrites abort loudly") {
-    val dir = tmp("lake_conflict")
-    val t = catalogTable("tconf", dir)
-    det(20000, 8).createOrReplaceTempView("lake_conflict_src")
-    spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_conflict_src")
-    val f = LakeFormat.fs(dir)
-    val v0 = LakeFormat.latestVersion(f, dir).get
-    // APPEND vs a concurrent commit: steal the next version number (a
-    // committed concurrent append, entries unchanged); the append must
-    // LOSE the CAS, re-read the new base, and land at v0+2 with both
-    // histories intact — appends are commutative
-    val (sch, entries) = LakeFormat.readManifest(f, dir, v0)
-    assert(LakeFormat.writeManifestCAS(f, dir, v0 + 1, sch, entries))
-    spark.range(1).select(lit(999999L).as("id"),
-        lit(0).cast("int").as("bucket"), lit(1).cast("int").as("kscore"),
-        lit(0.0).as("score"), lit("x").as("doc_id"))
-      .write.format(Lake).option("path", dir).mode("append").save()
-    assert(LakeFormat.latestVersion(f, dir).contains(v0 + 2))
-    assert(read(dir).count() == 20001L)
-    // ROW-LEVEL rewrite vs a concurrent commit: plant an append inside
-    // the window between the rewrite's snapshot read and its publish —
-    // its replacement rows are stale, so it must abort loudly and leave
-    // the concurrent append's state current
-    LakeSource.beforeRowLevelCommit.set(() => {
-      val base = LakeFormat.latestVersion(f, dir).get
-      val (s2, e2) = LakeFormat.readManifest(f, dir, base)
-      assert(LakeFormat.writeManifestCAS(f, dir, base + 1, s2, e2))
-    })
-    val err = intercept[Exception] {
-      spark.sql(s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100")
+    // on wrapfs, whose hook plants the concurrent commit below
+    val dir = WrappedLocalFs.uri(tmp("lake_conflict"))
+    WrappedLocalFs.registered(spark) {
+      val t = catalogTable("tconf", dir)
+      det(20000, 8).createOrReplaceTempView("lake_conflict_src")
+      spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_conflict_src")
+      val f = LakeFormat.fs(dir)
+      val v0 = LakeFormat.latestVersion(f, dir).get
+      // APPEND vs a concurrent commit: steal the next version number (a
+      // committed concurrent append, entries unchanged); the append must
+      // LOSE the CAS, re-read the new base, and land at v0+2 with both
+      // histories intact — appends are commutative
+      val (sch, entries) = LakeFormat.readManifest(f, dir, v0)
+      assert(LakeFormat.writeManifestCAS(f, dir, v0 + 1, sch, entries))
+      spark.range(1).select(lit(999999L).as("id"),
+          lit(0).cast("int").as("bucket"), lit(1).cast("int").as("kscore"),
+          lit(0.0).as("score"), lit("x").as("doc_id"))
+        .write.format(Lake).option("path", dir).mode("append").save()
+      assert(LakeFormat.latestVersion(f, dir).contains(v0 + 2))
+      assert(read(dir).count() == 20001L)
+      // ROW-LEVEL rewrite vs a concurrent commit: plant an append inside
+      // the window between the rewrite's snapshot read and its publish
+      // (the DELETE's first publish step is its deletion-vector create) —
+      // its replacement rows are stale, so it must abort loudly and leave
+      // the concurrent append's state current
+      WrappedLocalFs.beforePublish.set(() => {
+        val base = LakeFormat.latestVersion(f, dir).get
+        val (s2, e2) = LakeFormat.readManifest(f, dir, base)
+        assert(LakeFormat.writeManifestCAS(f, dir, base + 1, s2, e2))
+      })
+      val err = intercept[Exception] {
+        spark.sql(s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100")
+      }
+      def causes(e: Throwable): Seq[Throwable] =
+        if (e == null) Nil else e +: causes(e.getCause)
+      assert(causes(err).exists(_.getMessage != null) &&
+        causes(err).flatMap(c => Option(c.getMessage)).exists(
+          _.contains("commit conflict")),
+        s"expected a loud commit conflict, got: $err")
+      assert(WrappedLocalFs.beforePublish.get() == null,
+        "the DELETE's commit never reached its publish step")
+      assert(read(dir).count() == 20001L,
+        "the losing rewrite mutated the table anyway")
     }
-    def causes(e: Throwable): Seq[Throwable] =
-      if (e == null) Nil else e +: causes(e.getCause)
-    assert(causes(err).exists(_.getMessage != null) &&
-      causes(err).flatMap(c => Option(c.getMessage)).exists(
-        _.contains("commit conflict")),
-      s"expected a loud commit conflict, got: $err")
-    assert(read(dir).count() == 20001L,
-      "the losing rewrite mutated the table anyway")
   }
 
   test("time travel serves old snapshots; vacuum reclaims them loudly, never partially") {
@@ -273,14 +315,13 @@ class LakeSpec extends AnyFunSuite {
     spark.range(50, 100)
       .select(col("id"), lit(null).cast("double").as("v")).coalesce(1)
       .write.format(Lake).option("path", dir).mode("append").save()
-    LakeSource.lastReplacedFiles.set(Nil)
-    LakeSource.lastMetadataDeleted.set(Nil)
-    spark.sql("DELETE FROM glt.ns.tnull WHERE v IS NULL")
+    val d1 = committed(dir)(
+      spark.sql("DELETE FROM glt.ns.tnull WHERE v IS NULL"))
     assert(spark.sql("SELECT count(*) FROM glt.ns.tnull")
       .head.getLong(0) == 50L)
-    assert(LakeSource.lastMetadataDeleted.get().nonEmpty,
+    assert(metadataDeleted(d1).nonEmpty,
       "all-null/no-null split should take the metadata-only path")
-    assert(LakeSource.lastReplacedFiles.get().isEmpty)
+    assert(d1.added.isEmpty)
     // now a MIXED file: the same predicate is undecidable → the
     // merge-on-read path (round 17: deletion vectors, not a rewrite)
     spark.range(100, 200)
@@ -288,18 +329,15 @@ class LakeSpec extends AnyFunSuite {
         .as("v"))
       .coalesce(1)
       .write.format(Lake).option("path", dir).mode("append").save()
-    LakeSource.lastMetadataDeleted.set(Nil)
-    LakeSource.lastDvWrites.set(Nil)
-    spark.sql("DELETE FROM glt.ns.tnull WHERE v IS NULL")
+    val d2 = committed(dir)(
+      spark.sql("DELETE FROM glt.ns.tnull WHERE v IS NULL"))
     assert(spark.sql("SELECT count(*) FROM glt.ns.tnull")
       .head.getLong(0) == 100L)
-    assert(LakeSource.lastMetadataDeleted.get().isEmpty,
+    assert(metadataDeleted(d2).isEmpty,
       "a mixed-null file must not be metadata-deleted")
-    assert(LakeSource.lastDvWrites.get() == Seq(
-      LakeSource.lastDvWrites.get().headOption.getOrElse(("", 0L))) &&
-      LakeSource.lastDvWrites.get().headOption.exists(_._2 == 50L),
-      s"expected one 50-ordinal deletion vector, got " +
-        s"${LakeSource.lastDvWrites.get()}")
+    assert(d2.dvGrowth == Seq(d2.dvGrowth.headOption.getOrElse(("", 0L))) &&
+      d2.dvGrowth.headOption.exists(_._2 == 50L),
+      s"expected one 50-ordinal deletion vector, got ${d2.dvGrowth}")
   }
 
   test("streaming write: a killed epoch commit replays as a manifest-level REPLACEMENT, no dup/loss") {
@@ -379,8 +417,9 @@ class LakeSpec extends AnyFunSuite {
       .write.format(Lake).option("path", dir2).mode("overwrite").save()
     val r2 = spark.read.format(Lake).option("path", dir2).load()
     assert(r2.filter(col("v") > 100.0).count() == 1L) // the Inf row
-    assert(r2.filter(col("v") < 5.0).count() == 4L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1,
+    val (n4, poisoned) = planned(r2.filter(col("v") < 5.0).count())
+    assert(n4 == 4L)
+    assert(poisoned.size == 1,
       "stats-poisoned file must still be planned (never wrongly pruned)")
   }
 
@@ -420,20 +459,20 @@ class LakeSpec extends AnyFunSuite {
       .mode("overwrite").save()
     val df = read(dir)
     // complete pushdown: one LakeAggScan row, NO data partition planned
-    LakeSource.lastPlannedFiles.set(Nil)
     val agg = df.agg(count(lit(1)).as("n"), min(col("id")).as("mn"),
       max(col("id")).as("mx"), count(col("doc_id")).as("nd"))
     assert(agg.queryExecution.executedPlan.toString.contains("LakeAggScan"),
       agg.queryExecution.executedPlan.toString.take(500))
-    val r = agg.head
+    val (r, aggFiles) = planned(agg.head)
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
       ((20000L, 0L, 19999L, 20000L)))
-    assert(LakeSource.lastPlannedFiles.get().isEmpty,
+    assert(aggFiles.isEmpty,
       "manifest-only aggregate planned data partitions")
     // refused when rows are needed: a filter forces the real scan
-    assert(df.filter(col("id") < 100).agg(count(lit(1))).head.getLong(0)
-      == 100L)
-    assert(LakeSource.lastPlannedFiles.get().nonEmpty)
+    val (n100, scanFiles) = planned(
+      df.filter(col("id") < 100).agg(count(lit(1))).head.getLong(0))
+    assert(n100 == 100L)
+    assert(scanFiles.nonEmpty)
     // all-null column: MIN/MAX stays answerable (SQL NULL), COUNT(col)=0
     val dir2 = tmp("lake_agg_null")
     spark.range(0, 7)
@@ -499,52 +538,56 @@ class LakeSpec extends AnyFunSuite {
       "each of the 8 files should carry one doc_id bloom sidecar")
     // the needle is unique and hashed out of file order: every file's
     // [min,max] covers the key space, ONLY the bloom can prune
-    assert(spark.table(t).filter(col("doc_id") === doc(17003))
-      .count() == 1L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1,
-      s"bloom needle planned ${LakeSource.lastPlannedFiles.get()}")
+    val (n1, needle) = planned(
+      spark.table(t).filter(col("doc_id") === doc(17003)).count())
+    assert(n1 == 1L)
+    assert(needle.size == 1, s"bloom needle planned $needle")
     // an ABSENT key prunes everything — no task launches at all
-    assert(spark.table(t).filter(col("doc_id") === "h0_nope")
-      .count() == 0L)
-    assert(LakeSource.lastPlannedFiles.get().isEmpty,
-      s"absent needle planned ${LakeSource.lastPlannedFiles.get()}")
+    val (n0, absent) = planned(
+      spark.table(t).filter(col("doc_id") === "h0_nope").count())
+    assert(n0 == 0L)
+    assert(absent.isEmpty, s"absent needle planned $absent")
     // IN-lists prune to the union of the member needles' files
-    assert(spark.table(t)
-      .filter(col("doc_id").isin(doc(3), doc(17003))).count() == 2L)
-    assert(LakeSource.lastPlannedFiles.get().size <= 2)
+    val (n2, inList) = planned(spark.table(t)
+      .filter(col("doc_id").isin(doc(3), doc(17003))).count())
+    assert(n2 == 2L)
+    assert(inList.size <= 2)
     // control: an UNenrolled twin of the same data plans every file
     val dir2 = tmp("lake_bloom_off")
     mkRows().write.format(Lake).option("path", dir2)
       .mode("overwrite").save()
-    assert(spark.read.format(Lake).option("path", dir2).load()
-      .filter(col("doc_id") === doc(17003)).count() == 1L)
-    assert(LakeSource.lastPlannedFiles.get().size == 8,
+    val (nOff, off) = planned(spark.read.format(Lake).option("path", dir2)
+      .load().filter(col("doc_id") === doc(17003)).count())
+    assert(nOff == 1L)
+    assert(off.size == 8,
       "without enrollment the scattered needle cannot prune")
     // DML: a DV delete leaves the bloom honest (file still planned —
     // the value is physically there — rows correctly filtered)
     spark.sql(s"DELETE FROM $t WHERE id = 17003")
-    assert(spark.table(t).filter(col("doc_id") === doc(17003))
-      .count() == 0L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1)
+    val (nDel, afterDel) = planned(
+      spark.table(t).filter(col("doc_id") === doc(17003)).count())
+    assert(nDel == 0L)
+    assert(afterDel.size == 1)
     // OPTIMIZE rewrites carry fresh blooms on the new files; VACUUM
     // keeps referenced sidecars and reclaims the superseded ones
     LakeFormat.optimize(spark, dir, "id", 4)
     LakeFormat.vacuum(dir, LakeFormat.latestVersion(
       LakeFormat.fs(dir), dir).get, graceMs = 0L)
-    assert(spark.table(t).filter(col("doc_id") === doc(40))
-      .count() == 1L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1,
-      s"post-OPTIMIZE+vacuum needle planned " +
-        s"${LakeSource.lastPlannedFiles.get()}")
+    val (nOpt, afterOpt) = planned(
+      spark.table(t).filter(col("doc_id") === doc(40)).count())
+    assert(nOpt == 1L)
+    assert(afterOpt.size == 1,
+      s"post-OPTIMIZE+vacuum needle planned $afterOpt")
     val sidecars = new java.io.File(dir).list().count(_.startsWith("bloom-"))
     assert(sidecars == 4,
       s"vacuum should keep exactly the 4 live bloom sidecars; got $sidecars")
     // clones chain the absolute bloom references
     val cdir = tmp("lake_bloom_clone")
     spark.sql(s"CLONE '$dir' TO '$cdir'")
-    assert(spark.read.format(Lake).option("path", cdir).load()
-      .filter(col("doc_id") === doc(40)).count() == 1L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1)
+    val (nClone, clone) = planned(spark.read.format(Lake)
+      .option("path", cdir).load().filter(col("doc_id") === doc(40)).count())
+    assert(nClone == 1L)
+    assert(clone.size == 1)
   }
 
   test("CHECK constraints: enforced on batch/DML/path writes, NULL passes, violations abort pre-commit, fixed at CREATE, clone carries (r19)") {
@@ -633,30 +676,33 @@ class LakeSpec extends AnyFunSuite {
       .mode("overwrite").save()
     // append layout: doc_id = 'doc_' || id % 1000 cycles through every
     // id-contiguous file, so a needle plans ALL files pre-layout
-    assert(read(dir).filter(col("doc_id") === "doc_497").count() == 20L)
-    assert(LakeSource.lastPlannedFiles.get().size == 8)
+    val (n0, pre) = planned(
+      read(dir).filter(col("doc_id") === "doc_497").count())
+    assert(n0 == 20L)
+    assert(pre.size == 8)
     // RANGE BY a STRING column now yields per-file string bounds —
     // the layout + stats combination that was dead before r19
     LakeFormat.optimize(spark, dir, "doc_id", files = 16)
-    assert(read(dir).filter(col("doc_id") === "doc_497").count() == 20L)
-    val needle = LakeSource.lastPlannedFiles.get().size
+    val (n1, needleFiles) = planned(
+      read(dir).filter(col("doc_id") === "doc_497").count())
+    assert(n1 == 20L)
+    val needle = needleFiles.size
     assert(needle <= 2, s"string needle planned $needle of 16 files")
     // string RANGE predicates prune through the same bounds
-    val preCount = read(dir)
+    val (preCount, rangedFiles) = planned(read(dir)
       .filter(col("doc_id") >= "doc_900" && col("doc_id") < "doc_92")
-      .count()
-    val ranged = LakeSource.lastPlannedFiles.get().size
+      .count())
+    val ranged = rangedFiles.size
     assert(preCount > 0 && ranged <= 4,
       s"string band planned $ranged of 16 files")
     // manifest-only MIN/MAX on a string column (was: forced real scan)
-    LakeSource.lastPlannedFiles.set(Nil)
     val agg = read(dir).agg(min(col("doc_id")).as("mn"),
       max(col("doc_id")).as("mx"))
     assert(agg.queryExecution.executedPlan.toString.contains("LakeAggScan"),
       agg.queryExecution.executedPlan.toString.take(300))
-    val r = agg.head
+    val (r, aggFiles) = planned(agg.head)
     assert(r.getString(0) == "doc_0" && r.getString(1) == "doc_999", r)
-    assert(LakeSource.lastPlannedFiles.get().isEmpty)
+    assert(aggFiles.isEmpty)
     // an over-long value (> 64 chars) poisons ITS file's bounds only:
     // that file can never prune (correct, never wrongly prunable),
     // the bounded file still does
@@ -669,14 +715,15 @@ class LakeSpec extends AnyFunSuite {
       .coalesce(1)
       .write.format(Lake).option("path", dir2).mode("append").save()
     val d2 = spark.read.format(Lake).option("path", dir2).load()
-    assert(d2.filter(col("s") === "zz_nothing").count() == 0L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1,
+    val (nz, bounded) = planned(
+      d2.filter(col("s") === "zz_nothing").count())
+    assert(nz == 0L)
+    assert(bounded.size == 1,
       "the bounded file should prune; the poisoned file must survive")
     // and MIN/MAX falls back to a REAL scan when any file lacks bounds
-    LakeSource.lastPlannedFiles.set(Nil)
-    assert(d2.agg(max(col("s"))).head.getString(0).startsWith("zz_x") ||
-      d2.agg(max(col("s"))).head.getString(0).startsWith("zz_"))
-    assert(LakeSource.lastPlannedFiles.get().nonEmpty,
+    val (mx, mxFiles) = planned(d2.agg(max(col("s"))).head.getString(0))
+    assert(mx.startsWith("zz_x") || mx.startsWith("zz_"))
+    assert(mxFiles.nonEmpty,
       "string MIN/MAX must not be answered from a poisoned manifest")
   }
 
@@ -689,9 +736,10 @@ class LakeSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
     // bucket = id % 16 interleaves through every id-contiguous file, so
     // an equality predicate prunes NOTHING on the append layout
-    assert(read(dir).filter(col("bucket") === 3).agg(sum(col("id")))
-      .head.getLong(0) > 0L)
-    assert(LakeSource.lastPlannedFiles.get().size == 8,
+    val (s0, pre) = planned(read(dir).filter(col("bucket") === 3)
+      .agg(sum(col("id"))).head.getLong(0))
+    assert(s0 > 0L)
+    assert(pre.size == 8,
       "scattered column should defeat pruning before optimize")
     // cluster by bucket: each file's [min,max] tightens to ~2 values
     LakeFormat.optimize(spark, dir, "bucket", files = 8)
@@ -699,11 +747,11 @@ class LakeSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), sum(col("kscore")).as("s"))
       .collect().map(_.toString).sorted.toSeq
     assert(after == before, "optimize changed table content")
-    assert(read(dir).filter(col("bucket") === 3).agg(sum(col("id")))
-      .head.getLong(0) > 0L)
-    assert(LakeSource.lastPlannedFiles.get().size <= 2,
-      s"clustered equality predicate planned " +
-        s"${LakeSource.lastPlannedFiles.get().size} of 8 files")
+    val (s1, post) = planned(read(dir).filter(col("bucket") === 3)
+      .agg(sum(col("id"))).head.getLong(0))
+    assert(s1 > 0L)
+    assert(post.size <= 2,
+      s"clustered equality predicate planned ${post.size} of 8 files")
     // old snapshot (pre-optimize layout) still serves via time travel
     assert(spark.read.format(Lake).option("path", dir)
       .option("versionAsOf", 0).load().count() == 20000L)
@@ -719,12 +767,15 @@ class LakeSpec extends AnyFunSuite {
     // append layout: id-contiguous files — BOTH bucket (id % 16) and
     // kscore ((id * 31) % 997) interleave through every file, so
     // neither predicate prunes anything
-    assert(read(dir).filter(col("bucket") === 3).agg(sum(col("id")))
-      .head.getLong(0) > 0L)
-    assert(LakeSource.lastPlannedFiles.get().size == 8)
-    assert(read(dir).filter(col("kscore").between(100, 199))
-      .agg(sum(col("id"))).head.getLong(0) > 0L)
-    assert(LakeSource.lastPlannedFiles.get().size == 8)
+    val (sb0, preBucket) = planned(read(dir).filter(col("bucket") === 3)
+      .agg(sum(col("id"))).head.getLong(0))
+    assert(sb0 > 0L)
+    assert(preBucket.size == 8)
+    val (sk0, preKscore) = planned(read(dir)
+      .filter(col("kscore").between(100, 199))
+      .agg(sum(col("id"))).head.getLong(0))
+    assert(sk0 > 0L)
+    assert(preKscore.size == 8)
     val row = spark.sql(
       s"OPTIMIZE '$dir' ZORDER BY (bucket, kscore) INTO 16 FILES").head
     assert(row.getInt(3) == 8 && row.getInt(4) == 16,
@@ -739,20 +790,24 @@ class LakeSpec extends AnyFunSuite {
     // a 16-file 2-D z-order ≈ a 4×4 grid: a needle predicate on EITHER
     // column intersects ~one grid column/row — strictly fewer files
     // than the pre-rewrite full scan on both axes at once
-    assert(read(dir).filter(col("bucket") === 3).agg(sum(col("id")))
-      .head.getLong(0) > 0L)
-    val byBucket = LakeSource.lastPlannedFiles.get().size
+    val (sb, bucketFiles) = planned(read(dir).filter(col("bucket") === 3)
+      .agg(sum(col("id"))).head.getLong(0))
+    assert(sb > 0L)
+    val byBucket = bucketFiles.size
     assert(byBucket <= 8,
       s"bucket needle planned $byBucket of 16 z-ordered files")
-    assert(read(dir).filter(col("kscore").between(100, 199))
-      .agg(sum(col("id"))).head.getLong(0) > 0L)
-    val byKscore = LakeSource.lastPlannedFiles.get().size
+    val (sk, kscoreFiles) = planned(read(dir)
+      .filter(col("kscore").between(100, 199))
+      .agg(sum(col("id"))).head.getLong(0))
+    assert(sk > 0L)
+    val byKscore = kscoreFiles.size
     assert(byKscore <= 8,
       s"kscore band planned $byKscore of 16 z-ordered files")
     // conjunction of both axes: at most the smaller single-axis set
-    assert(read(dir).filter(col("bucket") === 3 &&
-      col("kscore").between(100, 199)).count() >= 0L)
-    val byBoth = LakeSource.lastPlannedFiles.get().size
+    val (nBoth, bothFiles) = planned(read(dir).filter(col("bucket") === 3 &&
+      col("kscore").between(100, 199)).count())
+    assert(nBoth >= 0L)
+    val byBoth = bothFiles.size
     assert(byBoth <= math.min(byBucket, byKscore),
       s"2-D needle planned $byBoth (single axes: $byBucket/$byKscore)")
     // guardrails: strings have no numeric stats; one column is RANGE
@@ -815,33 +870,40 @@ class LakeSpec extends AnyFunSuite {
       s"expected a loud commit conflict, got: $err")
 
   test("OPTIMIZE is snapshot-pinned: a concurrent commit aborts it loudly, never a lost append (r16 verdict #1)") {
-    val dir = tmp("lake_optconf")
-    det(20000, 8).write.format(Lake).option("path", dir)
-      .mode("overwrite").save()
-    val f = LakeFormat.fs(dir)
-    // plant a concurrent commit inside OPTIMIZE's read→publish window:
-    // before the fix, OPTIMIZE republished through the commutative
-    // truncate path and silently dropped whatever the concurrent commit
-    // added — a lost update in the one op whose contract is
-    // "content-identical rewrite"
-    LakeSource.beforeRowLevelCommit.set(() => {
-      val base = LakeFormat.latestVersion(f, dir).get
-      val (s2, e2) = LakeFormat.readManifest(f, dir, base)
-      assert(LakeFormat.writeManifestCAS(f, dir, base + 1, s2, e2))
-    })
-    val err = intercept[Exception] {
+    // on wrapfs, whose hook plants the concurrent commit below
+    val dir = WrappedLocalFs.uri(tmp("lake_optconf"))
+    WrappedLocalFs.registered(spark) {
+      det(20000, 8).write.format(Lake).option("path", dir)
+        .mode("overwrite").save()
+      val f = LakeFormat.fs(dir)
+      // plant a concurrent commit inside OPTIMIZE's read→publish window
+      // (its first publish step renames a staged file in): before the
+      // fix, OPTIMIZE republished through the commutative truncate path
+      // and silently dropped whatever the concurrent commit added — a
+      // lost update in the one op whose contract is "content-identical
+      // rewrite"
+      WrappedLocalFs.beforePublish.set(() => {
+        val base = LakeFormat.latestVersion(f, dir).get
+        val (s2, e2) = LakeFormat.readManifest(f, dir, base)
+        assert(LakeFormat.writeManifestCAS(f, dir, base + 1, s2, e2))
+      })
+      val err = intercept[Exception] {
+        LakeFormat.optimize(spark, dir, "bucket", files = 8)
+      }
+      assertLoudConflict(err)
+      assert(WrappedLocalFs.beforePublish.get() == null,
+        "OPTIMIZE's commit never reached its publish step")
+      // the concurrent commit's version stands; content intact
+      assert(LakeFormat.latestVersion(f, dir).contains(1))
+      assert(read(dir).count() == 20000L)
+      // an uncontended re-run succeeds and is content-identical
       LakeFormat.optimize(spark, dir, "bucket", files = 8)
+      assert(read(dir).count() == 20000L)
+      val (s3, clustered) = planned(read(dir).filter(col("bucket") === 3)
+        .agg(sum(col("id"))).head.getLong(0))
+      assert(s3 > 0L)
+      assert(clustered.size <= 2)
     }
-    assertLoudConflict(err)
-    // the concurrent commit's version stands; content intact
-    assert(LakeFormat.latestVersion(f, dir).contains(1))
-    assert(read(dir).count() == 20000L)
-    // an uncontended re-run succeeds and is content-identical
-    LakeFormat.optimize(spark, dir, "bucket", files = 8)
-    assert(read(dir).count() == 20000L)
-    assert(read(dir).filter(col("bucket") === 3).agg(sum(col("id")))
-      .head.getLong(0) > 0L)
-    assert(LakeSource.lastPlannedFiles.get().size <= 2)
   }
 
   test("concurrent ALTERs merge headers: a stale-handle evolution can never shrink the schema (r16 verdict #2)") {
@@ -1040,6 +1102,17 @@ class LakeSpec extends AnyFunSuite {
     assert(qL2.awaitTermination(120000))
     assert(read(out2).count() == 7L,
       "startingVersion=latest must stream only post-start appends")
+    // the query's last micro-batch planned exactly the appended file
+    val fd = LakeFormat.fs(dir)
+    val vTail = LakeFormat.latestVersion(fd, dir).get
+    val tail = LakeFormat.versionDiff(fd, dir,
+      Some(LakeFormat.readManifestRoot(fd, dir, vTail - 1)),
+      LakeFormat.readManifestRoot(fd, dir, vTail)).added.map(_.name)
+    val lastBatch = qL2.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+    assert(tail.size == 1 &&
+      LakeScans.in(lastBatch).flatMap(_.files) == tail, lastBatch.toString)
     // a rewrite inside the tail window breaks the append-only contract
     // LOUDLY — already-streamed rows cannot be retracted
     LakeFormat.optimize(spark, dir, "bucket", files = 4)
@@ -1378,10 +1451,11 @@ class LakeSpec extends AnyFunSuite {
         det(8000, 8).agg(sum(col("kscore"))).head.getLong(0))
       // filtered planning reads ONE segment, plans ONE file (8 slices →
       // contiguous 1000-id files; segment 0 covers ids [0, 4000))
-      assert(read(dir).filter(col("id") < 1000).count() == 1000L)
-      assert(LakeSource.lastSegmentsPlanned.get() == ((1, 2)),
-        s"segments planned: ${LakeSource.lastSegmentsPlanned.get()}")
-      assert(LakeSource.lastPlannedFiles.get().size == 1)
+      val (n, Seq(scan)) = scanned(
+        read(dir).filter(col("id") < 1000).count())
+      assert(n == 1000L)
+      assert(scan.segments == ((1, 2)), s"segments planned: ${scan.segments}")
+      assert(scan.files.size == 1)
       // append: base chunks re-hash identical → REUSED, not rewritten
       spark.range(8000, 8100)
         .selectExpr("id", "CAST(id % 16 AS INT) AS bucket",
@@ -1439,12 +1513,16 @@ class LakeSpec extends AnyFunSuite {
       val root = LakeFormat.readManifestRoot(f, dir, v + 1)
       assert(root.segs.size == 156 && root.inline.size == 16,
         s"segs=${root.segs.size} inline=${root.inline.size}")
-      // a needle predicate loads 1 segment of 156 and plans 1 file
-      assert(read(dir).filter(col("id") < 500).count() == 500L)
-      assert(LakeSource.lastSegmentsPlanned.get() == ((1, 156)),
-        s"segments planned: ${LakeSource.lastSegmentsPlanned.get()}")
-      assert(LakeSource.lastPlannedFiles.get() ==
-        meta.entries.take(1).map(_.name))
+      // a needle predicate loads 1 segment of 156 and plans 1 file —
+      // and the executed plan's own description says so
+      val (n, plans) = TestSession.plansOf(
+        read(dir).filter(col("id") < 500).count())
+      assert(n == 500L)
+      val Seq(scan) = plans.flatMap(LakeScans.in)
+      assert(scan.segments == ((1, 156)), s"segments planned: ${scan.segments}")
+      assert(scan.files == meta.entries.take(1).map(_.name))
+      assert(plans.exists(_.toString.contains("files=1 segments=1/156")),
+        plans.mkString("\n"))
       // global COUNT(*) answers from the manifest — zero file opens
       // even with 9,984 unreadable synthetic entries
       assert(read(dir).count() == 16000L + 9984L * 1000L)
@@ -1456,17 +1534,22 @@ class LakeSpec extends AnyFunSuite {
       // from scratch: one removal shifted every downstream boundary
       // and rewrote ~156 segments.
       val t = catalogTable("tseg10k", dir)
-      val w0 = LakeSource.segmentWriteCount.get()
-      spark.sql(s"DELETE FROM $t WHERE id >= 16000 AND id < 17000")
-      assert(LakeSource.lastMetadataDeleted.get().size == 1,
-        LakeSource.lastMetadataDeleted.get().toString)
-      val wrote = LakeSource.segmentWriteCount.get() - w0
+      // segments written = new content-addressed `_seg-*` names: the
+      // writer never rewrites a name that already exists
+      def segNames = new java.io.File(dir).list().toSet
+        .filter((n: String) => n.startsWith("_seg-"))
+      val w0 = segNames
+      val d = committed(dir)(
+        spark.sql(s"DELETE FROM $t WHERE id >= 16000 AND id < 17000"))
+      assert(metadataDeleted(d).size == 1, d.toString)
+      val wrote = segNames.diff(w0).size
       assert(wrote <= 1,
         s"diff commit wrote $wrote segment sidecars for a 1-file DML")
       assert(read(dir).count() == 16000L + 9984L * 1000L - 1000L)
       // the surviving layout still plans needles from 1 segment
-      assert(read(dir).filter(col("id") < 500).count() == 500L)
-      assert(LakeSource.lastSegmentsPlanned.get()._1 == 1)
+      val (n2, Seq(scan2)) = scanned(read(dir).filter(col("id") < 500).count())
+      assert(n2 == 500L)
+      assert(scan2.segments._1 == 1)
     } finally LakeFormat.segmentFiles = saved
   }
 
@@ -1756,15 +1839,14 @@ class LakeSpec extends AnyFunSuite {
     det(20000, 8).createOrReplaceTempView("morupd_src")
     spark.sql(s"INSERT OVERWRITE $t SELECT * FROM morupd_src")
     val before = lakeFiles(dir).toSet
-    LakeSource.lastReplacedFiles.set(Seq("sentinel"))
-    LakeSource.lastDvWrites.set(Nil)
     // ~21 matched rows scattered across ALL 8 files: the r17 COW path
     // rewrote all 8; MoR writes 8 tiny vectors + the 21 replacement
     // rows, and rewrites NOTHING
-    spark.sql(s"UPDATE $t SET kscore = kscore + 1000 WHERE id % 997 = 13")
-    assert(LakeSource.lastReplacedFiles.get().isEmpty,
-      s"scattered update rewrote: ${LakeSource.lastReplacedFiles.get()}")
-    val dv = LakeSource.lastDvWrites.get()
+    val d = committed(dir)(spark.sql(
+      s"UPDATE $t SET kscore = kscore + 1000 WHERE id % 997 = 13"))
+    assert(d.removed.isEmpty,
+      s"scattered update rewrote: ${d.removed.map(_.name)}")
+    val dv = d.dvGrowth
     assert(dv.size == 8 && dv.map(_._2).sum == 21L, dv.toString)
     assert(before.subsetOf(lakeFiles(dir).toSet),
       "MoR update removed original data files")
@@ -1807,8 +1889,6 @@ class LakeSpec extends AnyFunSuite {
   test("merge-on-read MERGE INTO: scattered merge writes vectors + appends, zero rewrites; identical to a relational replay; feed = exactly the matched+inserted rows (r19 — r18 verdict #1)") {
     val dir = tmp("lake_mormerge")
     val t = catalogTable("tmormerge", dir)
-    LakeSource.lastReplacedFiles.set(Seq("sentinel"))
-    LakeSource.lastDvWrites.set(Nil)
     det(20000, 8).createOrReplaceTempView("mormerge_src")
     spark.sql(s"INSERT OVERWRITE $t SELECT * FROM mormerge_src")
     // source: ~20 scattered matches across all 8 files + 100 new ids
@@ -1816,17 +1896,18 @@ class LakeSpec extends AnyFunSuite {
         col("id") >= 20000)
       .select(col("id"), (col("id") % 7).cast("int").as("delta"))
       .createOrReplaceTempView("mormerge_delta")
-    spark.sql(s"""MERGE INTO $t t USING mormerge_delta s ON t.id = s.id
+    val d = committed(dir)(spark.sql(
+      s"""MERGE INTO $t t USING mormerge_delta s ON t.id = s.id
       |WHEN MATCHED AND t.bucket = 3 THEN DELETE
       |WHEN MATCHED THEN UPDATE SET kscore = t.kscore + s.delta
       |WHEN NOT MATCHED THEN INSERT (id, bucket, kscore, score, doc_id)
       |  VALUES (s.id, CAST(s.id % 16 AS INT), CAST(s.delta AS INT),
-      |          CAST(0.0 AS DOUBLE), 'ins')""".stripMargin)
+      |          CAST(0.0 AS DOUBLE), 'ins')""".stripMargin))
     // the MoR pin: ZERO data files rewritten — matched rows are vector
     // growth, replacements + not-matched rows are appended files
-    assert(LakeSource.lastReplacedFiles.get().isEmpty,
-      s"MoR MERGE rewrote files: ${LakeSource.lastReplacedFiles.get()}")
-    val dv = LakeSource.lastDvWrites.get()
+    assert(d.removed.isEmpty,
+      s"MoR MERGE rewrote files: ${d.removed.map(_.name)}")
+    val dv = d.dvGrowth
     assert(dv.nonEmpty && dv.map(_._2).sum == 21L,
       s"expected 21 matched ordinals in vectors, got $dv")
     // value identity with the same merge replayed as DataFrame joins:
@@ -1894,22 +1975,29 @@ class LakeSpec extends AnyFunSuite {
     val src = spark.range(15000, 20100)
       .select(col("id"), (col("id") % 7).cast("int").as("delta"))
     src.createOrReplaceTempView("nms_src")
-    LakeSource.lastReplacedFiles.set(Seq("sentinel"))
-    LakeSource.lastDvWrites.set(Nil)
-    spark.sql(s"""MERGE INTO $t t USING nms_src s ON t.id = s.id
+    // files 6 and 7 hold ids 15000–19999: the MERGE matches every row
+    // of them, so their vectors would cover them whole
+    val f0 = LakeFormat.fs(dir)
+    val wholeMatched = LakeFormat.readManifest(f0, dir,
+      LakeFormat.latestVersion(f0, dir).get)._2
+      .filter(_.stats("id").min.exists(_.toLong >= 15000L)).map(_.name)
+    assert(wholeMatched.size == 2, wholeMatched.toString)
+    val d = committed(dir)(spark.sql(
+      s"""MERGE INTO $t t USING nms_src s ON t.id = s.id
       |WHEN MATCHED THEN UPDATE SET kscore = t.kscore + s.delta
       |WHEN NOT MATCHED THEN INSERT (id, bucket, kscore, score, doc_id)
       |  VALUES (s.id, CAST(s.id % 16 AS INT), CAST(s.delta AS INT),
       |          CAST(0.0 AS DOUBLE), 'ins')
       |WHEN NOT MATCHED BY SOURCE AND t.bucket = 5 THEN DELETE
       |WHEN NOT MATCHED BY SOURCE AND t.bucket = 6 THEN
-      |  UPDATE SET kscore = -1""".stripMargin)
+      |  UPDATE SET kscore = -1""".stripMargin))
     // the whole three-clause matrix is still merge-on-read: matched
     // updates AND by-source deletes/updates land as vector growth,
-    // replacement + new rows as appends — zero files rewritten
-    assert(LakeSource.lastReplacedFiles.get().isEmpty,
-      s"NMS MERGE rewrote: ${LakeSource.lastReplacedFiles.get()}")
-    assert(LakeSource.lastDvWrites.get().nonEmpty,
+    // replacement + new rows as appends — zero files rewritten: the
+    // only entries leaving the manifest are the two wholly-matched files
+    assert(d.removed.map(_.name).sorted == wholeMatched.sorted,
+      s"NMS MERGE rewrote: ${d.removed.map(_.name)}")
+    assert(d.dvGrowth.nonEmpty,
       "NMS MERGE wrote no deletion vectors")
     // relational replay of all three clause families (the driver-gate
     // oracle re-derives the same in DuckDB for q247)
@@ -2437,9 +2525,10 @@ class LakeSpec extends AnyFunSuite {
     assert(spark.table(t).agg(sum(col("kscore"))).head.getLong(0) > 0L)
     // stats pruning still narrows on the widened column: the pre-widen
     // statistics parse through the same numeric algebra
-    assert(spark.table(t).filter(col("kscore") === 3000000000L).count() == 1L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1,
-      s"widened-column needle planned ${LakeSource.lastPlannedFiles.get()}")
+    val (nWide, wide) = planned(
+      spark.table(t).filter(col("kscore") === 3000000000L).count())
+    assert(nWide == 1L)
+    assert(wide.size == 1, s"widened-column needle planned $wide")
     // time travel serves the version's OWN type
     assert(spark.read.format(Lake).option("path", dir)
       .option("versionAsOf", vBefore).load()
@@ -2558,11 +2647,10 @@ class LakeSpec extends AnyFunSuite {
       det(20000, 8).agg(sum("kscore").cast("long")).head.getLong(0))
     // stats PRUNING still narrows the scan post-rename (phys-key
     // translation): id is unrenamed, points is renamed — filter both
-    assert(spark.sql(
-      "SELECT count(*) FROM glt.ns.tcm WHERE id < 2500").head.getLong(0)
-      == 2500L)
-    assert(LakeSource.lastPlannedFiles.get().size == 1,
-      s"post-rename pruning planned ${LakeSource.lastPlannedFiles.get()}")
+    val (nRen, renamed) = planned(spark.sql(
+      "SELECT count(*) FROM glt.ns.tcm WHERE id < 2500").head.getLong(0))
+    assert(nRen == 2500L)
+    assert(renamed.size == 1, s"post-rename pruning planned $renamed")
     // time travel BEFORE the rename serves the historical schema
     val tt = spark.read.format(Lake).option("path", dir)
       .option("versionAsOf", vPreRename).load()
@@ -2681,11 +2769,11 @@ class LakeSpec extends AnyFunSuite {
     }
     // a partition-range predicate prunes to exactly that partition's
     // 4 bucket files — the days(ts)-style coarse pruning, via stats
-    assert(read(dirA).filter(col("id") >= 5000 && col("id") < 10000)
-      .count() == 5000L)
-    assert(LakeSource.lastPlannedFiles.get().size == 4,
-      s"partition predicate planned " +
-        s"${LakeSource.lastPlannedFiles.get().size} files, wanted 4")
+    val (nPart, part) = planned(read(dirA)
+      .filter(col("id") >= 5000 && col("id") < 10000).count())
+    assert(nPart == 5000L)
+    assert(part.size == 4,
+      s"partition predicate planned ${part.size} files, wanted 4")
     // AND the bucket term still powers the storage-partitioned join:
     // zero shuffle exchanges
     val saved = Seq("spark.sql.adaptive.enabled",
@@ -3163,12 +3251,11 @@ class LakeSpec extends AnyFunSuite {
     assert(meta().entries.size == 8)
     val big = meta().entries.filter(_.bytes >= 10000).map(_.name).toSet
     assert(big.size == 2)
-    val r = spark.sql(
-      s"OPTIMIZE $t COMPACT FILES UNDER 10000 BYTES INTO 1 FILES").collect()
+    val (r, compacted) = planned(spark.sql(
+      s"OPTIMIZE $t COMPACT FILES UNDER 10000 BYTES INTO 1 FILES").collect())
     assert(r(0).getInt(3) == 6 && r(0).getInt(4) == 3, r.toSeq.toString)
     // the pinned read planned ONLY the small files — never the corpus
-    assert(LakeSource.lastPlannedFiles.get().size == 6,
-      s"compaction read ${LakeSource.lastPlannedFiles.get().size} files")
+    assert(compacted.size == 6, s"compaction read ${compacted.size} files")
     // a pinned read's aggregate must NOT take the manifest-only path —
     // those answers are whole-snapshot, and a pinned COUNT(*) answered
     // from the full manifest would be silently wrong (caught in design:
@@ -3285,8 +3372,9 @@ class LakeSpec extends AnyFunSuite {
   test("diff commit: a DML touching only inline-tail files reads ZERO segments (r18 review #3)") {
     val saved = LakeFormat.segmentFiles
     LakeFormat.segmentFiles = 4
-    try {
-      val dir = tmp("lake_diff_inline")
+    // on wrapfs, which counts the segment opens
+    val dir = WrappedLocalFs.uri(tmp("lake_diff_inline"))
+    try WrappedLocalFs.registered(spark) {
       val t = catalogTable("tdiffinl", dir)
       det(8000, 8).createOrReplaceTempView("diff_inl_src")
       spark.sql(s"INSERT OVERWRITE $t SELECT * FROM diff_inl_src") // 2 segs
@@ -3307,7 +3395,7 @@ class LakeSpec extends AnyFunSuite {
       // from the inline tail FIRST and copy both segment references
       // through UNREAD — the hot case (DML on the newest files) never
       // pays the old corpus's metadata
-      val r0 = LakeSource.segmentReadCount.get()
+      val r0 = WrappedLocalFs.segmentOpens.get()
       spark.sql(s"DELETE FROM $t WHERE id = 8050")
       // the query's SCAN reads segments for planning (stats pruning
       // prunes both — ids < 8000); the COMMIT itself must read none.
@@ -3315,14 +3403,14 @@ class LakeSpec extends AnyFunSuite {
       val root2 = LakeFormat.readManifestRoot(f, dir,
         LakeFormat.latestVersion(f, dir).get)
       val inlineEntry = root2.inline.head
-      val r1 = LakeSource.segmentReadCount.get()
+      val r1 = WrappedLocalFs.segmentOpens.get()
       assert(LakeFormat.writeManifestCASDiff(f, dir,
         LakeFormat.latestVersion(f, dir).get + 1, root2.schema, root2,
         Map(inlineEntry.name -> ((e: LakeFormat.FileEntry) =>
           Some(e): Option[LakeFormat.FileEntry])),
         Nil, root2.cluster))
-      assert(LakeSource.segmentReadCount.get() == r1,
-        s"inline-only diff read ${LakeSource.segmentReadCount.get() - r1} segments")
+      assert(WrappedLocalFs.segmentOpens.get() == r1,
+        s"inline-only diff read ${WrappedLocalFs.segmentOpens.get() - r1} segments")
       assert(r0 >= 0) // (scan-side reads are legitimate; not asserted)
       assert(spark.table(t).count() == 8099L)
     } finally LakeFormat.segmentFiles = saved
@@ -3340,10 +3428,9 @@ class LakeSpec extends AnyFunSuite {
     val t = "glt.ns.tfileio"
     det(20000, 8).createOrReplaceTempView("lake_fileio_src")
     spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_fileio_src")
-    LakeSource.lastDvWrites.set(Nil)
-    spark.sql(s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100")
-    assert(LakeSource.lastDvWrites.get().size == 1,
-      s"expected a merge-on-read delete: ${LakeSource.lastDvWrites.get()}")
+    val d = committed(dir)(
+      spark.sql(s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100"))
+    assert(d.dvGrowth.size == 1, s"expected a merge-on-read delete: $d")
     LakeFormat.optimize(spark, dir, "bucket", files = 4)
     val names = new java.io.File(dir).list().toSeq
     // every kind of lake file was written: data, manifests, deletion
@@ -3432,10 +3519,9 @@ class LakeSpec extends AnyFunSuite {
       spark.sql(s"""CREATE TABLE glt.ns.twrapped (
         |  id BIGINT, bucket INT, kscore INT, score DOUBLE, doc_id STRING
         |) USING lake LOCATION '$w'""".stripMargin)
-      LakeSource.lastDvWrites.set(Nil)
-      spark.sql("DELETE FROM glt.ns.twrapped WHERE id >= 300 AND id <= 309")
-      assert(LakeSource.lastDvWrites.get().size == 1,
-        s"expected a merge-on-read delete: ${LakeSource.lastDvWrites.get()}")
+      val d = committed(w)(
+        spark.sql("DELETE FROM glt.ns.twrapped WHERE id >= 300 AND id <= 309"))
+      assert(d.dvGrowth.size == 1, s"expected a merge-on-read delete: $d")
       assert(LakeFormat.versions(LakeFormat.fs(w), w) == Seq(0, 1, 2))
       assert(read(w).count() == 1000L)
       assert(spark.read.format(Lake).option("path", w)
@@ -3445,5 +3531,53 @@ class LakeSpec extends AnyFunSuite {
     assert(read(dir).count() == 1000L)
     assert(read(dir).filter(col("id").between(300, 309)).count() == 0L)
     assert(!new java.io.File(dir).list().exists(_.startsWith("_staging-")))
+  }
+
+  test("lake facts belong to one query: concurrent reads each plan only their own file; concurrent DELETEs each commit only their own vectors") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    // the file of an 8-file table whose id range holds `id`
+    def fileOf(dir: String, id: Long): String = {
+      val f = LakeFormat.fs(dir)
+      LakeFormat.readManifest(f, dir, LakeFormat.latestVersion(f, dir).get)._2
+        .find(e => e.stats("id").min.exists(_.toLong <= id) &&
+          e.stats("id").max.exists(_.toLong >= id)).get.name
+    }
+    def inParallel[T](bodies: Seq[() => T]): Seq[T] = {
+      val pool = Executors.newFixedThreadPool(bodies.size)
+      try bodies.map(b => pool.submit(new Callable[T] { def call(): T = b() }))
+        .map(_.get(5, TimeUnit.MINUTES))
+      finally pool.shutdownNow()
+    }
+    // two threads on one session, 20 one-file needles each
+    val dir = tmp("lake_attrib")
+    det(20000, 8).write.format(Lake).option("path", dir)
+      .mode("overwrite").save()
+    val ids = Seq(100L, 17600L)
+    val runs = inParallel(ids.map(id => () => (1 to 20).map(_ =>
+      planned(read(dir).filter(col("id") === id).count()))))
+    ids.zip(runs).foreach { case (id, run) =>
+      run.foreach { case (n, files) =>
+        assert(n == 1L)
+        assert(files == Seq(fileOf(dir, id)),
+          s"the needle for id $id planned $files")
+      }
+    }
+    // two DELETEs at once on two tables: each committed version holds
+    // exactly its own deletion vector
+    val (dirA, dirB) = (tmp("lake_attrib_a"), tmp("lake_attrib_b"))
+    val (ta, tb) = (catalogTable("tattra", dirA), catalogTable("tattrb", dirB))
+    det(20000, 8).createOrReplaceTempView("lake_attrib_src")
+    Seq(ta, tb).foreach(t =>
+      spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_attrib_src"))
+    val Seq(da, db) = inParallel(Seq(
+      () => committed(dirA)(
+        spark.sql(s"DELETE FROM $ta WHERE id >= 3000 AND id <= 3100")),
+      () => committed(dirB)(
+        spark.sql(s"DELETE FROM $tb WHERE id >= 12000 AND id <= 12049"))))
+    assert(da.dvGrowth == Seq(fileOf(dirA, 3000L) -> 101L), da.toString)
+    assert(db.dvGrowth == Seq(fileOf(dirB, 12000L) -> 50L), db.toString)
+    assert(Seq(da, db).forall(d => d.added.isEmpty && d.removed.isEmpty))
+    assert(spark.table(ta).count() == 19899L)
+    assert(spark.table(tb).count() == 19950L)
   }
 }

@@ -323,9 +323,10 @@ class VecDimSpec extends AnyFunSuite {
   }
 
   test("pqIndexCompact CAS guard: concurrent compactor commit inside the publish window aborts the late compactor, no append lost") {
-    val dir = TestSession.tmp("graft_pq_cas")
-    s128.conf.set(operators.Vectors.PqIndexDirKey, dir)
-    try {
+    // the index lives on wrapfs, whose hook interleaves compactor B
+    val local = TestSession.tmp("graft_pq_cas")
+    s128.conf.set(operators.Vectors.PqIndexDirKey, WrappedLocalFs.uri(local))
+    try WrappedLocalFs.registered(s128) {
       val train = emb128.filter(col("vec_id") < 200)
       val b1 = emb128.filter(col("vec_id") >= 200 && col("vec_id") < 250)
       val b2 = emb128.filter(col("vec_id") >= 250)
@@ -333,11 +334,12 @@ class VecDimSpec extends AnyFunSuite {
       operators.Vectors.pqIndexAppend(b1, "tcas", "s1")
       // the r14 verdict's race, verbatim: compactor A lists {codes, s1};
       // inside A's publish window compactor B commits append s2 AND a
-      // full compaction absorbing s1+s2, swapping the pointer first.
-      // Unguarded, A's later rename would drop s2's rows from the
+      // full compaction absorbing s1+s2, swapping the pointer first —
+      // at A's check-and-swap read of the pointer, after A staged its
+      // own. Unguarded, A's later rename would drop s2's rows from the
       // current view while its exactly-once marker blocks re-ingest.
       val d2before = new java.util.concurrent.atomic.AtomicReference[java.lang.Double](null)
-      operators.Vectors.compactBeforeSwapHook.set(new Runnable {
+      WrappedLocalFs.beforePointerCheck.set(new Runnable {
         override def run(): Unit = {
           d2before.set(operators.Vectors.pqIndexAppend(b2, "tcas", "s2"))
           assert(operators.Vectors.pqIndexCompact(s128, "tcas") == N * 32)
@@ -354,7 +356,7 @@ class VecDimSpec extends AnyFunSuite {
       assert(served.select("vec_id").distinct().count() == N)
       // the late compactor cleaned up: exactly ONE versioned segment (the
       // winner's) and no tmp-pointer residue
-      val residue = new java.io.File(dir, "tcas").listFiles().map(_.getName)
+      val residue = new java.io.File(local, "tcas").listFiles().map(_.getName)
       assert(residue.count(_.startsWith("codes_v_")) == 1,
         s"late compactor's staged segment not cleaned: ${residue.mkString(",")}")
       assert(!residue.exists(_.startsWith("_codes_current.tmp_")),
@@ -366,7 +368,7 @@ class VecDimSpec extends AnyFunSuite {
       assert(operators.Vectors.pqIndexCompact(s128, "tcas") == N * 32)
       assert(operators.Vectors.pqIndex(train, "tcas", rounds = 1)._1.count() == N * 32)
     } finally {
-      operators.Vectors.compactBeforeSwapHook.set(null)
+      WrappedLocalFs.beforePointerCheck.set(null)
       s128.conf.unset(operators.Vectors.PqIndexDirKey)
     }
   }

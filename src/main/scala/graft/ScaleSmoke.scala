@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{LakeFormat, LakeScans}
+import graft.sources.LakeFormat.committed
 
 /** Scale-smoke harness: times the surfaces no registered query reaches
   * at scale — the DSv2 sink write, the micro-batch drain and lake
@@ -58,19 +59,13 @@ object ScaleSmoke {
       spark.read.format("graft.sources.LakeSource").option("path", dir).load()
     // the facts the lake requires pin belong to one query: planned files
     // and segments come from the scans of the plan that ran, replaced
-    // files and vector growth from the diff of the version committed
+    // files and vector growth from the diff of the one version the
+    // command committed (`LakeFormat.committed`)
     def scansOf(df: DataFrame): (Array[Row], Seq[LakeScans.Planned]) =
       (df.collect(), LakeScans.in(df.queryExecution.executedPlan))
     def countPlanned(df: DataFrame): (Long, Seq[String]) = {
       val (rows, scans) = scansOf(df.groupBy().count()) // df.count()'s plan
       (rows(0).getLong(0), scans.flatMap(_.files))
-    }
-    def committed(dir: String)(command: => Unit): LakeFormat.VersionDiff = {
-      command
-      val f = LakeFormat.fs(dir)
-      val v = LakeFormat.latestVersion(f, dir).get
-      LakeFormat.versionDiff(f, dir, Some(LakeFormat.readManifestRoot(f,
-        dir, v - 1)), LakeFormat.readManifestRoot(f, dir, v))
     }
 
     val base = java.nio.file.Files.createTempDirectory("graft_smoke").toString
@@ -159,8 +154,13 @@ object ScaleSmoke {
       // metadata-only DELETE: a file-aligned predicate drops whole files
       // with zero tasks — wall time must be manifest-IO, not row work
       time("lake metadata delete (file-aligned)", nEvents / 4) {
-        val d = committed(lakeDir)(spark.sql(
-          s"DELETE FROM gsmoke.ns.lake WHERE id >= ${nEvents / 4 * 3}"))
+        lazy val del = spark.sql(
+          s"DELETE FROM gsmoke.ns.lake WHERE id >= ${nEvents / 4 * 3}")
+        val d = committed(lakeDir)(del)
+        // a merge-on-read delete of whole files commits the same diff;
+        // only the metadata path's plan has no lake scan
+        require(LakeScans.in(del.queryExecution.executedPlan).isEmpty,
+          "file-aligned DELETE scanned the table")
         require(d.added.isEmpty && d.dvChanged.isEmpty &&
           d.removed.size == 16,
           s"metadata delete dropped ${d.removed.size} files " +

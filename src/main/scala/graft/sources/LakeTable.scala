@@ -95,7 +95,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * rewrite narrowness, snapshot stability). Those counts belong to one
   * query: planned files and segments come from the executed plan's
   * scans ([[LakeScans]]), replaced files and vector growth from the
-  * diff of the version a command committed ([[LakeFormat.versionDiff]]).
+  * diff of the version a command committed ([[LakeFormat.committed]]).
   *
   * Usage:
   * {{{
@@ -1029,6 +1029,20 @@ object LakeFormat {
       removed = before.filterNot(e => afterNames.contains(e.name)),
       dvChanged = after.flatMap(e =>
         beforeBy.get(e.name).filter(_.dv != e.dv).map(_ -> e)))
+  }
+
+  /** Run `command` and diff the version it committed on the table at
+    * `dir` against its predecessor. Fails unless it committed exactly
+    * one version, so the diff can never be an earlier command's. */
+  def committed(dir: String)(command: => Any): VersionDiff = {
+    val f = fs(dir)
+    val before = latestVersion(f, dir)
+    command
+    val after = latestVersion(f, dir)
+    require(after == Some(before.fold(0)(_ + 1)),
+      s"expected one commit on $dir: $before → $after")
+    versionDiff(f, dir, before.map(readManifestRoot(f, dir, _)),
+      readManifestRoot(f, dir, after.get))
   }
 
   /** Commit timestamp of version `v`, reading only the header line —

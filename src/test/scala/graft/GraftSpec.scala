@@ -70,11 +70,13 @@ object TestSession {
     * actions and commands, and of the executions those ran inside them.
     * Executions are matched to `body` by a job tag on the calling
     * thread, so plans of other threads' queries on the same session are
-    * never mixed in. A streaming query's plans come from its
-    * `lastExecution` instead. */
+    * never mixed in. A command's plan comes from its own (eager)
+    * execution, so collecting its result (`CommandResultExec`, the same
+    * plan again) adds nothing: run the command inside `body`. A
+    * streaming query's plans come from its `lastExecution` instead. */
   def plansOf[T](body: => T): (T, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
     val sc = spark.sparkContext
     val tag = s"graft_plans_of_${java.util.UUID.randomUUID()}"
@@ -90,7 +92,7 @@ object TestSession {
             .asInstanceOf[QueryExecution]
           // (a query that failed in planning has no plan to add)
           Option(qe).flatMap(q => scala.util.Try(q.executedPlan).toOption)
-            .foreach(plans.add)
+            .filterNot(_.isInstanceOf[CommandResultExec]).foreach(plans.add)
         case _ =>
       }
     }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{LakeFormat, LakeScans, LakeSource}
+import graft.sources.LakeFormat.committed
 
 /** Protocol pins for the round-16 lakehouse table
   * ([[graft.sources.LakeTable]]) — the invariants the q225–q229 result
@@ -43,29 +44,24 @@ class LakeSpec extends AnyFunSuite {
     (out, plans.flatMap(LakeScans.in))
   }
 
-  /** The file-level diff of the version `command` committed on the lake
-    * table at `dir` — empty when it committed none. Replaced files are
-    * the removed entries; deletion-vector writes are `dvGrowth`. */
-  private def committed(dir: String)(command: => Unit): LakeFormat.VersionDiff = {
-    val f = LakeFormat.fs(dir)
-    val before = LakeFormat.latestVersion(f, dir)
-    command
-    val after = LakeFormat.latestVersion(f, dir)
-    if (after == before) LakeFormat.VersionDiff(Nil, Nil, Nil)
-    else {
-      assert(after == before.map(_ + 1).orElse(Some(0)),
-        s"expected one commit on $dir: $before → $after")
-      LakeFormat.versionDiff(f, dir,
-        before.map(LakeFormat.readManifestRoot(f, dir, _)),
-        LakeFormat.readManifestRoot(f, dir, after.get))
-    }
-  }
-
   /** The files a commit dropped from the manifest as a metadata-only
-    * delete: removed entries with nothing added and no vector changed. */
+    * delete: removed entries with nothing added and no vector changed.
+    * A merge-on-read DELETE that hits only whole files commits the same
+    * diff, so a test of the metadata path also asserts that the DELETE
+    * planned no lake scan (`noScan`). Replaced files are the removed
+    * entries; deletion-vector writes are `dvGrowth`. */
   private def metadataDeleted(d: LakeFormat.VersionDiff): Seq[String] =
     if (d.added.isEmpty && d.dvChanged.isEmpty) d.removed.map(_.name)
     else Nil
+
+  /** The diff of the one version `delete` committed on `dir`, after
+    * asserting that it ran no lake scan: the metadata-only path. */
+  private def noScan(dir: String)(delete: => Any): LakeFormat.VersionDiff = {
+    val (d, files) = planned(committed(dir)(delete))
+    assert(files.isEmpty,
+      s"the DELETE scanned $files: it left the metadata-only path")
+    d
+  }
 
   private def catalogTable(name: String, dir: String): String = {
     spark.conf.set("spark.sql.catalog.glt", "graft.sources.GraftCatalog")
@@ -112,7 +108,7 @@ class LakeSpec extends AnyFunSuite {
     // id < 5000 is exactly files 0 and 1 — every file decides wholly,
     // so Spark's OptimizeMetadataOnlyDeleteFromTable takes the
     // canDeleteWhere path: a manifest edit, zero rewrite tasks
-    val d = committed(dir)(spark.sql(s"DELETE FROM $t WHERE id < 5000"))
+    val d = noScan(dir)(spark.sql(s"DELETE FROM $t WHERE id < 5000"))
     assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 15000L)
     assert(metadataDeleted(d).size == 2,
       s"expected a 2-file metadata delete, got $d")
@@ -315,7 +311,7 @@ class LakeSpec extends AnyFunSuite {
     spark.range(50, 100)
       .select(col("id"), lit(null).cast("double").as("v")).coalesce(1)
       .write.format(Lake).option("path", dir).mode("append").save()
-    val d1 = committed(dir)(
+    val d1 = noScan(dir)(
       spark.sql("DELETE FROM glt.ns.tnull WHERE v IS NULL"))
     assert(spark.sql("SELECT count(*) FROM glt.ns.tnull")
       .head.getLong(0) == 50L)
@@ -1539,7 +1535,7 @@ class LakeSpec extends AnyFunSuite {
       def segNames = new java.io.File(dir).list().toSet
         .filter((n: String) => n.startsWith("_seg-"))
       val w0 = segNames
-      val d = committed(dir)(
+      val d = noScan(dir)(
         spark.sql(s"DELETE FROM $t WHERE id >= 16000 AND id < 17000"))
       assert(metadataDeleted(d).size == 1, d.toString)
       val wrote = segNames.diff(w0).size
@@ -3579,5 +3575,27 @@ class LakeSpec extends AnyFunSuite {
     assert(Seq(da, db).forall(d => d.added.isEmpty && d.removed.isEmpty))
     assert(spark.table(ta).count() == 19899L)
     assert(spark.table(tb).count() == 19950L)
+  }
+
+  test("a collected DML's plans count each of its lake scans once") {
+    val dir = tmp("lake_dmlonce")
+    val t = catalogTable("tdmlonce", dir)
+    det(20000, 8).createOrReplaceTempView("lake_dmlonce_src")
+    spark.sql(s"INSERT OVERWRITE $t SELECT * FROM lake_dmlonce_src")
+    // collecting a command's result reports its plan a second time;
+    // ids 3000–3100 live in file 1 only
+    val (_, files) = planned(spark.sql(
+      s"DELETE FROM $t WHERE id >= 3000 AND id <= 3100").collect())
+    assert(files.size == 1, s"one file planned, counted as $files")
+  }
+
+  test("committed fails for a command that commits no version, or more than one") {
+    val dir = tmp("lake_onecommit")
+    det(1000, 2).write.format(Lake).option("path", dir).mode("overwrite").save()
+    intercept[IllegalArgumentException](committed(dir)(read(dir).count()))
+    intercept[IllegalArgumentException](committed(dir)(Seq(1, 2).foreach(_ =>
+      det(10, 1).write.format(Lake).option("path", dir).mode("append").save())))
+    assert(committed(dir)(det(10, 1).write.format(Lake).option("path", dir)
+      .mode("append").save()).added.size == 1)
   }
 }
